@@ -13,15 +13,10 @@ oracle — regenerates identical pixels for a given window with no I/O.
 Synthetic scenes are EPSG:4326 north-up grids anchored at the scene bbox
 top-left; the reference's bbox CRS transform (geo.py:85-104) is the identity
 in that case, preserving its windowing semantics.
-
-NDVI rasters travel between stages as a tiny self-describing binary codec
-(``pack_raster``/``unpack_raster``) playing the float32-GeoTIFF role
-(ndvi.py:239-255) without rasterio.
 """
 
 from __future__ import annotations
 
-import struct
 import zlib
 
 import numpy as np
@@ -460,6 +455,24 @@ def ndvi_landsat(
     return ndvi, valid_mask, qa_masked_count
 
 
+def window_ndvi(
+    scene_id: str,
+    scene_bbox: list[float],
+    resolution_m: float,
+    read_bbox: list[float],
+    collection: str,
+) -> tuple[np.ndarray, np.ndarray, int] | None:
+    """read_window_bands → ndvi_s2/ndvi_landsat on the full window:
+    ``(ndvi, valid_mask, masked_count)``, or None when the window is empty.
+    The arrays are scratch-backed — consume (or copy) before the next call."""
+    bands = read_window_bands(scene_id, scene_bbox, resolution_m, read_bbox, collection)
+    if bands is None:
+        return None
+    if collection == "landsat-c2-l2":
+        return ndvi_landsat(bands["red"], bands["nir"], bands.get("qa"))
+    return ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
+
+
 def ndvi_statistics(ndvi: np.ndarray, valid_mask: np.ndarray) -> dict | None:
     """Rounded stats over valid pixels (reference: ndvi.py:217-236). Returns
     None when no valid pixels (reference returns None → frame has no stat)."""
@@ -470,9 +483,9 @@ def ndvi_statistics_from_values(
     valid_pixels: np.ndarray, total_pixels: int
 ) -> dict | None:
     """The ndvi_statistics reductions over an already-compacted valid-pixel
-    array (row-major order). The blocked window path concatenates per-block
-    compactions into exactly the array ``ndvi[valid_mask]`` yields, so both
-    entry points are bit-identical."""
+    array (row-major order). The native window kernel compacts into exactly
+    the array ``ndvi[valid_mask]`` yields, so both entry points are
+    bit-identical."""
     n = len(valid_pixels)
     if n == 0:
         return None
@@ -528,77 +541,6 @@ def _median_of_pair(med_lo: float, med_hi: float, n: int):
     return np.mean(np.array([med_hi], dtype=np.float32))
 
 
-# ── cache-blocked window evaluation ─────────────────────────────────────────
-#
-# The window-size distribution is extremely skewed (sf0.1: p50 ≈ 12.6k px,
-# p99 ≈ 1.2M px, max ≈ 7.8M px — roughly two thirds of all pixels live in the
-# top 1% of rows). The full-window path streams ~13 scratch buffers of up to
-# 31 MB each through DRAM per elementwise op; processed in ~45k-px row blocks
-# the working set stays cache-resident and the same ops run 5-6x faster on
-# monster windows (measured 2260 ms → 383 ms on a 2784² window) while small
-# windows are unchanged (a single block). Every value is bit-identical: band
-# pixels are window-placement pure, all kernel ops are elementwise (or
-# row/col-index pure, for the SCL resample), and compaction per block
-# concatenates to exactly the row-major ``ndvi[valid_mask]`` array.
-
-_BLOCK_TARGET_PX = 45056
-
-
-def _block_rows(width: int) -> int:
-    return max(1, _BLOCK_TARGET_PX // max(1, width))
-
-
-def iter_masked_ndvi_chunks(
-    seed: int,
-    collection: str,
-    win: tuple[int, int, int, int],
-    aux_win: tuple[int, int, int, int] | None,
-    out_h: int | None = None,
-    out_w: int | None = None,
-):
-    """Yield ``(ndvi, valid_mask, masked_count)`` row blocks of a window's
-    NDVI, cache-blocked; bit-identical to gen_band + ndvi_s2/ndvi_landsat on
-    the full window. ``aux_win`` is the SCL window (S2) or the QA window ==
-    ``win`` (Landsat); ``out_h``/``out_w`` optionally trim to the top-left
-    (the change-pair ``[:min_h, :min_w]`` semantics). Yielded arrays are
-    scratch-backed — consume (or copy) before the next iteration."""
-    r0, _r1, c0, _c1 = win
-    h_full, w_full = win[1] - win[0], win[3] - win[2]
-    h = h_full if out_h is None else out_h
-    w = w_full if out_w is None else out_w
-    use_qa = collection == "landsat-c2-l2"
-    row_idx = col_idx = None
-    if aux_win is not None and not use_qa:
-        scl_shape = (aux_win[1] - aux_win[0], aux_win[3] - aux_win[2])
-        # resample indices are computed against the FULL window shape (the
-        # full path resamples before any trim), then sliced per block/trim
-        row_idx, col_idx = _resample_indices(scl_shape, (h_full, w_full))
-        if w != w_full:
-            col_idx = col_idx[:w]
-    br = _block_rows(w)
-    for b0 in range(0, h, br):
-        b1 = min(h, b0 + br)
-        sub = (r0 + b0, r0 + b1, c0, c0 + w)
-        red = gen_band(seed, BAND_RED, sub)
-        nir = gen_band(seed, BAND_NIR, sub)
-        ndvi, vm = _ndvi_core(red, nir)
-        masked = 0
-        if aux_win is not None:
-            if use_qa:
-                qa = gen_band(seed, BAND_QA, sub)
-                ok = (qa.astype(np.uint16) & np.uint16(LANDSAT_QA_CLOUD_BITS)) == 0
-            else:
-                ri = row_idx[b0:b1]
-                s0, s1 = int(ri[0]), int(ri[-1]) + 1
-                sc = gen_band(
-                    seed, BAND_SCL, (aux_win[0] + s0, aux_win[0] + s1, aux_win[2], aux_win[3])
-                )
-                ok = _SCL_VALID_LUT[sc[ri - s0][:, col_idx]]
-            masked = int(np.sum(vm & ~ok))
-            np.logical_and(vm, ok, out=vm)
-        yield ndvi, vm, masked
-
-
 def s2_aux_win(
     scene_bbox: list[float], resolution_m: float, read_bbox: list[float]
 ) -> tuple[int, int, int, int] | None:
@@ -609,11 +551,11 @@ def s2_aux_win(
 # ── fused native kernels (functions/native.c; bit-identical fast path) ──────
 #
 # When the ctypes library is available the window/pair evaluators below feed
-# the SAME numpy reductions from a single fused C pass (hash → band → NDVI →
-# mask → row-major compaction), instead of ~30 elementwise numpy passes. The
-# C mirror is exact (see native.c header); reductions never move out of
-# numpy, so every downstream value is bit-identical either way. The numpy
-# blocked path remains both the fallback and the differential oracle
+# the reductions from a single fused C pass (hash → band → NDVI → mask →
+# row-major compaction), instead of ~30 elementwise numpy passes. The C
+# mirror is exact (see native.c header), so every downstream value is
+# bit-identical either way. The numpy full-window path (``window_ndvi``,
+# ``change_stats``) is both the fallback and the differential oracle
 # (tests/test_native_kernels.py).
 
 
@@ -693,37 +635,50 @@ def ndvi_window_stats_blocked(
     read_bbox: list[float],
     collection: str,
 ) -> tuple[dict | None, int] | None:
-    """Windowed read + NDVI kernel + stats for one row, cache-blocked.
-    Returns None when the window is empty (the ``bands is None`` case),
-    else ``(stats | None, masked_count)`` — exactly the values the
-    read_window_bands → ndvi_s2/ndvi_landsat → ndvi_statistics chain
-    produces."""
-    seed = scene_seed(scene_id)
+    """Windowed read + NDVI kernel + stats for one row. Returns None when
+    the window is empty (the ``bands is None`` case), else
+    ``(stats | None, masked_count)`` — the fused C pass when available,
+    otherwise the window_ndvi → ndvi_statistics chain (same values)."""
+    from azure_workflow_for_kml_satellite_spark.functions import native as N
+
+    if not N.available():
+        res = window_ndvi(scene_id, scene_bbox, resolution_m, read_bbox, collection)
+        if res is None:
+            return None
+        ndvi, valid_mask, masked = res
+        return ndvi_statistics(ndvi, valid_mask), masked
     win = window_from_bounds(scene_bbox, resolution_m, read_bbox)
     if win is None:
         return None
     aux_win = win if collection == "landsat-c2-l2" else s2_aux_win(
         scene_bbox, resolution_m, read_bbox
     )
+    values, masked = native_window_valid(scene_seed(scene_id), collection, win, aux_win)
     total = (win[1] - win[0]) * (win[3] - win[2])
-    from azure_workflow_for_kml_satellite_spark.functions import native as N
-
-    if N.available():
-        values, masked = native_window_valid(seed, collection, win, aux_win)
-        if len(values) == 0:
-            return None, masked
-        return ndvi_statistics_from_values(values, total), masked
-    parts: list[np.ndarray] = []
-    masked = 0
-    for ndvi, vm, m in iter_masked_ndvi_chunks(seed, collection, win, aux_win):
-        masked += m
-        vals = ndvi[vm]
-        if len(vals):
-            parts.append(vals)
-    if not parts:
-        return None, masked
-    values = parts[0] if len(parts) == 1 else np.concatenate(parts)
     return ndvi_statistics_from_values(values, total), masked
+
+
+def change_result(
+    mean, median, std, vmin, vmax,
+    n_valid: int, n_loss: int, n_gain: int, pixel_area_ha: float,
+) -> dict:
+    """The change-metrics dict from a pair's delta reductions and threshold
+    counts (reference: change_detection.py:98-116); ``n_valid`` >= 1."""
+    n_stable = n_valid - n_loss - n_gain
+    return {
+        "mean_delta": round(float(mean), 4),
+        "median_delta": round(float(median), 4),
+        "std_delta": round(float(std), 4),
+        "min_delta": round(float(vmin), 4),
+        "max_delta": round(float(vmax), 4),
+        "loss_ha": round(n_loss * pixel_area_ha, 2),
+        "gain_ha": round(n_gain * pixel_area_ha, 2),
+        "stable_ha": round(n_stable * pixel_area_ha, 2),
+        "total_ha": round(n_valid * pixel_area_ha, 2),
+        "loss_pct": round(n_loss / n_valid * 100, 1),
+        "gain_pct": round(n_gain / n_valid * 100, 1),
+        "valid_pixels": n_valid,
+    }
 
 
 def change_stats(
@@ -744,27 +699,17 @@ def change_stats(
         return None
     delta = np.where(valid, ndvi_b - ndvi_a, np.nan)
     valid_deltas = delta[valid]
-    loss_mask = valid_deltas < loss_threshold
-    gain_mask = valid_deltas > gain_threshold
-    stable_mask = ~loss_mask & ~gain_mask
-    n_valid = int(np.sum(valid))
-    n_loss = int(np.sum(loss_mask))
-    n_gain = int(np.sum(gain_mask))
-    n_stable = int(np.sum(stable_mask))
-    return {
-        "mean_delta": round(float(np.mean(valid_deltas)), 4),
-        "median_delta": round(float(np.median(valid_deltas)), 4),
-        "std_delta": round(float(np.std(valid_deltas)), 4),
-        "min_delta": round(float(np.min(valid_deltas)), 4),
-        "max_delta": round(float(np.max(valid_deltas)), 4),
-        "loss_ha": round(n_loss * pixel_area_ha, 2),
-        "gain_ha": round(n_gain * pixel_area_ha, 2),
-        "stable_ha": round(n_stable * pixel_area_ha, 2),
-        "total_ha": round(n_valid * pixel_area_ha, 2),
-        "loss_pct": round(n_loss / n_valid * 100, 1) if n_valid else 0.0,
-        "gain_pct": round(n_gain / n_valid * 100, 1) if n_valid else 0.0,
-        "valid_pixels": n_valid,
-    }
+    return change_result(
+        np.mean(valid_deltas),
+        np.median(valid_deltas),
+        np.std(valid_deltas),
+        np.min(valid_deltas),
+        np.max(valid_deltas),
+        int(np.sum(valid)),
+        int(np.sum(valid_deltas < loss_threshold)),
+        int(np.sum(valid_deltas > gain_threshold)),
+        pixel_area_ha,
+    )
 
 
 def reproject_bilinear(
@@ -846,24 +791,3 @@ def reproject_bilinear(
     )
     out[~inside] = np.nan
     return out
-
-
-# ── raster codec (GeoTIFF stand-in) ─────────────────────────────────────────
-
-_MAGIC = b"KSR1"
-
-
-def pack_raster(arr: np.ndarray, pixel_size_m: float) -> bytes:
-    """Serialize a float32 raster + pixel size; zlib-compressed (plays the
-    deflate float32 GeoTIFF role, reference: ndvi.py:239-255)."""
-    a = np.ascontiguousarray(arr, dtype=np.float32)
-    header = struct.pack("<4sIId", _MAGIC, a.shape[0], a.shape[1], float(pixel_size_m))
-    return header + zlib.compress(a.tobytes(), 6)
-
-
-def unpack_raster(data: bytes) -> tuple[np.ndarray, float]:
-    magic, h, w, px = struct.unpack_from("<4sIId", data, 0)
-    if magic != _MAGIC:
-        raise ValueError("bad raster magic")
-    raw = zlib.decompress(data[struct.calcsize("<4sIId"):])
-    return np.frombuffer(raw, dtype=np.float32).reshape(h, w), px

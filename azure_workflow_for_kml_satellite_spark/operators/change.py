@@ -58,42 +58,40 @@ _CHANGE_FIELDS = [
 ]
 
 
-def masked_ndvi_for_recipe(rec: dict, prefix: str = "") -> tuple[np.ndarray, float] | None:
+def _recipe_args(rec: dict, prefix: str) -> tuple:
+    """(scene_id, scene_bbox, resolution_m, read_bbox, collection) for one
+    side of a pair."""
+    p = lambda c: rec[prefix + c]
+    return (
+        p("scene_id"),
+        [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")],
+        p("resolution_m"),
+        [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")],
+        p("ndvi_collection"),
+    )
+
+
+def masked_ndvi_for_recipe(rec: dict, prefix: str = "") -> np.ndarray | None:
     """Regenerate the frame's masked NDVI raster (NaN outside valid) exactly
     as the NDVI stage wrote it (operators/ndvi.py; reference ndvi.py:239-241)."""
-    p = lambda c: rec[prefix + c] if prefix else rec[c]
-    scene_bbox = [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")]
-    read_bbox = [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")]
-    collection = p("ndvi_collection")
-    bands = R.read_window_bands(
-        p("scene_id"), scene_bbox, p("resolution_m"), read_bbox, collection
-    )
-    if bands is None:
+    out = R.window_ndvi(*_recipe_args(rec, prefix))
+    if out is None or not np.any(out[1]):
         return None
-    if collection == "landsat-c2-l2":
-        ndvi, mask, _ = R.ndvi_landsat(bands["red"], bands["nir"], bands.get("qa"))
-    else:
-        ndvi, mask, _ = R.ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
-    if not np.any(mask):
-        return None
-    return np.where(mask, ndvi, np.nan).astype(np.float32), float(p("resolution_m"))
+    ndvi, mask, _ = out
+    return np.where(mask, ndvi, np.nan).astype(np.float32)
 
 
 def _recipe_windows(rec: dict, prefix: str):
-    """(seed, collection, win, aux_win, resolution_m) for one side of a pair,
-    or None when the read window is empty (the ``bands is None`` case)."""
-    p = lambda c: rec[prefix + c]
-    scene_bbox = [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")]
-    read_bbox = [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")]
-    res = p("resolution_m")
+    """(seed, collection, win, aux_win) for one side of a pair, or None
+    when the read window is empty (the ``bands is None`` case)."""
+    scene_id, scene_bbox, res, read_bbox, collection = _recipe_args(rec, prefix)
     win = R.window_from_bounds(scene_bbox, res, read_bbox)
     if win is None:
         return None
-    collection = p("ndvi_collection")
     aux_win = win if collection == "landsat-c2-l2" else R.s2_aux_win(
         scene_bbox, res, read_bbox
     )
-    return R.scene_seed(p("scene_id")), collection, win, aux_win, float(res)
+    return R.scene_seed(scene_id), collection, win, aux_win
 
 
 def _native_pair_deltas(
@@ -128,99 +126,46 @@ def change_stats_for_pair_blocked(
     loss_threshold: float,
     gain_threshold: float,
 ) -> dict | None:
-    """Cache-blocked equivalent of masked_ndvi_for_recipe(a/b) +
-    R.change_stats: both sides' NDVI chunks are regenerated block-by-block
-    over the trimmed common shape and the delta compacted per block, so no
-    full-window raster ever materializes. Bit-identical: band pixels are
-    window-placement pure, the delta/selection ops elementwise, and the
-    concatenated valid-delta array equals the full path's ``delta[valid]``
-    (rows skipped by either path are skipped by both — an all-invalid side
-    and an empty joint-valid set both yield None)."""
+    """Change metrics for one (a_, b_) recipe pair: the fused C pair kernel
+    when available, otherwise masked_ndvi_for_recipe(a/b) + R.change_stats
+    (same values). Pixel area comes from raster a (reference:
+    change_detection.py:59,70-71); an empty window, an all-invalid side and
+    an empty joint-valid set all yield None."""
+    from azure_workflow_for_kml_satellite_spark.functions import native as N
+
+    res_a = float(rec["a_resolution_m"])
+    pixel_area_ha = abs(res_a * res_a) / 10_000
+    if not N.available():
+        ndvi_a = masked_ndvi_for_recipe(rec, "a_")
+        ndvi_b = masked_ndvi_for_recipe(rec, "b_")
+        if ndvi_a is None or ndvi_b is None:
+            return None
+        return R.change_stats(
+            ndvi_a, ndvi_b, pixel_area_ha, loss_threshold, gain_threshold
+        )
     wa = _recipe_windows(rec, "a_")
     wb = _recipe_windows(rec, "b_")
     if wa is None or wb is None:
         return None
-    seed_a, coll_a, win_a, aux_a, res_a = wa
-    seed_b, coll_b, win_b, aux_b, _res_b = wb
+    win_a, win_b = wa[2], wb[2]
     min_h = min(win_a[1] - win_a[0], win_b[1] - win_b[0])
     min_w = min(win_a[3] - win_a[2], win_b[3] - win_b[2])
-    from azure_workflow_for_kml_satellite_spark.functions import native as N
-
-    if N.available():
-        # fused C pass over both sides (functions/native.c): the compacted
-        # delta array equals the blocked path's concatenation bit-for-bit,
-        # and the fused C reductions are bitwise np.mean/np.std/np.sort
-        # order statistics / f32-cast threshold counts (native.c §stats;
-        # pinned in tests/test_native_kernels.py)
-        valid_deltas = _native_pair_deltas(
-            seed_a, coll_a, win_a, aux_a, seed_b, coll_b, win_b, aux_b,
-            min_h, min_w,
-        )
-        n_valid = len(valid_deltas)
-        if n_valid == 0:
-            return None
-        mean_d, std_d, min_d, max_d, med_lo, med_hi, n_loss, n_gain = N.stats_f32(
-            valid_deltas, loss_threshold, gain_threshold
-        )
-        res_a_ha = abs(res_a * res_a) / 10_000
-        n_stable = n_valid - n_loss - n_gain
-        return {
-            "mean_delta": round(mean_d, 4),
-            "median_delta": round(float(R._median_of_pair(med_lo, med_hi, n_valid)), 4),
-            "std_delta": round(std_d, 4),
-            "min_delta": round(min_d, 4),
-            "max_delta": round(max_d, 4),
-            "loss_ha": round(n_loss * res_a_ha, 2),
-            "gain_ha": round(n_gain * res_a_ha, 2),
-            "stable_ha": round(n_stable * res_a_ha, 2),
-            "total_ha": round(n_valid * res_a_ha, 2),
-            "loss_pct": round(n_loss / n_valid * 100, 1) if n_valid else 0.0,
-            "gain_pct": round(n_gain / n_valid * 100, 1) if n_valid else 0.0,
-            "valid_pixels": n_valid,
-        }
-    else:
-        ga = R.iter_masked_ndvi_chunks(seed_a, coll_a, win_a, aux_a, min_h, min_w)
-        gb = R.iter_masked_ndvi_chunks(seed_b, coll_b, win_b, aux_b, min_h, min_w)
-        parts: list[np.ndarray] = []
-        n_valid = n_loss = n_gain = 0
-        for ndvi_a, vm_a, _ in ga:
-            # the chunk arrays are scratch-backed and side b's computation
-            # will reuse the same buffers — materialize side a as its masked
-            # raster (exactly the array the full path builds) before
-            # advancing b
-            a = np.where(vm_a, ndvi_a, np.nan)
-            ndvi_b, vm_b, _ = next(gb)
-            valid = np.isfinite(a)
-            np.logical_and(valid, vm_b, out=valid)
-            if not valid.any():
-                continue
-            np.subtract(ndvi_b, a, out=a)  # delta in the owned side-a buffer
-            vals = a[valid]
-            n = len(vals)
-            n_valid += n
-            n_loss += int(np.sum(vals < loss_threshold))
-            n_gain += int(np.sum(vals > gain_threshold))
-            parts.append(vals)
-        if n_valid == 0:
-            return None
-        valid_deltas = parts[0] if len(parts) == 1 else np.concatenate(parts)
-    pixel_area_ha = abs(res_a * res_a) / 10_000
-    n_stable = n_valid - n_loss - n_gain
-    s = np.sort(valid_deltas)  # order statistics: median/min/max (raster.py)
-    return {
-        "mean_delta": round(float(np.mean(valid_deltas)), 4),
-        "median_delta": round(float(R._median_sorted(s)), 4),
-        "std_delta": round(float(np.std(valid_deltas)), 4),
-        "min_delta": round(float(s[0]), 4),
-        "max_delta": round(float(s[-1]), 4),
-        "loss_ha": round(n_loss * pixel_area_ha, 2),
-        "gain_ha": round(n_gain * pixel_area_ha, 2),
-        "stable_ha": round(n_stable * pixel_area_ha, 2),
-        "total_ha": round(n_valid * pixel_area_ha, 2),
-        "loss_pct": round(n_loss / n_valid * 100, 1) if n_valid else 0.0,
-        "gain_pct": round(n_gain / n_valid * 100, 1) if n_valid else 0.0,
-        "valid_pixels": n_valid,
-    }
+    # fused C pass over both sides (functions/native.c): the compacted delta
+    # array equals the full-window path's ``delta[valid]`` bit-for-bit, and
+    # the fused C reductions are bitwise np.mean/np.std/np.sort order
+    # statistics / f32-cast threshold counts (native.c §stats; pinned in
+    # tests/test_native_kernels.py)
+    valid_deltas = _native_pair_deltas(*wa, *wb, min_h, min_w)
+    n_valid = len(valid_deltas)
+    if n_valid == 0:
+        return None
+    mean_d, std_d, min_d, max_d, med_lo, med_hi, n_loss, n_gain = N.stats_f32(
+        valid_deltas, loss_threshold, gain_threshold
+    )
+    return R.change_result(
+        mean_d, R._median_of_pair(med_lo, med_hi, n_valid), std_d, min_d, max_d,
+        n_valid, n_loss, n_gain, pixel_area_ha,
+    )
 
 
 def season_changes(
@@ -256,13 +201,10 @@ def season_changes(
     # grain + key-hash, same policy the round-5 profile study picked for
     # the NDVI stage (BASELINE.md): hash on the full pair key declusters
     # same-AOI runs (measured 29.9 s vs 35-40 s round-robin at sf0.1).
-    # Multiplier env-tunable (SPARK_GRAFT_CHANGE_GRAIN_X) — re-swept after
-    # the round-8 shuffle-writer fix changed per-task costs.
-    import os
-
-    _grain_x = int(os.environ.get("SPARK_GRAFT_CHANGE_GRAIN_X", "8"))
+    # The 8x multiplier survived both grain re-sweeps after the round-8
+    # per-task cost changes (OPTIMIZATION_r08.md §9, §13).
     paired = paired.repartition(
-        max(64, _grain_x * ndvi_df.sparkSession.sparkContext.defaultParallelism),
+        max(64, 8 * ndvi_df.sparkSession.sparkContext.defaultParallelism),
         F.col("url"), F.col("feature_index"), F.col("season"), F.col("year_to"),
     )
 
@@ -278,8 +220,6 @@ def season_changes(
         for pdf in batches:
             rows = []
             for rec in pdf.to_dict("records"):
-                # pixel area comes from raster a inside the blocked evaluator
-                # (reference: change_detection.py:59,70-71)
                 stats = change_stats_for_pair_blocked(
                     rec, loss_threshold, gain_threshold
                 )
@@ -289,22 +229,8 @@ def season_changes(
                 season = rec["season"]
                 # reference: change_detection.py:235
                 row["label"] = f"{season.capitalize()} {rec['year_from']} → {rec['year_to']}"
-                row.update(
-                    {
-                        "mean_delta": stats["mean_delta"],
-                        "median_delta": stats["median_delta"],
-                        "std_delta": stats["std_delta"],
-                        "min_delta": stats["min_delta"],
-                        "max_delta": stats["max_delta"],
-                        "loss_ha": stats["loss_ha"],
-                        "gain_ha": stats["gain_ha"],
-                        "stable_ha": stats["stable_ha"],
-                        "total_ha": stats["total_ha"],
-                        "loss_pct": stats["loss_pct"],
-                        "gain_pct": stats["gain_pct"],
-                        "valid_change_pixels": stats["valid_pixels"],
-                    }
-                )
+                row.update(stats)
+                row["valid_change_pixels"] = row.pop("valid_pixels")
                 rows.append(row)
             yield pd.DataFrame(rows, columns=out_cols) if rows else pd.DataFrame(
                 columns=out_cols

@@ -35,6 +35,25 @@ _STAT_FIELDS = [
 ]
 
 
+def _stat_row(
+    stats: dict | None, masked: int | None = None, raster: bytes | None = None
+) -> dict:
+    """One row's _STAT_FIELDS columns; all null when ``stats`` is None."""
+    if stats is None:
+        return dict.fromkeys(f.name for f in _STAT_FIELDS)
+    return {
+        "ndvi_mean": stats["mean"],
+        "ndvi_min": stats["min"],
+        "ndvi_max": stats["max"],
+        "ndvi_std": stats["std"],
+        "ndvi_median": stats["median"],
+        "valid_pixels": stats["valid_pixels"],
+        "total_pixels": stats["total_pixels"],
+        "masked_pixels": masked,
+        "ndvi_raster": raster,
+    }
+
+
 def compute_ndvi_for_row(rec: dict, include_raster: bool = False) -> dict:
     """Band read + NDVI kernel for one (aoi, frame, scene) row.
 
@@ -45,86 +64,38 @@ def compute_ndvi_for_row(rec: dict, include_raster: bool = False) -> dict:
     """
     read_bbox = [rec["min_lon"], rec["min_lat"], rec["max_lon"], rec["max_lat"]]
     scene_bbox = [rec["s_min_lon"], rec["s_min_lat"], rec["s_max_lon"], rec["s_max_lat"]]
-    collection = rec["ndvi_collection"]
-    out = {
-        "ndvi_mean": None,
-        "ndvi_min": None,
-        "ndvi_max": None,
-        "ndvi_std": None,
-        "ndvi_median": None,
-        "valid_pixels": None,
-        "total_pixels": None,
-        "masked_pixels": None,
-        "ndvi_raster": None,
-    }
+    args = (rec["scene_id"], scene_bbox, rec["resolution_m"], read_bbox, rec["ndvi_collection"])
     if not include_raster:
-        # stats-only rows run the cache-blocked evaluator (bit-identical
-        # values; ~6x on monster windows — see raster.py blocked section)
-        res = R.ndvi_window_stats_blocked(
-            rec["scene_id"], scene_bbox, rec["resolution_m"], read_bbox, collection
-        )
-        if res is None:
-            return out
-        stats, masked = res
-        if stats is None:
-            return out
-        out.update(
-            {
-                "ndvi_mean": stats["mean"],
-                "ndvi_min": stats["min"],
-                "ndvi_max": stats["max"],
-                "ndvi_std": stats["std"],
-                "ndvi_median": stats["median"],
-                "valid_pixels": stats["valid_pixels"],
-                "total_pixels": stats["total_pixels"],
-                "masked_pixels": masked,
-            }
-        )
-        return out
-    bands = R.read_window_bands(
-        rec["scene_id"], scene_bbox, rec["resolution_m"], read_bbox, collection
-    )
-    if bands is None:
-        return out
-    if collection == "landsat-c2-l2":
-        ndvi, mask, masked = R.ndvi_landsat(bands["red"], bands["nir"], bands.get("qa"))
-    else:
-        ndvi, mask, masked = R.ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
+        # stats-only rows never materialize the window (fused C pass when
+        # available — see raster.py native section)
+        res = R.ndvi_window_stats_blocked(*args)
+        return _stat_row(None) if res is None else _stat_row(*res)
+    res = R.window_ndvi(*args)
+    if res is None:
+        return _stat_row(None)
+    ndvi, mask, masked = res
     stats = R.ndvi_statistics(ndvi, mask)
     if stats is None:
-        return out
-    out.update(
-        {
-            "ndvi_mean": stats["mean"],
-            "ndvi_min": stats["min"],
-            "ndvi_max": stats["max"],
-            "ndvi_std": stats["std"],
-            "ndvi_median": stats["median"],
-            "valid_pixels": stats["valid_pixels"],
-            "total_pixels": stats["total_pixels"],
-            "masked_pixels": masked,
-        }
+        return _stat_row(None)
+    import numpy as np
+
+    from azure_workflow_for_kml_satellite_spark.functions.geotiff import (
+        write_geotiff_f32,
     )
-    if include_raster:
-        import numpy as np
 
-        from azure_workflow_for_kml_satellite_spark.functions.geotiff import (
-            write_geotiff_f32,
-        )
-
-        # masked float32 GeoTIFF, NaN nodata, deflate — the reference's NDVI
-        # export artifact byte-for-byte in role (enrichment/ndvi.py:239-255)
-        ndvi_masked = np.where(mask, ndvi, np.nan)
-        win = R.window_from_bounds(scene_bbox, rec["resolution_m"], read_bbox)
-        px = rec["resolution_m"] * R.DEG_PER_METRE
-        out["ndvi_raster"] = write_geotiff_f32(
-            ndvi_masked,
-            west=scene_bbox[0] + win[2] * px,
-            north=scene_bbox[3] - win[0] * px,
-            px_x=px,
-            px_y=px,
-        )
-    return out
+    # masked float32 GeoTIFF, NaN nodata, deflate — the reference's NDVI
+    # export artifact byte-for-byte in role (enrichment/ndvi.py:239-255)
+    ndvi_masked = np.where(mask, ndvi, np.nan)
+    win = R.window_from_bounds(scene_bbox, rec["resolution_m"], read_bbox)
+    px = rec["resolution_m"] * R.DEG_PER_METRE
+    raster = write_geotiff_f32(
+        ndvi_masked,
+        west=scene_bbox[0] + win[2] * px,
+        north=scene_bbox[3] - win[0] * px,
+        px_x=px,
+        px_y=px,
+    )
+    return _stat_row(stats, masked, raster)
 
 
 _UTM_STAT_FIELDS = [

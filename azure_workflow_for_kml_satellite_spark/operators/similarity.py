@@ -1,9 +1,9 @@
 """Similarity search over ``embeddings`` (task brief: brute-force cosine
 top-k baseline + LSH-bucketed scale path).
 
-- Brute force: cross join queries × corpus with the dot product as a JVM-side
-  ``aggregate``/``zip_with`` expression, top-k via window rank. Exact; the
-  baseline the oracle checks bit-for-bit (DuckDB list_cosine_similarity).
+- Brute force: cross join queries × corpus with the cosine as a vectorized
+  Arrow UDF (``_cosine_vec``), top-k via window rank. Exact; the baseline
+  the oracle checks bit-for-bit (DuckDB list_cosine_similarity).
 - LSH path: random-hyperplane signatures (deterministic hyperplanes from
   xxhash of (dim, plane)), candidates share a signature prefix bucket; top-k
   among candidates. Approximate; checked rows-only.
@@ -14,25 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _cosine_expr(a: str, b: str):
-    dot = F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(F.col(a), F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(F.col(b), F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
 def _cosine_vec(a, b):
-    """Cosine column bit-identical to ``_cosine_expr`` but vectorized: the
-    JVM higher-order fold is interpreted per element (~1 M lambda evals/s);
-    this Arrow UDF reproduces the exact same float64 sequence — elementwise
-    products then a SEQUENTIAL left-to-right sum (``np.cumsum`` is defined
-    as the running fold, unlike ``np.sum``'s pairwise tree) — verified equal
-    on 40k real pairs. Ragged batches fall back to a per-row loop with the
-    identical ops."""
+    """Cosine column as an Arrow UDF. Fold order of each dot product and
+    squared norm: elementwise float64 products, then a sequential
+    left-to-right float64 sum (``np.cumsum`` is defined as that running
+    fold, unlike ``np.sum``'s pairwise tree). Ragged batches fall back to a
+    per-row loop with the identical ops."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf

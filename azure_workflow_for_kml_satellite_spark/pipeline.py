@@ -4,7 +4,6 @@ change detection → metrics)."""
 
 from __future__ import annotations
 
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,18 +78,12 @@ def _ndvi_repartition(spark: SparkSession, best: DataFrame) -> DataFrame:
     (p95/p50 = 1.53 across 48 fat tasks) and 0.60 scaling efficiency at
     local[8]->local[32]; key-hash scatter at grain 256 cut the stage wall
     44% and lifted tuned-vs-tuned efficiency to 0.76 — the remaining gap
-    is per-task slowdown under concurrency (memory bus), not skew.
-
-    The multiplier is env-tunable (``SPARK_GRAFT_NDVI_GRAIN_X``): the round-8
-    bypass-merge shuffle-writer fix dropped per-task overhead an order of
-    magnitude, which moves the straggler-tail-vs-task-overhead trade-off —
-    re-swept post-fix (OPTIMIZATION_r08.md)."""
-    import os
-
+    is per-task slowdown under concurrency (memory bus), not skew. The 8x
+    multiplier survived both grain re-sweeps after the round-8 per-task
+    cost changes (OPTIMIZATION_r08.md §9, §13)."""
     from pyspark.sql import functions as F
 
-    mult = int(os.environ.get("SPARK_GRAFT_NDVI_GRAIN_X", "8"))
-    grain = max(64, mult * default_parallelism(spark))
+    grain = max(64, 8 * default_parallelism(spark))
     return best.repartition(grain, F.col("url"), F.col("frame_id"))
 
 

@@ -1,14 +1,17 @@
 """Differential pin: fused C kernels (functions/native.c) vs the numpy path.
 
-The native kernels must be bit-identical to the numpy blocked evaluators —
-same compacted value arrays (row-major), same masked counts — across
-collections, window shapes, trims and the no-aux edge case. The numpy path
-stays in the tree as both fallback and oracle; these tests force it via a
-temporary ``native.LIB = None`` where needed.
+The native kernels must be bit-identical to the numpy full-window path
+(gen_band → ndvi_s2/ndvi_landsat, then ``ndvi[valid_mask]`` and the
+change_stats delta compaction) — same compacted value arrays (row-major),
+same masked counts — across collections, window shapes, trims and the
+no-aux edge case. The numpy path stays in the tree as both fallback and
+oracle; these tests force it via a temporary ``native.LIB = None`` where
+needed.
 """
 
 from __future__ import annotations
 
+import random
 import sys
 from pathlib import Path
 
@@ -27,15 +30,22 @@ pytestmark = pytest.mark.skipif(
 )
 
 
+def _numpy_ndvi(seed, coll, win, aux):
+    """Full-window numpy kernel on raw pixel windows: (masked NDVI raster,
+    NaN outside valid — an owned copy —, masked_count)."""
+    red = R.gen_band(seed, R.BAND_RED, win)
+    nir = R.gen_band(seed, R.BAND_NIR, win)
+    if coll == "landsat-c2-l2":
+        ndvi, vm, masked = R.ndvi_landsat(red, nir, R.gen_band(seed, R.BAND_QA, aux))
+    else:
+        scl = None if aux is None else R.gen_band(seed, R.BAND_SCL, aux)
+        ndvi, vm, masked = R.ndvi_s2(red, nir, scl)
+    return np.where(vm, ndvi, np.nan).astype(np.float32), masked
+
+
 def _numpy_window(seed, coll, win, aux):
-    parts, masked = [], 0
-    for ndvi, vm, m in R.iter_masked_ndvi_chunks(seed, coll, win, aux):
-        masked += m
-        v = ndvi[vm]
-        if len(v):
-            parts.append(v.copy())
-    vals = np.concatenate(parts) if parts else np.empty(0, np.float32)
-    return vals, masked
+    ndvi, masked = _numpy_ndvi(seed, coll, win, aux)
+    return ndvi[np.isfinite(ndvi)], masked
 
 
 def _random_case(rng, trial):
@@ -85,21 +95,44 @@ def test_change_pair_bit_identical():
         (sa, ca, wa, aa), (sb, cb, wb, ab) = sides
         min_h = min(wa[1] - wa[0], wb[1] - wb[0])
         min_w = min(wa[3] - wa[2], wb[3] - wb[2])
-        # numpy blocked reference (the change operator's fallback loop)
-        ga = R.iter_masked_ndvi_chunks(sa, ca, wa, aa, min_h, min_w)
-        gb = R.iter_masked_ndvi_chunks(sb, cb, wb, ab, min_h, min_w)
-        parts = []
-        for ndvi_a, vm_a, _ in ga:
-            a = np.where(vm_a, ndvi_a, np.nan)
-            ndvi_b, vm_b, _ = next(gb)
-            valid = np.isfinite(a) & vm_b
-            if not valid.any():
-                continue
-            d = ndvi_b - a
-            parts.append(d[valid].astype(np.float32))
-        vals_np = np.concatenate(parts) if parts else np.empty(0, np.float32)
+        # numpy full-window reference (R.change_stats' delta compaction)
+        a = _numpy_ndvi(sa, ca, wa, aa)[0][:min_h, :min_w]
+        b = _numpy_ndvi(sb, cb, wb, ab)[0][:min_h, :min_w]
+        valid = np.isfinite(a) & np.isfinite(b)
+        vals_np = np.where(valid, b - a, np.nan)[valid]
         vals_c = C._native_pair_deltas(sa, ca, wa, aa, sb, cb, wb, ab, min_h, min_w)
         assert np.array_equal(vals_np, vals_c), (trial, sides)
+
+
+def _mk_recipe(rng: random.Random, prefix: str = "", big: bool = False) -> dict:
+    """One frame recipe (the NDVI/change operators' input columns): read
+    boxes may straddle the scene edge (partial overlap) or miss it (empty
+    window); ``big`` windows run to millions of pixels."""
+    sx = rng.uniform(-100, 100)
+    sy = rng.uniform(-40, 40)
+    sw = rng.uniform(0.05, 0.5)
+    sh = rng.uniform(0.05, 0.5)
+    coll = rng.choice(["sentinel-2-l2a", "landsat-c2-l2"])
+    res = 10.0 if coll == "sentinel-2-l2a" else 30.0
+    if big:
+        sw, sh = 0.35, 0.35
+    rx = sx + rng.uniform(-0.02, sw * 0.8)
+    ry = sy + rng.uniform(-0.02, sh * 0.8)
+    rw = rng.uniform(0.001, sw if big else 0.08)
+    rh = rng.uniform(0.001, sh if big else 0.08)
+    return {
+        prefix + "scene_id": f"scn-{rng.randint(0, 10**6)}",
+        prefix + "s_min_lon": sx,
+        prefix + "s_min_lat": sy,
+        prefix + "s_max_lon": sx + sw,
+        prefix + "s_max_lat": sy + sh,
+        prefix + "resolution_m": res,
+        prefix + "ndvi_collection": coll,
+        prefix + "min_lon": rx,
+        prefix + "min_lat": ry,
+        prefix + "max_lon": rx + rw,
+        prefix + "max_lat": ry + rh,
+    }
 
 
 def test_stats_entrypoint_matches_forced_numpy():
@@ -116,6 +149,9 @@ def test_stats_entrypoint_matches_forced_numpy():
         scene = [lon0 - 0.05, lat0 - 0.05, lon0 + 0.2, lat0 + 0.2]
         read = [lon0, lat0, lon0 + dl, lat0 + dl]
         cases.append((f"scene-{trial}", scene, res, read, coll))
+    recipes = random.Random(11)
+    for i in range(150):
+        cases.append(C._recipe_args(_mk_recipe(recipes, big=(i % 17 == 0)), ""))
     native_out = [R.ndvi_window_stats_blocked(*c) for c in cases]
     lib = N.LIB
     try:
@@ -144,6 +180,14 @@ def test_change_stats_entrypoint_matches_forced_numpy():
                 p + "min_lon": lon0, p + "min_lat": lat0,
                 p + "max_lon": lon0 + dl, p + "max_lat": lat0 + dl,
             })
+        rows.append(rec)
+    recipes = random.Random(23)
+    for i in range(100):
+        big = i % 23 == 0
+        rec = {**_mk_recipe(recipes, "a_", big), **_mk_recipe(recipes, "b_", big)}
+        if i % 3 == 0:  # realistic case: both sides read the same AOI bbox
+            for c in ("min_lon", "min_lat", "max_lon", "max_lat"):
+                rec["b_" + c] = rec["a_" + c]
         rows.append(rec)
     native_out = [C.change_stats_for_pair_blocked(r, -0.1, 0.1) for r in rows]
     lib = N.LIB

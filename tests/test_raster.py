@@ -100,14 +100,6 @@ def test_change_thresholds():
     assert st["loss_ha"] == 1.0 and st["gain_ha"] == 1.0 and st["stable_ha"] == 1.0
 
 
-def test_codec_roundtrip_nan():
-    arr = np.array([[0.5, np.nan], [1.0, -1.0]], np.float32)
-    blob = R.pack_raster(arr, 10.0)
-    out, px = R.unpack_raster(blob)
-    assert px == 10.0
-    assert np.array_equal(out, arr, equal_nan=True)
-
-
 def test_synthetic_bands_deterministic_and_window_pure():
     """The same geographic pixels must have identical values regardless of
     the window they are read through (parallel-safety invariant)."""
