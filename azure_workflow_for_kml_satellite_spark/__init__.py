@@ -41,9 +41,11 @@ def get_spark(
     to leave the master to the launcher — that is what
     ``scripts/submit_job.py`` does under ``spark-submit --py-files``, so
     the identical tuning applies on a real multi-executor cluster.
+    ``cores`` defaults to ``$SPARK_GRAFT_CPUS``, else this box's core count:
+    the raster stages' task count scales with it.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 32)
     builder = SparkSession.builder.appName(app_name)

@@ -57,6 +57,13 @@ EUDR_CUTOFF_DATE = "2020-12-31"
 DEFAULT_CELL_RES = 10  # ~0.35 deg ≈ 39 km at equator — scene tiles cover ~4-9 cells
 CLUSTER_CELL_RES = 10  # coarse cells for the 25 km epsilon-clustering join
 
+# --- Raster-stage grain (ours) ---
+# Tasks per core of the two per-window raster stages: the NDVI repartition
+# (pipeline._ndvi_repartition) and the change-pair scatter
+# (operators/change.season_changes). The measurements that fixed it are in
+# _ndvi_repartition's docstring.
+RASTER_TASKS_PER_CORE = 4
+
 # --- Frame plan determinism ---
 # The reference derives SEASONAL_YEARS from date.today() (frames.py:31); we
 # pin an as-of year so synthetic data, oracle output and bench are stable.

@@ -6,7 +6,8 @@ workers race safely) and exposes typed wrappers. Anything missing or
 failing — no gcc, compile error, load error — leaves ``LIB = None`` and
 the callers keep the pure-numpy path, which produces bit-identical
 results (the C kernels are an exact mirror; see native.c header and
-tests/test_native_kernels.py).
+tests/test_native_kernels.py). The reason is kept in ``BUILD_ERROR`` and
+printed to stderr once per process.
 
 Flags: ``-O3 -ffp-contract=off`` and no fast-math — f32 subtract/add/
 divide stay IEEE correctly-rounded scalar semantics, so C and numpy
@@ -19,6 +20,7 @@ import ctypes
 import hashlib
 import os
 import subprocess
+import sys
 import tempfile
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
@@ -34,6 +36,9 @@ _CFLAGS = [
 _CFLAGS_FALLBACK = ["-O3", "-fPIC", "-shared", "-ffp-contract=off", "-fno-math-errno"]
 
 LIB = None
+# Why LIB is None after a failed compile or load (gcc's stderr tail or the
+# exception text); None when the kernel loaded or SPARK_GRAFT_NATIVE=0.
+BUILD_ERROR: str | None = None
 _I64P = ctypes.POINTER(ctypes.c_int64)
 _F32P = ctypes.POINTER(ctypes.c_float)
 
@@ -43,8 +48,10 @@ KIND_BARE = 2
 
 
 def _build() -> "ctypes.CDLL | None":
+    global BUILD_ERROR
     if os.environ.get("SPARK_GRAFT_NATIVE", "1") == "0":
         return None
+    errors = []
     try:
         with open(_SRC, "rb") as f:
             src = f.read()
@@ -69,8 +76,11 @@ def _build() -> "ctypes.CDLL | None":
                 os.rename(tmp, cand)  # atomic; losers just overwrite
                 so_path = cand
                 break
-            except Exception:
-                continue
+            except subprocess.CalledProcessError as e:
+                tail = e.stderr.decode(errors="replace").strip()[-500:]
+                errors.append(f"gcc {' '.join(flags)}: {tail or e}")
+            except (OSError, subprocess.SubprocessError) as e:
+                errors.append(f"gcc {' '.join(flags)}: {e!r}")
             finally:
                 if os.path.exists(tmp):
                     try:
@@ -78,6 +88,7 @@ def _build() -> "ctypes.CDLL | None":
                     except OSError:
                         pass
         if so_path is None:
+            BUILD_ERROR = "; ".join(errors)
             return None
         lib = ctypes.CDLL(so_path)
         lib.kmlsat_window_valid.restype = ctypes.c_int64
@@ -100,11 +111,15 @@ def _build() -> "ctypes.CDLL | None":
             _F32P, _I64P,
         ]
         return lib
-    except Exception:
+    except Exception as e:
+        BUILD_ERROR = "; ".join([*errors, repr(e)])
         return None
 
 
 LIB = _build()
+if BUILD_ERROR:
+    print(f"kmlsat native kernel unavailable, using numpy: {BUILD_ERROR}",
+          file=sys.stderr)
 
 
 def available() -> bool:

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 from azure_workflow_for_kml_satellite_spark.constants import (
     CHANGE_GAIN_THRESHOLD,
     CHANGE_LOSS_THRESHOLD,
+    RASTER_TASKS_PER_CORE,
 )
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
 
@@ -175,7 +176,7 @@ def season_changes(
 ) -> DataFrame:
     """ndvi stats rows → one row per (aoi, season, year_from, year_to) with
     the reference's change metrics."""
-    # coalesce (no shuffle) off the NDVI cache's fine raster grain before the
+    # coalesce (no shuffle) off the NDVI cache's raster grain before the
     # cheap window/pairing stages — same per-task-overhead fix as
     # ndvi_trend_per_aoi; the window's partitionBy/orderBy fully determines
     # the pairing, so partition merging cannot change the result
@@ -197,14 +198,14 @@ def season_changes(
     ).filter(F.col("year_from").isNotNull())
     # The window shuffle clumps one AOI's (heavy) pairs into one partition;
     # pair recompute cost varies 4 orders of magnitude (monster 200px² vs
-    # mega 2800px² windows), so scatter rows before the pixel work. Fine
-    # grain + key-hash, same policy the round-5 profile study picked for
-    # the NDVI stage (BASELINE.md): hash on the full pair key declusters
-    # same-AOI runs (measured 29.9 s vs 35-40 s round-robin at sf0.1).
-    # The 8x multiplier survived both grain re-sweeps after the round-8
-    # per-task cost changes (OPTIMIZATION_r08.md §9, §13).
+    # mega 2800px² windows), so scatter rows before the pixel work. Same
+    # grain and key-hash policy as the NDVI stage (pipeline._ndvi_repartition):
+    # hash on the full pair key declusters same-AOI runs (measured 29.9 s vs
+    # 35-40 s round-robin at sf0.1). At 4x instead of the old 64-task floor,
+    # the traced change layer of a cold ndvi_season job on 4 cores went
+    # from 69 to 21 tasks and 3.62 s to 2.04 s.
     paired = paired.repartition(
-        max(64, 8 * ndvi_df.sparkSession.sparkContext.defaultParallelism),
+        RASTER_TASKS_PER_CORE * par,
         F.col("url"), F.col("feature_index"), F.col("season"), F.col("year_to"),
     )
 

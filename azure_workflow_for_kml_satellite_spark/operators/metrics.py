@@ -98,10 +98,11 @@ def ndvi_trend_per_aoi(ndvi_df: DataFrame) -> DataFrame:
             rows.append({f.name: t[f.name] for f in fields})
         return pd.DataFrame(rows, columns=[f.name for f in fields])
 
-    # The upstream NDVI cache keeps the raster stage's fine grain (8x
-    # parallelism); this narrow 4-column aggregation pays ~15 ms/task of
-    # per-task overhead on those 256+ partitions — coalesce (no shuffle) to
-    # the session parallelism first (measured 5.0 s → 0.35 s at sf0.1).
+    # The upstream NDVI cache keeps the raster stage's grain
+    # (RASTER_TASKS_PER_CORE x parallelism, 16 partitions on 4 cores); this
+    # narrow 4-column aggregation pays ~15 ms/task of per-task overhead on
+    # each — coalesce (no shuffle) to the session parallelism first
+    # (measured 5.0 s → 0.35 s at sf0.1 when the grain was 256).
     # sort_array pins the series order, so partition merging cannot change
     # the result.
     par = ndvi_df.sparkSession.sparkContext.defaultParallelism

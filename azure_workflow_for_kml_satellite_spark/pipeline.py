@@ -9,6 +9,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from azure_workflow_for_kml_satellite_spark.constants import (
+    RASTER_TASKS_PER_CORE,
     RUN_DATE_END,
     RUN_DATE_START,
 )
@@ -72,18 +73,24 @@ def default_parallelism(spark: SparkSession) -> int:
 
 def _ndvi_repartition(spark: SparkSession, best: DataFrame) -> DataFrame:
     """Partitioning for the heterogeneous per-(geometry, frame) raster
-    stage: fine grain (8x parallelism, min 64) hashed on the natural key.
-    Measured on the 10-year-window job (BASELINE.md round-5 study,
-    scripts/profile_10yr.py): the coarse default left a straggler tail
-    (p95/p50 = 1.53 across 48 fat tasks) and 0.60 scaling efficiency at
-    local[8]->local[32]; key-hash scatter at grain 256 cut the stage wall
-    44% and lifted tuned-vs-tuned efficiency to 0.76 — the remaining gap
-    is per-task slowdown under concurrency (memory bus), not skew. The 8x
-    multiplier survived both grain re-sweeps after the round-8 per-task
-    cost changes (OPTIMIZATION_r08.md §9, §13)."""
+    stage: RASTER_TASKS_PER_CORE x parallelism tasks, hashed on the natural
+    key. The key-hash scatter is the round-5 fix for the coarse default's
+    straggler tail (BASELINE.md: p95/p50 = 1.53 across 48 fat tasks).
+
+    The grain has no floor. Every raster task pays a fixed cost — a
+    pass-through mapInPandas measured 54-73 ms of core time per task, and
+    writing the cached NDVI rows as 64 parquet files takes 1.2-1.3 s vs
+    0.23-0.27 s as 4 — so the old rule (8x with a floor of 64 tasks, sized
+    for a 32-core box) turned each raster stage on 4 cores into 64 small
+    tasks. Measured on a 4-core box, cold ndvi_season job (perfbench/),
+    median of 10 interleaved seed pairs: old rule 18.92 s, 4x (16 tasks)
+    13.72 s. A 3-seed sweep read 15.23 s at 8x without the floor, 14.61 s
+    at 4x, 14.18 s at 2x and 13.81 s at 1x; 4x keeps more room than 2x/1x
+    to balance skewed monster windows at about the same cost, and at sf0.1
+    it was no slower than grain 64 on either raster stage."""
     from pyspark.sql import functions as F
 
-    grain = max(64, 8 * default_parallelism(spark))
+    grain = RASTER_TASKS_PER_CORE * default_parallelism(spark)
     return best.repartition(grain, F.col("url"), F.col("frame_id"))
 
 

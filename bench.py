@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the box's
+core count) and prints ONE JSON line:
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": ...,
      "geometries": N, "geometries_per_sec": ...}
@@ -252,7 +253,7 @@ BAND_REF_8P = 44.5
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     # The raster stages' sweet spot is box-state dependent: the memory bus
     # saturates between 8 and 16 workers in the box's slow band (local[16]
     # beat local[32] back-to-back there), while in its fast band local[32]

@@ -41,7 +41,7 @@ def dump_recipes() -> None:
     )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     spark = get_spark("ndvi-profile-dump", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
     ed = engine_dir(sf_dir)

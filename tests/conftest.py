@@ -13,16 +13,11 @@ SF_SMALL = str(REPO / "data" / "sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    # the shipped session config (worker daemon, shuffle writer, warm-up,
+    # native build at setup), so the tests run what the engine runs
+    from azure_workflow_for_kml_satellite_spark import get_spark
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("kmlsat-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    s = get_spark("kmlsat-tests", cores=4, shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -140,6 +140,45 @@ def test_season_changes_match_expected(spark, ndvi):
         assert got[(url, fi, season, yf, yt)] == (md, lp, gp, th)
 
 
+def test_raster_outputs_do_not_depend_on_grain(spark, aois, monkeypatch):
+    """NDVI rows and change rows are the same multiset whether the raster
+    stages run coarse (NDVI in one task, the change scatter at one task per
+    core) or at the engine's grain, so neither depends on task placement."""
+    from collections import Counter
+
+    from azure_workflow_for_kml_satellite_spark.constants import (
+        RASTER_TASKS_PER_CORE,
+        RUN_DATE_END,
+        RUN_DATE_START,
+    )
+    from azure_workflow_for_kml_satellite_spark.operators import change
+    from azure_workflow_for_kml_satellite_spark.operators.ndvi import ndvi_stats
+    from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
+        spatial_join_best_scene,
+    )
+
+    scenes = spark.read.parquet(f"{SF_SMALL}/scenes.parquet")
+    frames = spark.read.parquet(f"{SF_SMALL}/frames.parquet")
+    best = spatial_join_best_scene(
+        aois, scenes, frames, RUN_DATE_START, RUN_DATE_END
+    ).localCheckpoint()
+    grain = RASTER_TASKS_PER_CORE * spark.sparkContext.defaultParallelism
+    runs = []
+    for k, per_core in ((1, 1), (grain, RASTER_TASKS_PER_CORE)):
+        nd = ndvi_stats(best.repartition(k, "url", "frame_id"))
+        assert nd.rdd.getNumPartitions() == k
+        monkeypatch.setattr(change, "RASTER_TASKS_PER_CORE", per_core)
+        # repr keeps NaN and exact float bits comparable as multiset keys
+        runs.append((
+            Counter(map(repr, nd.collect())),
+            Counter(map(repr, change.season_changes(nd).collect())),
+        ))
+    (nd_coarse, ch_coarse), (nd_grain, ch_grain) = runs
+    assert sum(nd_coarse.values()) > 0 and sum(ch_coarse.values()) > 0
+    assert nd_coarse == nd_grain
+    assert ch_coarse == ch_grain
+
+
 def test_trend_matches_expected(spark, ndvi):
     from azure_workflow_for_kml_satellite_spark.operators.metrics import ndvi_trend_per_aoi
 
