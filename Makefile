@@ -6,7 +6,7 @@
 #   make check   — pytest suite + full exact correctness gate at sf0.01
 #   make gate    — correctness gate only (~4 min)
 #   make test    — pytest only
-#   make bench   — headline suite at $(SF_DIR) with the band-proof protocol
+#   make bench   — headline suite at $(SF_DIR), best of 2 runs
 #   make plans   — regenerate PLANS.md physical-plan audit
 #
 # Run a round's `make check` result into BASELINE.md's round log.

@@ -23,6 +23,7 @@ Design notes (Spark-first, not a port):
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -71,10 +72,7 @@ def get_spark(
         # 64 reduce partitions, 4.06 s → 0.59 s wall). The sort writer
         # (one output file per map task) is the safe choice at any scale —
         # it is already what runs for reduce-counts > 200.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_THRESHOLD", "2"),
-        )
+        .config("spark.shuffle.sort.bypassMergeThreshold", "2")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # glibc: serve large numpy allocations from the heap instead of fresh
         # mmaps — this sandbox page-faults new mappings at ~170 MB/s, which
@@ -86,9 +84,9 @@ def get_spark(
         # next row — measured 2.8 ms vs 0.1 ms per alloc+touch cycle of a
         # 40 MB temp with the trim threshold raised.
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")
-        # UI off by default; profiling studies (scripts/profile_10yr.py)
-        # flip it on to read per-task metrics from the REST API
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # UI off: per-stage task stats come from the event log instead
+        # (perfbench/run.py --trace 1)
+        .config("spark.ui.enabled", "false")
     )
     # Python worker daemon with the CPython-3.12 zipimport-cache fix: on
     # CPython 3.11 every task's setup_spark_files → importlib
@@ -124,6 +122,9 @@ def get_spark(
 
 
 _WARMED: set[str] = set()
+# Why the session warm-up failed (the exception text); None while every
+# warm-up in this process has succeeded.
+WARM_ERROR: str | None = None
 
 
 def _warm_python_workers(spark: SparkSession, cores: int) -> None:
@@ -133,9 +134,9 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
     the spawn+import cost is several seconds at local[32] and otherwise
     lands entirely on whichever operator happens to run first. Session
     setup work only: no input data is touched and nothing is cached.
-    Disable with SPARK_GRAFT_WARM=0."""
-    if os.environ.get("SPARK_GRAFT_WARM", "1") == "0":
-        return
+    A failure does not fail the session: its reason is kept in
+    ``WARM_ERROR`` and printed to stderr once per application."""
+    global WARM_ERROR
     app = spark.sparkContext.applicationId
     if app in _WARMED:
         return
@@ -173,5 +174,6 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
             .mode("overwrite")
             .save()
         )
-    except Exception:
-        pass  # warm-up is an optimization, never a failure
+    except Exception as e:
+        WARM_ERROR = repr(e)
+        print(f"kmlsat session warm-up failed: {WARM_ERROR}", file=sys.stderr)
