@@ -1,7 +1,7 @@
 # One-command checks (VERDICT r5 task 9: rotated-out queries must not be
 # able to regress silently between driver windows — `make check` runs the
-# FULL-registry (63-query) exact oracle gate, not just the driver's
-# 50-entry window).
+# FULL-registry (60-query) exact oracle gate, not just the first
+# 50 entries).
 #
 #   make check   — pytest suite + full exact correctness gate at sf0.01
 #   make gate    — correctness gate only (~4 min)

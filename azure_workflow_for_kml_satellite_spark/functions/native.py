@@ -9,6 +9,11 @@ results (the C kernels are an exact mirror; see native.c header and
 tests/test_native_kernels.py). The reason is kept in ``BUILD_ERROR`` and
 printed to stderr once per process.
 
+The C statistics reproduce numpy 1.26's summation order. After loading,
+one ``stats_f32`` call per probe length is compared bitwise with numpy;
+on any difference (a numpy whose reduction order changed) ``LIB`` is set
+to None as well, so the whole numpy path runs and parity holds.
+
 Flags: ``-O3 -ffp-contract=off`` and no fast-math — f32 subtract/add/
 divide stay IEEE correctly-rounded scalar semantics, so C and numpy
 agree bitwise. Disable with ``SPARK_GRAFT_NATIVE=0``.
@@ -22,6 +27,8 @@ import os
 import subprocess
 import sys
 import tempfile
+
+import numpy as np
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 _SRC = os.path.join(_HERE, "native.c")
@@ -37,7 +44,8 @@ _CFLAGS_FALLBACK = ["-O3", "-fPIC", "-shared", "-ffp-contract=off", "-fno-math-e
 
 LIB = None
 # Why LIB is None after a failed compile or load (gcc's stderr tail or the
-# exception text); None when the kernel loaded or SPARK_GRAFT_NATIVE=0.
+# exception text) or a failed stats self-check; None when the kernel loaded
+# or SPARK_GRAFT_NATIVE=0.
 BUILD_ERROR: str | None = None
 _I64P = ctypes.POINTER(ctypes.c_int64)
 _F32P = ctypes.POINTER(ctypes.c_float)
@@ -116,12 +124,6 @@ def _build() -> "ctypes.CDLL | None":
         return None
 
 
-LIB = _build()
-if BUILD_ERROR:
-    print(f"kmlsat native kernel unavailable, using numpy: {BUILD_ERROR}",
-          file=sys.stderr)
-
-
 def available() -> bool:
     return LIB is not None
 
@@ -146,3 +148,38 @@ def stats_f32(arr, loss_t: float = 0.0, gain_t: float = 0.0):
         out6[0], out6[1], out6[2], out6[3], out6[4], out6[5],
         int(out2[0]), int(out2[1]),
     )
+
+
+_STATS_NAMES = ("mean", "std", "min", "max", "median_lo", "median_hi",
+                "n_loss", "n_gain")
+
+
+def _stats_mismatch() -> str | None:
+    """Names of the ``stats_f32`` outputs that differ bitwise from numpy on
+    a fixed seeded probe (an odd length above the 8192-element reduce
+    chunk and an even one), or None when all agree."""
+    rng = np.random.default_rng(20011)
+    bad = []
+    for n in (20011, 20012):
+        x = rng.standard_normal(n, dtype=np.float32)
+        s = np.sort(x)
+        want = (
+            np.mean(x), np.std(x), s[0], s[-1], s[(n - 1) // 2], s[n // 2],
+            int(np.sum(x < -0.1)), int(np.sum(x > 0.1)),
+        )
+        got = stats_f32(x, -0.1, 0.1)
+        for name, g, w in zip(_STATS_NAMES, got, want):
+            if np.float32(g).tobytes() != np.float32(w).tobytes():
+                bad.append(f"{name} (n={n})")
+    return ", ".join(bad) or None
+
+
+LIB = _build()
+if LIB is not None:
+    _mismatch = _stats_mismatch()
+    if _mismatch:
+        LIB = None
+        BUILD_ERROR = f"native stats disagree with numpy {np.__version__}: {_mismatch}"
+if BUILD_ERROR:
+    print(f"kmlsat native kernel unavailable, using numpy: {BUILD_ERROR}",
+          file=sys.stderr)

@@ -1197,156 +1197,3 @@ def warp_utm_to_geographic(src, src_bbox_m, zone, north, dst_bbox_deg, dst_shape
     )
     out[~inside] = np.nan
     return out
-
-
-# ── image-thumbnail oracle (independent transcription) ──────────────────────
-# Straight-line scalar re-derivation of the thumbnail contract
-# (operators/multimodal.image_thumbnails): pixel-centre bilinear downscale
-# with edge-clamped 2x2 support, RGBA normalization, filter-0 zlib-6 PNG.
-# Shares only the contract (and zlib/hashlib from the stdlib) with the
-# engine — no code from functions/png.py or operators/multimodal.py.
-
-
-def thumb_dims(h: int, w: int, max_side: int) -> tuple[int, int]:
-    scale = max_side / max(h, w)
-    if scale > 1.0:
-        scale = 1.0
-    th = int(round(h * scale))
-    tw = int(round(w * scale))
-    return (max(1, th), max(1, tw))
-
-
-def resize_bilinear_scalar(img: np.ndarray, th: int, tw: int) -> np.ndarray:
-    """Per-output-pixel scalar bilinear resample (same convention as the
-    engine's vectorized kernel, derived independently from the contract)."""
-    h, w, c = img.shape
-    out = np.empty((th, tw, c), dtype=np.uint8)
-    for oy in range(th):
-        fy = (oy + 0.5) * (h / th) - 0.5
-        if fy < 0.0:
-            fy = 0.0
-        if fy > h - 1:
-            fy = float(h - 1)
-        y0 = math.floor(fy)
-        y1 = y0 + 1 if y0 + 1 < h else h - 1
-        dy = fy - y0
-        for ox in range(tw):
-            fx = (ox + 0.5) * (w / tw) - 0.5
-            if fx < 0.0:
-                fx = 0.0
-            if fx > w - 1:
-                fx = float(w - 1)
-            x0 = math.floor(fx)
-            x1 = x0 + 1 if x0 + 1 < w else w - 1
-            dx = fx - x0
-            for ch in range(c):
-                v = (
-                    float(img[y0, x0, ch]) * (1 - dy) * (1 - dx)
-                    + float(img[y0, x1, ch]) * (1 - dy) * dx
-                    + float(img[y1, x0, ch]) * dy * (1 - dx)
-                    + float(img[y1, x1, ch]) * dy * dx
-                )
-                v = round(v)  # round-half-even, matching np.rint
-                if v < 0:
-                    v = 0
-                elif v > 255:
-                    v = 255
-                out[oy, ox, ch] = v
-    return out
-
-
-def normalize_rgba(img: np.ndarray) -> np.ndarray:
-    """The thumbnail RGBA normalization: gray/gray+alpha replicate channel
-    0 to RGB; alpha comes from channel 3 (RGBA), channel 1 (gray+alpha),
-    else opaque."""
-    h, w, c = img.shape
-    out = np.empty((h, w, 4), dtype=np.uint8)
-    if c in (1, 2):
-        out[..., 0] = out[..., 1] = out[..., 2] = img[..., 0]
-    else:
-        out[..., :3] = img[..., :3]
-    if c == 4:
-        out[..., 3] = img[..., 3]
-    elif c == 2:
-        out[..., 3] = img[..., 1]
-    else:
-        out[..., 3] = 255
-    return out
-
-
-def png_rgba_bytes(img: np.ndarray) -> bytes:
-    """Independent assembly of the thumbnail PNG container: IHDR(8-bit,
-    colour type 6), one zlib-level-6 IDAT of filter-0 scanlines, IEND."""
-    import zlib as _zlib
-
-    h, w = img.shape[:2]
-    scanlines = bytearray()
-    for r in range(h):
-        scanlines.append(0)
-        scanlines += img[r].tobytes()
-
-    def _chunk(tag: bytes, body: bytes) -> bytes:
-        crc = _zlib.crc32(tag)
-        crc = _zlib.crc32(body, crc) & 0xFFFFFFFF
-        return (
-            len(body).to_bytes(4, "big") + tag + body + crc.to_bytes(4, "big")
-        )
-
-    ihdr = (
-        w.to_bytes(4, "big")
-        + h.to_bytes(4, "big")
-        + bytes([8, 6, 0, 0, 0])
-    )
-    return (
-        bytes([0x89]) + b"PNG\r\n\x1a\n"
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", _zlib.compress(bytes(scanlines), 6))
-        + _chunk(b"IEND", b"")
-    )
-
-
-# ── video-frame oracle kernels (q_video_frames) ────────────────────────────
-
-
-def yuv420_to_rgb_scalar(y: np.ndarray, u: np.ndarray, v: np.ndarray) -> np.ndarray:
-    """Independent scalar transcription of the engine's fixed-point BT.601
-    conversion (functions/vp8.yuv_to_rgb: nearest-neighbour chroma
-    upsample; r = y + 91881*v>>16, g = y - (22554*u + 46802*v)>>16,
-    b = y + 116130*u>>16, clamped) — per-pixel Python loops, no numpy
-    vector ops, so the engine's vectorized path is genuinely under test."""
-    h, w = y.shape
-    out = np.empty((h, w, 3), dtype=np.uint8)
-    for yy in range(h):
-        for xx in range(w):
-            Y = int(y[yy, xx])
-            U = int(u[yy // 2, xx // 2]) - 128
-            V = int(v[yy // 2, xx // 2]) - 128
-            r = Y + ((91881 * V) >> 16)
-            g = Y - ((22554 * U + 46802 * V) >> 16)
-            b = Y + ((116130 * U) >> 16)
-            out[yy, xx, 0] = 0 if r < 0 else (255 if r > 255 else r)
-            out[yy, xx, 1] = 0 if g < 0 else (255 if g > 255 else g)
-            out[yy, xx, 2] = 0 if b < 0 else (255 if b > 255 else b)
-    return out
-
-
-def phash64_scalar(img: np.ndarray) -> int:
-    """Independent scalar transcription of the engine's 8x8 average-hash
-    (operators/multimodal._phash): integer channel-sum luma, 8x8
-    nearest-index downsample (i*dim//8), exact ``64*s > total`` threshold,
-    63 bits little-endian. All-integer so both implementations agree on
-    ties by construction."""
-    h, w = img.shape[:2]
-    samples = []
-    for by in range(8):
-        sy = min(by * h // 8, h - 1)
-        for bx in range(8):
-            sx = min(bx * w // 8, w - 1)
-            px = img[sy, sx]
-            samples.append(int(px[0]) + int(px[1]) + int(px[2]))
-    total = sum(samples)
-    val = 0
-    for i in range(63):
-        if samples[i] * 64 > total:
-            val |= 1 << i
-    return val

@@ -338,178 +338,10 @@ def _write(out_dir: Path, name: str, cols: dict) -> None:
     pq.write_table(pa.table(cols), out_dir / f"{name}.parquet")
 
 
-def compute_image_thumbnails(out_dir: Path, max_side: int = 32) -> None:
-    """Expected rows for q_image_thumbnails: regenerate each asset's source
-    pixels (shared input-generation code, synth.image_pixels) and derive the
-    thumbnail md5 through the INDEPENDENT scalar resize + PNG assembly
-    (kernels.resize_bilinear_scalar/png_rgba_bytes) — so the engine's
-    container decode, vectorized bilinear kernel, and PNG encoder are all
-    under test. Corrupt assets quarantine (nulls + quarantined=True)."""
-    import hashlib
-
-    from azure_workflow_for_kml_satellite_spark.sources import synth
-
-    ids, ws, hs, tws, ths, md5s, quar = [], [], [], [], [], [], []
-    for i in range(synth.IMAGE_COUNT):
-        px = synth.image_pixels(i)
-        h, w = px.shape[:2]
-        th, tw = K.thumb_dims(h, w, max_side)
-        small = px if (th, tw) == (h, w) else K.resize_bilinear_scalar(px, th, tw)
-        png = K.png_rgba_bytes(K.normalize_rgba(small))
-        ids.append(f"img{i:03d}_{synth.image_kind(i)}")
-        ws.append(w)
-        hs.append(h)
-        tws.append(tw)
-        ths.append(th)
-        md5s.append(hashlib.md5(png).hexdigest())
-        quar.append(False)
-    for bad in ("img_corrupt_png", "img_corrupt_webp", "img_corrupt_gif"):
-        ids.append(bad)
-        ws.append(None)
-        hs.append(None)
-        tws.append(None)
-        ths.append(None)
-        md5s.append(None)
-        quar.append(True)
-    _write(
-        out_dir,
-        "image_thumbnails",
-        {
-            "asset_id": pa.array(ids, pa.string()),
-            "width": pa.array(ws, pa.int64()),
-            "height": pa.array(hs, pa.int64()),
-            "thumb_width": pa.array(tws, pa.int64()),
-            "thumb_height": pa.array(ths, pa.int64()),
-            "thumb_md5": pa.array(md5s, pa.string()),
-            "quarantined": pa.array(quar, pa.bool_()),
-        },
-    )
-
-
-def compute_audio_metadata(out_dir: Path) -> None:
-    """Expected rows for q_audio_metadata, derived purely from the synth
-    SPEC (no decoder involved): exact timing columns per kind (the mp3
-    frame count follows the encoder's documented padding formula) and
-    rms_ok/peak_ok = True — the engine side computes those booleans by
-    checking its DECODED statistics against the same spec's analytic
-    amplitude within per-kind tolerance bands, so a broken decoder flips
-    them to False and the driver hash mismatches."""
-    from azure_workflow_for_kml_satellite_spark.sources import synth
-
-    ids, rates, chans, nss, durs, quar, rok, pok = [], [], [], [], [], [], [], []
-    for i in range(synth.AUDIO_COUNT):
-        sp = synth.audio_spec(i)
-        n = sp["n"]
-        if sp["kind"] == "mp3":
-            n = max(1, -(-n // 1152)) * 1152  # encoder pads to frame grid
-        ids.append(f"aud{i:03d}_{sp['kind']}")
-        rates.append(sp["rate"])
-        chans.append(1)
-        nss.append(n)
-        durs.append(int(round(1000.0 * n / sp["rate"])))
-        quar.append(False)
-        rok.append(True)
-        pok.append(True)
-    ids.append("aud_corrupt")
-    rates.append(None)
-    chans.append(None)
-    nss.append(None)
-    durs.append(None)
-    quar.append(True)
-    rok.append(False)
-    pok.append(False)
-    _write(
-        out_dir,
-        "audio_metadata",
-        {
-            "asset_id": pa.array(ids, pa.string()),
-            "sample_rate": pa.array(rates, pa.int64()),
-            "channels": pa.array(chans, pa.int64()),
-            "n_samples": pa.array(nss, pa.int64()),
-            "duration_ms": pa.array(durs, pa.int64()),
-            "quarantined": pa.array(quar, pa.bool_()),
-            "rms_ok": pa.array(rok, pa.bool_()),
-            "peak_ok": pa.array(pok, pa.bool_()),
-        },
-    )
-
-
-def compute_video_frames(out_dir: Path, every_ms: int | None = None) -> None:
-    """Expected rows for q_video_frames. Timing derives purely from
-    synth.video_spec; pixel hashes derive from the ENCODER's deterministic
-    reconstruction (shared input generation, functions/h264
-    encode_h264_frames) pushed through the INDEPENDENT scalar YUV→RGB and
-    average-hash kernels (kernels.yuv420_to_rgb_scalar/phash64_scalar).
-    The from-scratch H.264 decoder is never consulted here: the engine's
-    MP4 demux → avcC parse → CAVLC/intra/deblock decode must reproduce the
-    encoder reconstruction BIT-exactly for the driver hashes to match."""
-    from azure_workflow_for_kml_satellite_spark.functions.h264 import (
-        encode_h264_frames,
-    )
-    from azure_workflow_for_kml_satellite_spark.sources import synth
-
-    if every_ms is None:
-        every_ms = synth.VIDEO_EVERY_MS
-    ids, fidx, tss, phs, quar = [], [], [], [], []
-    for i in range(synth.VIDEO_COUNT):
-        sp = synth.video_spec(i)
-        recons = encode_h264_frames(synth.video_frames(i), **sp["enc"])["recons"]
-        duration = sp["n_frames"] * sp["delta_ms"]
-        n_rows = max(1, duration // every_ms + (1 if duration % every_ms else 0))
-        for r in range(n_rows):
-            ts = r * every_ms
-            fi = min(ts // sp["delta_ms"], sp["n_frames"] - 1)
-            rgb = K.yuv420_to_rgb_scalar(*recons[fi])
-            ids.append(f"vid{i:03d}_avc1")
-            fidx.append(fi)
-            tss.append(ts)
-            phs.append(K.phash64_scalar(rgb))
-            quar.append(False)
-    # chain-break asset: truncated P frame → per-frame errors (null hash,
-    # quarantined) for the broken/poisoned frames, real hashes resuming at
-    # the next IDR — derived from the shared spec, decoder never consulted
-    sp = synth.CHAINBREAK_SPEC
-    recons = encode_h264_frames(synth.chainbreak_frames(), **sp["enc"])["recons"]
-    duration = sp["n_frames"] * sp["delta_ms"]
-    n_rows = max(1, duration // every_ms + (1 if duration % every_ms else 0))
-    for r in range(n_rows):
-        ts = r * every_ms
-        fi = min(ts // sp["delta_ms"], sp["n_frames"] - 1)
-        ids.append("vid_chainbreak_avc1")
-        fidx.append(fi)
-        tss.append(ts)
-        if fi in synth.CHAINBREAK_BROKEN:
-            phs.append(None)
-            quar.append(True)
-        else:
-            phs.append(K.phash64_scalar(K.yuv420_to_rgb_scalar(*recons[fi])))
-            quar.append(False)
-    ids.append("vid_corrupt")
-    fidx.append(None)
-    tss.append(None)
-    phs.append(None)
-    quar.append(True)
-    _write(
-        out_dir,
-        "video_frames",
-        {
-            "asset_id": pa.array(ids, pa.string()),
-            "frame_index": pa.array(fidx, pa.int64()),
-            "ts_ms": pa.array(tss, pa.int64()),
-            "frame_phash": pa.array(phs, pa.int64()),
-            "quarantined": pa.array(quar, pa.bool_()),
-        },
-    )
-
-
 def build_expected(sf_dir: str | Path) -> Path:
     sf_dir = Path(sf_dir)
     out_dir = sf_dir / "expected"
     out_dir.mkdir(parents=True, exist_ok=True)
-
-    compute_image_thumbnails(out_dir)
-    compute_audio_metadata(out_dir)
-    compute_video_frames(out_dir)
 
     # per-url visible-text bytes (north-rule invariant): md5 of the
     # INDEPENDENT scanner extraction (kernels.visible_text), compared by the

@@ -39,9 +39,6 @@ def engine_dir(sf_dir: str) -> str:
         "coord_requests.parquet": "write_coord_requests",
         "csv_points.parquet": "write_csv_points",
         "utm_scenes.parquet": "write_utm_scenes",
-        "images.parquet": "write_images",
-        "audio.parquet": "write_audio",
-        "videos.parquet": "write_videos",
     }
     for fname, writer in aux.items():
         if not (out / fname).exists():

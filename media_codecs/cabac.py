@@ -3,7 +3,7 @@ conformant encoder, from scratch.
 
 Round-7 staging of the judge's CABAC ask (VERDICT r6 task 2): the
 arithmetic ENGINE and its two small state-machine tables are implemented
-and validated here; the I-slice syntax layer lives in functions/h264.py.
+and validated here; the I-slice syntax layer lives in media_codecs/h264.py.
 
 Evidence tiers (this container still has no H.264 codec to differential
 against — the auto-skipping hooks in tests/test_external_differentials.py
@@ -39,7 +39,7 @@ evidence rule that kept mp3.py's escape tables quarantined in round 5 and
 CABAC itself quarantined in round 6. Contexts therefore default to
 UNIFORM inits (pStateIdx 0, valMPS 0 — p ~= 0.5 everywhere), the init
 table is a pluggable parameter (`CabacContexts(init=...)`) for the day a
-system decoder can validate a transcription, and functions/h264.py
+system decoder can validate a transcription, and media_codecs/h264.py
 refuses CABAC streams that do not carry the in-repo encoder's SEI
 provenance marker: a real-web stream encoded against the spec inits would
 decode plausibly-but-WRONG under any other inits, and a named refusal

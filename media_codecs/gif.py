@@ -1,6 +1,6 @@
 """From-scratch GIF (87a/89a) codec — pure numpy/stdlib.
 
-Like functions/png.py and functions/jpeg.py, the engine carries its own
+Like functions/png.py and media_codecs/jpeg.py, the engine carries its own
 implementation of the public format because no PIL exists in this
 container. Web corpora are full of GIFs (static and animated), so the
 multimodal operators decode them for real:

@@ -23,7 +23,7 @@ Scope (honest, documented):
   full in-loop deblocking filter with per-edge-segment boundary
   strengths (intra / coded-residual / ref- or MV-difference, 8.7.2.1).
 - **Decoded (round 7)**: CABAC I AND P slices — the full arithmetic
-  decoding engine (functions/cabac.py, structurally validated tables),
+  decoding engine (media_codecs/cabac.py, structurally validated tables),
   I-slice binarizations and context modeling (mb_type incl. I_PCM-with-
   engine-restart, intra pred modes, cbp, mb_qp_delta, coded_block_flag,
   significance maps, UEG0 levels), the P-slice layer (mb_skip_flag,
@@ -69,7 +69,7 @@ differential carries no AVC code):
 
 Reference parity: the reference repo contains no video decoding at all
 (grep-verified); this extends the training-data-pipeline multimodal axis
-(operators/multimodal.py video_frame_sample).
+(media_codecs/multimodal.py video_frame_sample).
 """
 
 from __future__ import annotations
@@ -78,7 +78,7 @@ import struct
 
 import numpy as np
 
-from azure_workflow_for_kml_satellite_spark.functions.h264_tables import (
+from media_codecs.h264_tables import (
     ALPHA,
     BETA,
     BLK4_POS,
@@ -94,7 +94,7 @@ from azure_workflow_for_kml_satellite_spark.functions.h264_tables import (
     pos_class,
 )
 
-from azure_workflow_for_kml_satellite_spark.functions.cabac import (
+from media_codecs.cabac import (
     CabacContexts,
     CabacDecoder,
     CabacEncoder,
@@ -109,7 +109,7 @@ _SIG_OFF = (0, 15, 29, 44, 47)
 _ABS_OFF = (0, 10, 20, 30, 39)
 
 # SEI user_data_unregistered UUID marking streams produced by this repo's
-# CABAC encoder (uniform context inits — see functions/cabac.py). Foreign
+# CABAC encoder (uniform context inits — see media_codecs/cabac.py). Foreign
 # CABAC streams are refused instead of being decoded wrongly.
 CABAC_MARKER_UUID = bytes.fromhex("7a77666b73616263b0000000000000c1")
 
@@ -933,7 +933,7 @@ class _PictureDecoder:
         # per-4x4 |mvd| memory for the CABAC mvd contexts (9.3.3.1.1.7)
         self.mvd = np.zeros((self.mbh * 4, self.mbw * 4, 2), dtype=np.int32)
         # provenance gate: set by _decode_nals_pic when the access unit
-        # carries the in-repo encoder's SEI marker (see functions/cabac.py —
+        # carries the in-repo encoder's SEI marker (see media_codecs/cabac.py —
         # CABAC context inits are uniform, not the spec's unvalidatable
         # trained tables, so foreign CABAC streams must be refused rather
         # than decoded wrongly)
@@ -1143,7 +1143,7 @@ class _PictureDecoder:
                     "CABAC stream without the in-repo provenance marker: "
                     "context inits here are uniform, not the spec's trained "
                     "tables (unvalidatable in this container, see "
-                    "functions/cabac.py) — refusing a likely-wrong decode"
+                    "media_codecs/cabac.py) — refusing a likely-wrong decode"
                 )
             while br.pos % 8:
                 if not br.read(1):
@@ -2513,7 +2513,7 @@ def decode_h264_sample(sample: bytes, avcc: dict):
 # reads, so a decoder/encoder disagreement is a real bug, not drift).
 # ═══════════════════════════════════════════════════════════════════════════
 
-from azure_workflow_for_kml_satellite_spark.functions.h264_tables import (  # noqa: E402
+from media_codecs.h264_tables import (  # noqa: E402
     COEFF_TOKEN,
     RUN_BEFORE,
     TOTAL_ZEROS,
@@ -2684,7 +2684,7 @@ def _write_sps(width_mbs: int, height_mbs: int, crop: tuple,
 
 def _write_sei_cabac_marker() -> bytes:
     """SEI NAL (user_data_unregistered) carrying the provenance UUID that
-    unlocks CABAC decode — see CABAC_MARKER_UUID and functions/cabac.py."""
+    unlocks CABAC decode — see CABAC_MARKER_UUID and media_codecs/cabac.py."""
     payload = CABAC_MARKER_UUID + b"uniform-cabac-inits"
     body = bytes([5, len(payload)]) + payload + b"\x80"
     return b"\x06" + _add_emulation(body)

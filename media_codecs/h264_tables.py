@@ -32,7 +32,7 @@ mapping). Every transcription is STRUCTURALLY validated at import:
 
 Reference parity: the reference repo contains no video decoding at all
 (grep-verified; its multimodal surface is this package's extension for the
-training-data-pipeline axis). This module feeds functions/h264.py.
+training-data-pipeline axis). This module feeds media_codecs/h264.py.
 """
 
 from __future__ import annotations

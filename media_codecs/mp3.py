@@ -45,7 +45,7 @@ import struct
 
 import numpy as np
 
-from azure_workflow_for_kml_satellite_spark.functions.mp3_tables import (
+from media_codecs.mp3_tables import (
     ALIAS_CI,
     BITRATES_L3,
     COUNT1_DEC,

@@ -5,17 +5,17 @@ PNG payloads are REALLY decoded (the repo's from-scratch decoder,
 functions/png.py — zlib inflate + all five filter types incl. Paeth), and
 JPEG payloads are REALLY decoded too — both baseline (SOF0/1) and
 progressive (SOF2, spectral selection + successive approximation) via
-functions/jpeg.py (Huffman + dequant + IDCT, 4:4:4/4:2:2/4:2:0, restart
+media_codecs/jpeg.py (Huffman + dequant + IDCT, 4:4:4/4:2:2/4:2:0, restart
 markers, EOB runs) — so width/height/channels/mean_luma/phash are true
-pixel statistics for both. GIFs (incl. animated — functions/gif.py LZW +
-compositing), BMPs and baseline stripped TIFFs (functions/webimage.py —
+pixel statistics for both. GIFs (incl. animated — media_codecs/gif.py LZW +
+compositing), BMPs and baseline stripped TIFFs (media_codecs/webimage.py —
 none/deflate/PackBits, predictor, palette, both byte orders) are really
 decoded, as are ICO containers (PNG or doubled-height DIB entries); WebP
 headers and SVG root dimensions are really parsed (dims real, pixels/
 rasterization honestly stubbed). WAV (RIFF/PCM) and AIFF (big-endian PCM incl. the 80-bit
 extended sample rate) audio are really parsed
 (``audio_metadata`` — header + sample statistics), MP3 (MPEG-1 Layer
-III, functions/mp3.py) and Ogg Vorbis (functions/vorbis.py) samples are
+III, media_codecs/mp3.py) and Ogg Vorbis (media_codecs/vorbis.py) samples are
 really DECODED (true rms/peak; Opus pages walked for timing only),
 FLAC frames really decoded, MJPEG-in-AVI
 video is really demuxed + decoded (``video_frame_sample`` — RIFF walk →
@@ -23,7 +23,7 @@ movi JPEG chunks → per-frame pixel hash), MP4/MOV (ISO-BMFF sample
 tables) and Matroska (EBML element walk) are really demuxed — true
 frame timing/byte ranges — with 'jpeg'/'V_MJPEG' payloads decoding to
 true pixel hashes and MP4 `avc1` decoded by the from-scratch H.264
-baseline-intra decoder (functions/h264.py). Only the remaining
+baseline-intra decoder (media_codecs/h264.py). Only the remaining
 compressed A/V codec payloads (aac/opus samples, foreign/unmarked-CABAC
 and B-slice H.264, hvc1/VP9 — no PIL/ffmpeg in this container) emit an
 honest per-row decode_error; unrecognized containers keep the
@@ -62,14 +62,14 @@ _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 def _decode_image(data: bytes) -> np.ndarray:
     """bytes → HxWxC uint8. PNG: real decode via functions/png.py
     (``decode_png_any`` — all colour types, bit depths 1–16, Adam7).
-    JPEG (baseline + progressive): real decode via functions/jpeg.py.
-    GIF: real decode via functions/gif.py (LZW + first composed frame).
-    BMP/baseline TIFF: real decode via functions/webimage.py.
+    JPEG (baseline + progressive): real decode via media_codecs/jpeg.py.
+    GIF: real decode via media_codecs/gif.py (LZW + first composed frame).
+    BMP/baseline TIFF: real decode via media_codecs/webimage.py.
     Corrupt/arithmetic/lossless variants → ValueError → per-row
     quarantine. Other formats: deterministic stand-in (no codecs in this
     container)."""
     if data[:8] == _PNG_MAGIC:
-        from azure_workflow_for_kml_satellite_spark.functions.png import decode_png_any
+        from media_codecs.png_any import decode_png_any
 
         try:
             decoded = decode_png_any(data)
@@ -80,35 +80,35 @@ def _decode_image(data: bytes) -> np.ndarray:
         img, bpp = decoded
         return img
     if data[:6] in (b"GIF87a", b"GIF89a"):
-        from azure_workflow_for_kml_satellite_spark.functions.gif import decode_gif
+        from media_codecs.gif import decode_gif
 
         try:
             return decode_gif(data)
         except (ValueError, IndexError, struct.error) as exc:
             raise ValueError(f"corrupt GIF payload: {exc}") from exc
     if data[:2] == b"\xff\xd8":
-        from azure_workflow_for_kml_satellite_spark.functions.jpeg import decode_jpeg
+        from media_codecs.jpeg import decode_jpeg
 
         try:
             return decode_jpeg(data)
         except (ValueError, IndexError, KeyError, struct.error) as exc:
             raise ValueError(f"corrupt or unsupported JPEG payload: {exc}") from exc
     if data[:2] == b"BM":
-        from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_bmp
+        from media_codecs.webimage import decode_bmp
 
         try:
             return decode_bmp(data)
         except (IndexError, struct.error) as exc:
             raise ValueError(f"corrupt BMP payload: {exc}") from exc
     if data[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-        from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_tiff
+        from media_codecs.webimage import decode_tiff
 
         try:
             return decode_tiff(data)
         except (IndexError, struct.error) as exc:
             raise ValueError(f"corrupt TIFF payload: {exc}") from exc
     if data[:4] == b"\x00\x00\x01\x00":
-        from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_ico
+        from media_codecs.webimage import decode_ico
 
         try:
             return decode_ico(data)
@@ -154,7 +154,7 @@ def _phash(img: np.ndarray) -> int:
 def cost_scatter(df: DataFrame, parts: int | None = None) -> DataFrame:
     """Cost-balancing scatter for heavy-tailed per-asset decode stages
     (round-7 fix for the image-stage straggler grain, measured 0.68-0.71
-    N→4N efficiency in scripts/bench_multimodal_scaling vs 0.92+ for
+    N→4N efficiency vs 0.92+ for
     audio/video): one animated WebP costs ~100x a small PNG, so hash
     partitioning leaves whichever task drew two heavies as the stage tail
     (balls-in-bins: collisions are expected once heavies ~ partitions).
@@ -201,7 +201,7 @@ def image_metadata(df: DataFrame, id_col: str = "asset_id", bin_col: str = "payl
                 ):
                     # SVG: root dimensions really parsed; rasterization
                     # needs a renderer — honest per-row stub like WebP
-                    from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+                    from media_codecs.webimage import (
                         svg_dimensions,
                     )
 
@@ -236,10 +236,10 @@ def image_metadata(df: DataFrame, id_col: str = "asset_id", bin_col: str = "payl
                     continue
                 if raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
                     # WebP: VP8L (lossless) pixels decode via the
-                    # from-scratch functions/vp8l.py codec; lossy VP8
-                    # keyframes via the from-scratch functions/vp8.py
+                    # from-scratch media_codecs/vp8l.py codec; lossy VP8
+                    # keyframes via the from-scratch media_codecs/vp8.py
                     # decoder (bit-exact YUV vs libwebp)
-                    from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+                    from media_codecs.webimage import (
                         decode_webp,
                         webp_dimensions,
                     )
@@ -387,7 +387,7 @@ def image_thumbnails(
         from azure_workflow_for_kml_satellite_spark.functions.png import (
             encode_png_rgba,
         )
-        from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+        from media_codecs.webimage import (
             decode_webp,
         )
 
@@ -645,15 +645,15 @@ _H264_ASSET_SAMPLE_BUDGET = 1 << 24
 
 def _h264_seq_decoder(avcc_bytes: bytes, samples, get_sample):
     """frame_fn factory for AVC tracks: decodes samples SEQUENTIALLY
-    through a sliding-window DPB (functions/h264.H264StreamDecoder) so P
+    through a sliding-window DPB (media_codecs/h264.H264StreamDecoder) so P
     frames see their references; memoizes per-frame (phash, error). A
     failed frame poisons only the frames that depend on it — the next IDR
     resets the DPB and decoding resumes."""
-    from azure_workflow_for_kml_satellite_spark.functions.h264 import (
+    from media_codecs.h264 import (
         H264StreamDecoder,
         parse_avcc,
     )
-    from azure_workflow_for_kml_satellite_spark.functions.vp8 import yuv_to_rgb
+    from media_codecs.vp8 import yuv_to_rgb
 
     dec = H264StreamDecoder(parse_avcc(avcc_bytes))
     results: dict[int, tuple] = {}
@@ -823,13 +823,13 @@ def video_frame_sample(
     demuxed too (ISO-BMFF box walk + stts/stsz/stsc/stco sample tables →
     true per-frame timestamps and byte ranges), as is Matroska (EBML
     element walk → video TrackEntry + Cluster blocks). Animated GIFs are
-    fully decoded (functions/gif.py — LZW + disposal compositing, GCE
+    fully decoded (media_codecs/gif.py — LZW + disposal compositing, GCE
     delays as true frame timing). 'jpeg'/'mjpa'/'V_MJPEG' payloads decode
     to true pixel hashes, and MP4 `avc1` frames decode through the
-    from-scratch H.264 baseline-intra decoder (functions/h264.py — avcC
+    from-scratch H.264 baseline-intra decoder (media_codecs/h264.py — avcC
     extradata from the stsd sample entry, length-prefixed NALs per
     sample) to true pixel hashes too — incl. CABAC I and P slices
-    (round 7, marker-gated, functions/cabac.py); sub-features the decoder
+    (round 7, marker-gated, media_codecs/cabac.py); sub-features the decoder
     still rejects (foreign CABAC, B slices) surface as per-FRAME decode errors on
     real timing rows. Remaining compressed codecs (hvc1/V_MPEG4/… — no
     ffmpeg here) emit rows with real timing but a per-row decode_error
@@ -838,7 +838,7 @@ def video_frame_sample(
     the real UDTF-style contract either way."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from azure_workflow_for_kml_satellite_spark.functions.jpeg import decode_jpeg
+        from media_codecs.jpeg import decode_jpeg
 
         def jpeg_phash(payload: bytes) -> int:
             frame = decode_jpeg(payload)
@@ -881,7 +881,7 @@ def video_frame_sample(
                         None,
                     )
                 elif info["codec"] == "avc1" and info.get("avcc"):
-                    # real from-scratch H.264 decode (functions/h264.py):
+                    # real from-scratch H.264 decode (media_codecs/h264.py):
                     # IDR and P frames, decoded SEQUENTIALLY through a
                     # sliding-window DPB (P frames need their references);
                     # unsupported sub-features (CABAC, B slices, MMCO) stay
@@ -900,7 +900,7 @@ def video_frame_sample(
                     frame_fn,
                 )
             if data[:6] in (b"GIF87a", b"GIF89a"):
-                from azure_workflow_for_kml_satellite_spark.functions.gif import (
+                from media_codecs.gif import (
                     decode_gif_frames,
                 )
 
@@ -1036,7 +1036,7 @@ def _parse_wav(data: bytes) -> dict:
     """Real RIFF/WAVE parse: fmt header + true sample statistics for
     integer PCM (8/16/32-bit, format 1), G.711 A-law / µ-law (formats 6/7)
     and IMA ADPCM (format 0x11) — the compressed legs decode via
-    functions/pcm_codecs.py. Other compressed WAVE formats raise
+    media_codecs/pcm_codecs.py. Other compressed WAVE formats raise
     (quarantined per-row)."""
     import struct as _s
 
@@ -1083,7 +1083,7 @@ def _parse_wav(data: bytes) -> dict:
         n_frames = len(arr) // max(1, fmt["channels"])
         bits_out = fmt["bits"]
     else:
-        from azure_workflow_for_kml_satellite_spark.functions import pcm_codecs
+        from media_codecs import pcm_codecs
 
         if fmt["format"] in (6, 7):
             dec = (
@@ -1136,7 +1136,7 @@ def _parse_mp3(data: bytes) -> dict:
     length), accumulating sample counts for the true duration.
 
     Round 6: MPEG-1 Layer III streams additionally get their SAMPLES
-    decoded through the from-scratch functions/mp3.py decoder (validated
+    decoded through the from-scratch media_codecs/mp3.py decoder (validated
     Huffman subset + analytic near-PR filterbank — see that module's
     honesty notes), yielding real rms/peak. Streams outside the decodable
     subset (MPEG-2/2.5, Layers I/II, escape Huffman tables, intensity
@@ -1197,7 +1197,7 @@ def _parse_mp3(data: bytes) -> dict:
         raise ValueError("no MPEG audio frames found")
     rms = peak = None
     try:
-        from azure_workflow_for_kml_satellite_spark.functions.mp3 import decode_mp3
+        from media_codecs.mp3 import decode_mp3
 
         samples, _dec_rate = decode_mp3(data)
         if samples.size:
@@ -1393,11 +1393,11 @@ def _parse_ogg(data: bytes) -> dict:
         raise ValueError("invalid Ogg identification header")
     rms = peak = None
     if ident[:7] == b"\x01vorbis":
-        # round 6: from-scratch Vorbis I sample decode (functions/vorbis.py)
+        # round 6: from-scratch Vorbis I sample decode (media_codecs/vorbis.py)
         # — outside the decodable subset (floor0 etc.) the row stays an
         # honest header-only one, mirroring the MP3 tiering.
         try:
-            from azure_workflow_for_kml_satellite_spark.functions.vorbis import (
+            from media_codecs.vorbis import (
                 decode_vorbis_stream,
             )
 
@@ -1487,7 +1487,7 @@ def _parse_aiff(data: bytes) -> dict:
 
 def _parse_flac(data: bytes) -> dict:
     """Real FLAC parse: STREAMINFO (mandatory first metadata block) and a
-    full from-scratch FRAME decode (functions/flac.py — Rice/FIXED/LPC
+    full from-scratch FRAME decode (media_codecs/flac.py — Rice/FIXED/LPC
     subframes, stereo decorrelation, CRC-verified), so rms/peak are true
     sample statistics for compressed FLAC. If the audio frames are
     malformed while STREAMINFO is valid, the header metadata is returned
@@ -1523,7 +1523,7 @@ def _parse_flac(data: bytes) -> dict:
     rms = peak = None
     total = info["total"]
     if pos < len(data):
-        from azure_workflow_for_kml_satellite_spark.functions.flac import (
+        from media_codecs.flac import (
             decode_frames,
         )
 
@@ -1552,12 +1552,12 @@ def _parse_flac(data: bytes) -> dict:
 def audio_metadata(df: DataFrame, id_col: str = "asset_id", bin_col: str = "payload") -> DataFrame:
     """binary column → typed audio metadata rows. RIFF/WAVE (integer PCM
     plus the G.711 A-law/µ-law and IMA-ADPCM compressed legs via
-    functions/pcm_codecs.py) and AIFF PCM payloads are REALLY parsed
+    media_codecs/pcm_codecs.py) and AIFF PCM payloads are REALLY parsed
     (header + per-sample statistics), and FLAC frames are REALLY decoded
-    (functions/flac.py: Rice/FIXED/LPC subframes, stereo decorrelation,
+    (media_codecs/flac.py: Rice/FIXED/LPC subframes, stereo decorrelation,
     CRC-verified) so rms/peak are true statistics for
-    compressed formats too. MPEG-1 Layer III (functions/mp3.py) and Ogg
-    Vorbis (functions/vorbis.py) sample data are really decoded from
+    compressed formats too. MPEG-1 Layer III (media_codecs/mp3.py) and Ogg
+    Vorbis (media_codecs/vorbis.py) sample data are really decoded from
     scratch — true rms/peak for both; Ogg Opus pages are CRC-walked for
     true sample_rate/channels/duration with rms/peak honestly null.
     Unrecognized or corrupt payloads quarantine per-row with a

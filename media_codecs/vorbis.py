@@ -1,7 +1,7 @@
 """Vorbis I decode (and a minimal conformant encoder) from scratch.
 
 Round-6 surface: the web's second most common compressed-audio format
-after MP3. ``_parse_ogg`` (operators/multimodal.py) already demuxes Ogg
+after MP3. ``_parse_ogg`` (media_codecs/multimodal.py) already demuxes Ogg
 pages with CRC checks and validates the Vorbis identification/comment
 headers; this module adds the actual sample decode so audio_metadata can
 emit real rms/peak for ``audio/ogg`` payloads instead of nulls.
@@ -16,7 +16,7 @@ lapping (§1.3.2, §4.3.8).
 
 Reference parity: the reference repo (treesight) has no audio handling
 at all; this is engine-extension surface for the web-corpus data model
-(SURVEY.md §2 multimodal block). Validation mirrors functions/mp3.py's
+(SURVEY.md §2 multimodal block). Validation mirrors media_codecs/mp3.py's
 tiered approach — the container never ships encoded bytes we cannot
 independently re-derive: an in-repo encoder produces spec-conformant
 streams, goldens assert analytic sine statistics, and fuzz asserts
@@ -111,7 +111,7 @@ class _EOP(Exception):
 
 class _Bits:
     """LSb-first bit reader over one packet (Vorbis packs the opposite
-    way round from MPEG audio — functions/mp3.py's reader is MSB-first)."""
+    way round from MPEG audio — media_codecs/mp3.py's reader is MSB-first)."""
 
     def __init__(self, data: bytes):
         self.data = data

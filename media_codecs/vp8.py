@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from azure_workflow_for_kml_satellite_spark.functions.vp8_tables import (
+from media_codecs.vp8_tables import (
     AC_QLOOKUP,
     COEFF_PROBS,
     COEFF_UPDATE_PROBS,

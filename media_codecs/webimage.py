@@ -1,9 +1,9 @@
 """Small web-image formats: BMP and baseline TIFF (really decoded), WebP
-lossless (VP8L pixels really decoded via functions/vp8l.py) AND lossy
-(VP8 keyframes really decoded via functions/vp8.py, bit-exact against
+lossless (VP8L pixels really decoded via media_codecs/vp8l.py) AND lossy
+(VP8 keyframes really decoded via media_codecs/vp8.py, bit-exact against
 libwebp), ICO, and SVG root dimensions.
 
-Companions to functions/png.py, functions/jpeg.py and functions/gif.py.
+Companions to functions/png.py, media_codecs/jpeg.py and media_codecs/gif.py.
 """
 
 from __future__ import annotations
@@ -90,13 +90,13 @@ def webp_dimensions(data: bytes) -> tuple[int, int, str]:
 
 def decode_webp(data: bytes) -> "np.ndarray":
     """WebP pixel decode: VP8L payloads (bare or inside a VP8X extended
-    container) via the from-scratch functions/vp8l.py codec; lossy VP8
-    keyframes via the from-scratch functions/vp8.py decoder (bit-exact YUV
+    container) via the from-scratch media_codecs/vp8l.py codec; lossy VP8
+    keyframes via the from-scratch media_codecs/vp8.py decoder (bit-exact YUV
     vs libwebp; RGB via the BT.601 integer conversion). → HxWx4 uint8
     RGBA."""
     if len(data) < 16 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP payload")
-    from azure_workflow_for_kml_satellite_spark.functions.vp8l import decode_vp8l
+    from media_codecs.vp8l import decode_vp8l
 
     pos = 12
     alph_body = None
@@ -112,7 +112,7 @@ def decode_webp(data: bytes) -> "np.ndarray":
         elif fourcc == b"VP8L":
             return decode_vp8l(body)
         elif fourcc == b"VP8 ":
-            from azure_workflow_for_kml_satellite_spark.functions.vp8 import (
+            from media_codecs.vp8 import (
                 decode_vp8,
                 yuv_to_rgb,
             )
@@ -143,11 +143,11 @@ def decode_webp_luma(data: bytes) -> "np.ndarray":
         (size,) = struct.unpack_from("<I", data, pos + 4)
         body = data[pos + 8 : pos + 8 + size]
         if fourcc == b"VP8 ":
-            from azure_workflow_for_kml_satellite_spark.functions.vp8 import decode_vp8
+            from media_codecs.vp8 import decode_vp8
 
             return decode_vp8(body)[0]
         if fourcc == b"VP8L":
-            from azure_workflow_for_kml_satellite_spark.functions.vp8l import decode_vp8l
+            from media_codecs.vp8l import decode_vp8l
 
             rgba = decode_vp8l(body).astype(np.uint32)
             return (
@@ -378,7 +378,7 @@ def decode_ico(data: bytes) -> np.ndarray:
     if len(body) < size:
         raise ValueError("truncated ICO image data")
     if body[:8] == b"\x89PNG\r\n\x1a\n":
-        from azure_workflow_for_kml_satellite_spark.functions.png import decode_png_any
+        from media_codecs.png_any import decode_png_any
 
         decoded = decode_png_any(body)
         if decoded is None:
@@ -482,7 +482,7 @@ def decode_alph(body: bytes, w: int, h: int) -> np.ndarray:
             raise ValueError("truncated raw ALPH payload")
         plane = np.frombuffer(payload, np.uint8, w * h).reshape(h, w)
     elif compression == 1:
-        from azure_workflow_for_kml_satellite_spark.functions.vp8l import (
+        from media_codecs.vp8l import (
             decode_vp8l_alpha,
         )
 

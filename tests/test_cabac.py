@@ -1,11 +1,11 @@
 """CABAC engine + H.264 I-slice CABAC tests (round 7).
 
-Validation tiers (see functions/cabac.py docstring): generative-model
+Validation tiers (see media_codecs/cabac.py docstring): generative-model
 structural acceptance for the two transcribed tables, bit-exact
 encoder/decoder round-trips for the arithmetic engine, an entropy
 (adaptivity) property, the flush-position invariant the I_PCM and strict
 end-of-slice paths rely on, and the full-pipeline macroblock matrix via
-functions/h264.py.
+media_codecs/h264.py.
 """
 
 from __future__ import annotations
@@ -16,8 +16,8 @@ import random
 import numpy as np
 import pytest
 
-from azure_workflow_for_kml_satellite_spark.functions import h264 as H
-from azure_workflow_for_kml_satellite_spark.functions.cabac import (
+from media_codecs import h264 as H
+from media_codecs.cabac import (
     RANGE_TAB_LPS,
     TRANS_IDX_LPS,
     CabacContexts,
@@ -59,7 +59,7 @@ def test_trans_idx_known_dip():
 
 
 def test_tampered_table_rejected():
-    import azure_workflow_for_kml_satellite_spark.functions.cabac as C
+    import media_codecs.cabac as C
 
     orig = C.RANGE_TAB_LPS
     # digit transposition: 169 -> 196 at state 4 / q2
@@ -344,7 +344,7 @@ def test_residual_syntax_round_trip_extremes():
     _serialize_residual_cabac / _decode_residual_cabac — reaches level
     magnitudes deep past the TU-14 escape and every category's context
     schedule, which the frame-level matrices only sample."""
-    from azure_workflow_for_kml_satellite_spark.functions.h264 import (
+    from media_codecs.h264 import (
         _serialize_residual_cabac,
     )
 
@@ -382,7 +382,7 @@ def test_mvd_and_ref_syntax_round_trip_extremes():
     """mvd values across the UEG3 escape boundary (|mvd| 8,9,10 and huge)
     and ref_idx unary depths, through the real serializer/parser pair with
     a live picture state so the neighbour contexts evolve on both sides."""
-    from azure_workflow_for_kml_satellite_spark.functions.h264 import (
+    from media_codecs.h264 import (
         _serialize_mvd_cabac,
         _serialize_ref_cabac,
     )

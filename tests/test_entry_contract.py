@@ -25,13 +25,12 @@ def test_queries_oracles_consistent():
         assert name in qs and name in oracles
     # round-7 rotation: the driver verifies the FIRST 50 entries; the 13
     # queries with no driver row since r2-r5 are back in the window, the
-    # round-7-touched gates (escape-table mp3 assets, decode_sample
-    # broken-chain fix, LSH persist) stay in, and the rotated-out r5+r6 /
-    # r3+r6 multi-green entries stay present (full-set local gate covers
-    # them)
+    # round-7-touched LSH persist gate stays in, and the rotated-out
+    # r5+r6 / r3+r6 multi-green entries stay present (full-set local gate
+    # covers them)
     in_window = list(qs)[:50]
     for name in (
-        "q_audio_metadata", "q_video_frames", "q_embed_near_dup_lsh",
+        "q_embed_near_dup_lsh",
         "q_ann_lsh", "q_ann_ivf", "q_ann_topk", "q_embed_near_dup",
         "q_events_hourly", "q_sessionize", "q_pricing_summary",
         "q_top_customers", "q_cell_density", "q_tile_assignment",
@@ -39,7 +38,7 @@ def test_queries_oracles_consistent():
         "q_dedup_clusters_star",
     ):
         assert name in in_window
-    for name in ("q_page_text", "q_image_thumbnails", "q_geojson"):
+    for name in ("q_page_text", "q_geojson"):
         assert name in qs  # rotated out but still present + locally gated
 
 

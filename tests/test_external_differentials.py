@@ -27,15 +27,15 @@ import subprocess
 import numpy as np
 import pytest
 
-from azure_workflow_for_kml_satellite_spark.functions.h264 import (
+from media_codecs.h264 import (
     decode_h264_annexb_stream,
     encode_h264_frames,
 )
-from azure_workflow_for_kml_satellite_spark.functions.mp3 import (
+from media_codecs.mp3 import (
     decode_mp3,
     encode_mp3,
 )
-from azure_workflow_for_kml_satellite_spark.functions.vorbis import (
+from media_codecs.vorbis import (
     decode_vorbis_stream,
     encode_vorbis,
 )
@@ -181,7 +181,7 @@ def test_h264_foreign_cabac_stream_refused_by_name():
     inits, no provenance SEI) must be refused with the named init-
     validation error — never silently decoded under our uniform inits.
     When a system codec ships, this is also the staging point for
-    validating a spec-init transcription (functions/cabac.py docstring)."""
+    validating a spec-init transcription (media_codecs/cabac.py docstring)."""
     enc = subprocess.run([_FFMPEG, "-hide_banner", "-encoders"],
                          capture_output=True, timeout=60)
     if b"libx264" not in enc.stdout:

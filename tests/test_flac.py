@@ -1,4 +1,4 @@
-"""FLAC frame codec (functions/flac.py) — round-trip, hand-crafted LPC and
+"""FLAC frame codec (media_codecs/flac.py) — round-trip, hand-crafted LPC and
 raw-escape bitstreams, CRC enforcement, and the audio_metadata integration
 (true rms/peak for a compressed format)."""
 
@@ -9,8 +9,8 @@ import struct
 import numpy as np
 import pytest
 
-from azure_workflow_for_kml_satellite_spark.functions import flac as FL
-from azure_workflow_for_kml_satellite_spark.operators.multimodal import _parse_flac
+from media_codecs import flac as FL
+from media_codecs.multimodal import _parse_flac
 
 
 def _audio_start(enc: bytes) -> int:
@@ -157,7 +157,7 @@ def test_crc_enforced_and_parse_flac_falls_back():
 
 
 def test_audio_metadata_decodes_flac_samples(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         audio_metadata,
     )
 

@@ -1,7 +1,7 @@
-"""H.264 baseline intra decoder/encoder tests — functions/h264.py.
+"""H.264 baseline intra decoder/encoder tests — media_codecs/h264.py.
 
 Validation tiers (no H.264 codec binary exists in this container to
-differential against — the tier model mirrors functions/mp3.py):
+differential against — the tier model mirrors media_codecs/mp3.py):
 
 1. Table structure: every CAVLC VLC table prefix-free + exactly
    Kraft-complete (with the spec's all-zeros holes pinned), plus golden
@@ -31,8 +31,8 @@ import struct
 import numpy as np
 import pytest
 
-from azure_workflow_for_kml_satellite_spark.functions import h264 as H
-from azure_workflow_for_kml_satellite_spark.functions import h264_tables as T
+from media_codecs import h264 as H
+from media_codecs import h264_tables as T
 
 
 def _mk(h, w, kind, seed=3):
@@ -294,13 +294,13 @@ def test_video_frame_sample_avc1_matches_oracle(spark, tmp_path):
     kernels) — the same check the driver's q_video_frames gate runs."""
     import pyarrow.parquet as pq
 
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         video_frame_sample,
     )
-    from azure_workflow_for_kml_satellite_spark.oracle.sequential import (
+    from media_codecs.oracle import (
         compute_video_frames,
     )
-    from azure_workflow_for_kml_satellite_spark.sources import synth
+    from media_codecs import synth_media as synth
 
     synth.write_videos(tmp_path)
     compute_video_frames(tmp_path)
@@ -327,8 +327,8 @@ def test_mkv_avc1_codecprivate_decode():
     both to the H.264 decoder and reproduce the encoder recon exactly."""
     from tests.test_new_ops import _mkv_bytes
 
-    from azure_workflow_for_kml_satellite_spark.functions.vp8 import yuv_to_rgb
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.vp8 import yuv_to_rgb
+    from media_codecs.multimodal import (
         _parse_mkv,
         _phash,
     )

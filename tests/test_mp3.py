@@ -1,4 +1,4 @@
-"""MPEG-1 Layer III codec tests (functions/mp3.py).
+"""MPEG-1 Layer III codec tests (media_codecs/mp3.py).
 
 No mp3 binary exists in this container to differential-test against
 (rounds 5-6 filesystem scans), so validation is tiered: structural Huffman
@@ -10,8 +10,8 @@ self-cancel into a pass."""
 import numpy as np
 import pytest
 
-from azure_workflow_for_kml_satellite_spark.functions import mp3_tables as T
-from azure_workflow_for_kml_satellite_spark.functions.mp3 import (
+from media_codecs import mp3_tables as T
+from media_codecs.mp3 import (
     analysis_filterbank,
     decode_mp3,
     encode_mp3,
@@ -106,7 +106,7 @@ def test_silence_and_dc_edge_cases():
 def test_crc16_protected_frame_and_mismatch():
     """protection=0 frames carry a CRC-16 over header remainder + side
     info; a correct CRC decodes, a corrupted one raises."""
-    from azure_workflow_for_kml_satellite_spark.functions.mp3 import _crc16
+    from media_codecs.mp3 import _crc16
 
     sr = 44100
     sine = 0.4 * np.sin(2 * np.pi * 441.0 * np.arange(2304) / sr)
@@ -225,7 +225,7 @@ def test_audio_metadata_mp3_real_rms_peak(spark):
     REAL rms/peak (matching the analytic sine within quantization
     tolerance), while out-of-subset streams keep real timing with null
     stats and corrupt payloads quarantine."""
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         audio_metadata,
     )
 

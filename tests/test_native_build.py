@@ -1,15 +1,19 @@
-"""The native kernel's fallback is visible: a failed build leaves ``LIB``
-None with the reason in ``BUILD_ERROR`` and one line on stderr, while
-``SPARK_GRAFT_NATIVE=0`` disables it silently. Each case imports the
-module in a fresh interpreter so the import-time build really runs."""
+"""The native kernel's fallback is visible: a failed build or a failed
+stats self-check leaves ``LIB`` None with the reason in ``BUILD_ERROR``
+and one line on stderr, while ``SPARK_GRAFT_NATIVE=0`` disables it
+silently. Each case imports the module in a fresh interpreter so the
+import-time build really runs."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -63,3 +67,31 @@ def test_disabled_native_is_silent(tmp_path):
     assert lib_none
     assert reason is None
     assert "native kernel unavailable" not in stderr
+
+
+def test_stats_mismatch_disables_native(tmp_path):
+    """A numpy whose std differs from the C statistics (stand-in: a patched
+    ``numpy.std``) fails the import-time self-check: the whole numpy path
+    runs and the reason names the statistics."""
+    if shutil.which("gcc") is None:
+        pytest.skip("needs gcc to build the kernel")
+    probe = (
+        "import numpy\n"
+        "_std = numpy.std\n"
+        "numpy.std = lambda x, *a, **k: _std(x, *a, **k) + numpy.float32(1e-3)\n"
+        + _PROBE
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=REPO,
+        env={**os.environ, "PYTHONPATH": str(REPO), "SPARK_GRAFT_NATIVE": "1"},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert r.returncode == 0, r.stderr
+    lib_none, reason = json.loads(r.stdout.strip().splitlines()[-1])
+    assert lib_none
+    assert reason.startswith("native stats disagree with numpy")
+    assert "std (n=20011)" in reason and "mean" not in reason
+    assert r.stderr.count("native kernel unavailable") == 1

@@ -184,7 +184,7 @@ def test_aoi_csv_rows(spark, small_ndvi):
 
 
 def test_image_metadata_plumbing(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import image_metadata
+    from media_codecs.multimodal import image_metadata
 
     df = spark.createDataFrame(
         [("a", bytearray(b"fake-image-bytes-01")), ("bad", bytearray(b"xx"))],
@@ -199,7 +199,7 @@ def test_image_metadata_plumbing(spark):
 
 
 def test_video_frame_sample(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import video_frame_sample
+    from media_codecs.multimodal import video_frame_sample
 
     df = spark.createDataFrame([("v1", bytearray(b"fake-video-bytes"))], ["asset_id", "payload"])
     frames = video_frame_sample(df).collect()
@@ -380,7 +380,7 @@ def test_image_metadata_real_png_decode(spark):
     import numpy as np
 
     from azure_workflow_for_kml_satellite_spark.functions.png import encode_png_rgba
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
@@ -460,7 +460,7 @@ def _wav_bytes(rate=8000, channels=1, bits=16, seconds=0.25, freq=440.0):
 def test_jpeg_codec_roundtrip_all_modes():
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import (
+    from media_codecs.jpeg import (
         decode_jpeg,
         encode_jpeg,
     )
@@ -498,7 +498,7 @@ def test_jpeg_progressive_matches_baseline_bit_for_bit():
     this pins every progressive decode path against the sequential codec."""
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import (
+    from media_codecs.jpeg import (
         decode_jpeg,
         encode_jpeg,
         encode_jpeg_progressive,
@@ -543,10 +543,10 @@ def test_jpeg_progressive_matches_baseline_bit_for_bit():
 def test_image_metadata_real_progressive_jpeg(spark):
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import (
+    from media_codecs.jpeg import (
         encode_jpeg_progressive,
     )
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
@@ -564,8 +564,8 @@ def test_image_metadata_real_progressive_jpeg(spark):
 def test_image_metadata_real_jpeg_decode(spark):
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import encode_jpeg
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.jpeg import encode_jpeg
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
@@ -583,7 +583,7 @@ def test_image_metadata_real_jpeg_decode(spark):
 
 
 def test_audio_metadata_real_wav_parse(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         audio_metadata,
     )
 
@@ -627,8 +627,8 @@ def _mjpeg_avi_bytes(frames, us_per_frame=100_000):
 def test_video_frame_sample_real_mjpeg_avi(spark):
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import encode_jpeg
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.jpeg import encode_jpeg
+    from media_codecs.multimodal import (
         video_frame_sample,
     )
 
@@ -723,7 +723,7 @@ def test_streaming_dedup_evicts_state_and_reemits_late_duplicate(spark, tmp_path
 
 
 def test_video_frame_sample_quarantines_corrupt_avi(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         video_frame_sample,
     )
 
@@ -918,11 +918,11 @@ def _mp4_bytes(frames, delta_ms=100, codec=b"jpeg", chunk_size=3, timescale=1000
 def test_video_frame_sample_real_mp4(spark):
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import (
+    from media_codecs.jpeg import (
         decode_jpeg,
         encode_jpeg,
     )
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _phash,
         video_frame_sample,
     )
@@ -960,7 +960,7 @@ def test_video_frame_sample_real_mp4(spark):
 def test_audio_metadata_real_mp3_ogg(spark):
     import struct as s
 
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         audio_metadata,
     )
 
@@ -1036,7 +1036,7 @@ def test_audio_metadata_real_mp3_ogg(spark):
     assert (m.sample_rate, m.channels, m.n_samples) == (44100, 2, 10 * 1152)
     assert m.duration_ms == round(1000 * 10 * 1152 / 44100)
     # round 6: all-zero Layer III payloads are VALID silent frames and now
-    # really decode (functions/mp3.py) — rms is real 0.0, no longer null
+    # really decode (media_codecs/mp3.py) — rms is real 0.0, no longer null
     assert m.rms == 0.0 and m.peak == 0.0 and m.bits_per_sample is None
     v = out["ogg"]
     assert (v.sample_rate, v.channels, v.n_samples, v.duration_ms) == (44100, 2, 22050, 500)
@@ -1088,11 +1088,11 @@ def _mkv_bytes(frames, delta_ms=100, codec=b"V_MJPEG", timescale=1_000_000,
 def test_video_frame_sample_real_mkv(spark):
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import (
+    from media_codecs.jpeg import (
         decode_jpeg,
         encode_jpeg,
     )
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _phash,
         video_frame_sample,
     )
@@ -1126,7 +1126,7 @@ def test_video_frame_sample_real_mkv(spark):
 def test_audio_metadata_real_flac(spark):
     import struct as s
 
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         audio_metadata,
     )
 
@@ -1152,8 +1152,8 @@ def test_image_metadata_real_gif_and_png_variants(spark):
 
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.gif import encode_gif
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.gif import encode_gif
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
@@ -1192,11 +1192,11 @@ def test_image_metadata_real_gif_and_png_variants(spark):
 def test_video_frame_sample_animated_gif(spark):
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.gif import (
+    from media_codecs.gif import (
         decode_gif_frames,
         encode_gif,
     )
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _phash,
         video_frame_sample,
     )
@@ -1226,8 +1226,8 @@ def test_video_frame_sample_no_partial_rows_on_mid_decode_failure(spark):
     quarantine row — never partial success rows beside an error row."""
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import encode_jpeg
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.jpeg import encode_jpeg
+    from media_codecs.multimodal import (
         video_frame_sample,
     )
 
@@ -1253,7 +1253,7 @@ def test_jpeg_12bit_extended_sequential_decodes():
     encodings of the same image agree."""
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions import jpeg as J
+    from media_codecs import jpeg as J
 
     yy, xx = np.mgrid[0:40, 0:56]
     img12 = (2048 + 1800 * np.sin(xx / 9.0) * np.cos(yy / 7.0)).astype(np.uint16)
@@ -1321,14 +1321,12 @@ def test_image_thumbnails_resize_op(spark):
     quarantine."""
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.png import (
-        decode_png_any,
-        encode_png_rgba,
-    )
-    from azure_workflow_for_kml_satellite_spark.functions.vp8l import (
+    from azure_workflow_for_kml_satellite_spark.functions.png import encode_png_rgba
+    from media_codecs.png_any import decode_png_any
+    from media_codecs.vp8l import (
         encode_webp_lossless,
     )
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _resize_bilinear_u8,
         image_thumbnails,
     )
@@ -1448,11 +1446,9 @@ def test_image_thumbnails_gray_alpha_quarantine_not_crash(spark):
 
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.png import (
-        decode_png_any,
-        encode_png_rgba,
-    )
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from azure_workflow_for_kml_satellite_spark.functions.png import encode_png_rgba
+    from media_codecs.png_any import decode_png_any
+    from media_codecs.multimodal import (
         image_thumbnails,
     )
 
@@ -1502,7 +1498,7 @@ def test_gif_anim_disposal_methods_composite():
     test_animated_webp_demux_and_compositing."""
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.gif import (
+    from media_codecs.gif import (
         decode_gif,
         decode_gif_frames,
         encode_gif_anim,
@@ -1557,12 +1553,12 @@ def test_synth_animated_assets_first_frame_composite():
     here at the pixel level (including the subrect-RGBA gif path)."""
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.gif import (
+    from media_codecs.gif import (
         decode_gif,
         encode_gif_anim,
     )
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_webp
-    from azure_workflow_for_kml_satellite_spark.sources import synth
+    from media_codecs.webimage import decode_webp
+    from media_codecs import synth_media as synth
 
     seen_rgb = seen_rgba = False
     for i in range(synth.IMAGE_COUNT):
@@ -1625,7 +1621,7 @@ def test_ogg_page_crc_and_header_strictness():
     each valid stream must parse."""
     import pytest
 
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _parse_ogg,
     )
 
@@ -1676,7 +1672,7 @@ def test_ogg_hostile_fuzz_decode_or_valueerror():
     audio_metadata quarantine contract)."""
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _parse_ogg,
     )
 

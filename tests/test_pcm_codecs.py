@@ -1,4 +1,4 @@
-"""G.711 A-law/µ-law + IMA ADPCM codecs (functions/pcm_codecs.py) and their
+"""G.711 A-law/µ-law + IMA ADPCM codecs (media_codecs/pcm_codecs.py) and their
 WAVE integration (formats 6/7/0x11 in audio_metadata's _parse_wav)."""
 
 from __future__ import annotations
@@ -7,8 +7,8 @@ import struct
 
 import numpy as np
 
-from azure_workflow_for_kml_satellite_spark.functions import pcm_codecs as PC
-from azure_workflow_for_kml_satellite_spark.operators.multimodal import _parse_wav
+from media_codecs import pcm_codecs as PC
+from media_codecs.multimodal import _parse_wav
 
 
 def test_g711_anchor_values():

@@ -117,7 +117,7 @@ def _fuzz_roundtrip(decode, blob, n_mutations, rng):
 @settings(max_examples=1, deadline=None)
 @given(st.integers(0, 0))
 def test_fuzz_gif_decoder_never_crashes(_):
-    from azure_workflow_for_kml_satellite_spark.functions.gif import (
+    from media_codecs.gif import (
         decode_gif,
         encode_gif,
     )
@@ -132,7 +132,7 @@ def test_fuzz_gif_decoder_never_crashes(_):
 @settings(max_examples=1, deadline=None)
 @given(st.integers(0, 0))
 def test_fuzz_jpeg_decoder_never_crashes(_):
-    from azure_workflow_for_kml_satellite_spark.functions.jpeg import (
+    from media_codecs.jpeg import (
         decode_jpeg,
         encode_jpeg,
         encode_jpeg_progressive,
@@ -147,10 +147,8 @@ def test_fuzz_jpeg_decoder_never_crashes(_):
 @settings(max_examples=1, deadline=None)
 @given(st.integers(0, 0))
 def test_fuzz_png_any_decoder_never_crashes(_):
-    from azure_workflow_for_kml_satellite_spark.functions.png import (
-        decode_png_any,
-        encode_png_rgba,
-    )
+    from azure_workflow_for_kml_satellite_spark.functions.png import encode_png_rgba
+    from media_codecs.png_any import decode_png_any
 
     rng = np.random.default_rng(44)
     img = rng.integers(0, 256, (20, 20, 4), dtype=np.uint8)
@@ -160,14 +158,14 @@ def test_fuzz_png_any_decoder_never_crashes(_):
 @settings(max_examples=1, deadline=None)
 @given(st.integers(0, 0))
 def test_fuzz_container_parsers_never_crash(_):
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+    from media_codecs.webimage import (
         decode_bmp,
         decode_ico,
         decode_tiff,
         svg_dimensions,
         webp_dimensions,
     )
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _parse_aiff,
         _parse_flac,
         _parse_mjpeg_avi,
@@ -278,8 +276,8 @@ def test_fuzz_flac_frame_decoder_never_crashes(_):
     """Mutated REAL FLAC streams (with audio frames, both stereo modes)
     must either parse or raise a clean decode error — the frame decoder's
     bit reader, rice/LPC paths and CRC checks all bounds-check."""
-    from azure_workflow_for_kml_satellite_spark.functions.flac import encode_flac
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.flac import encode_flac
+    from media_codecs.multimodal import (
         _parse_flac,
     )
 
@@ -296,10 +294,10 @@ def test_fuzz_flac_frame_decoder_never_crashes(_):
 @settings(max_examples=1, deadline=None)
 @given(st.integers(0, 0))
 def test_fuzz_vp8l_decoder_never_crashes(_):
-    from azure_workflow_for_kml_satellite_spark.functions.vp8l import (
+    from media_codecs.vp8l import (
         encode_webp_lossless,
     )
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_webp
+    from media_codecs.webimage import decode_webp
 
     rng = np.random.default_rng(47)
     img = rng.integers(0, 256, (24, 16, 4), dtype=np.uint8)
@@ -313,8 +311,8 @@ def test_fuzz_compressed_wav_parsers_never_crash(_):
     clean decode error."""
     import struct as _s
 
-    from azure_workflow_for_kml_satellite_spark.functions import pcm_codecs as PC
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import _parse_wav
+    from media_codecs import pcm_codecs as PC
+    from media_codecs.multimodal import _parse_wav
 
     def wav(fmt, channels, rate, bits, align, payload):
         fb = _s.pack("<HHIIHH", fmt, channels, rate, rate * align, align, bits)

@@ -1,4 +1,4 @@
-"""Vorbis I codec tests (functions/vorbis.py) — tiered like test_mp3:
+"""Vorbis I codec tests (media_codecs/vorbis.py) — tiered like test_mp3:
 spec-constant pins, transform round-trip identity, encoder→decoder
 goldens against analytic sine statistics, window-transition and
 silent-frame path coverage, EOP legality, and hostile-input fuzz.
@@ -13,12 +13,12 @@ import struct
 import numpy as np
 import pytest
 
-from azure_workflow_for_kml_satellite_spark.functions import vorbis as V
+from media_codecs import vorbis as V
 
 
 def _packets_of(data: bytes):
     """Minimal Ogg lacing walk (the engine's full demuxer with CRC checks
-    lives in operators/multimodal._parse_ogg and has its own tests)."""
+    lives in media_codecs/multimodal._parse_ogg and has its own tests)."""
     pos = 0
     packets = []
     cur = bytearray()
@@ -278,11 +278,11 @@ def test_fuzz_random_setup_headers_never_crash():
             pass
 
 
-# ── container integration (operators/multimodal) ───────────────────────────
+# ── container integration (media_codecs/multimodal) ───────────────────────────
 
 
 def test_parse_ogg_emits_real_vorbis_sample_stats():
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _parse_ogg,
     )
 
@@ -355,7 +355,7 @@ def test_roundtrip_coupled_stereo():
 
 
 def test_parse_ogg_stereo_stats():
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         _parse_ogg,
     )
 

@@ -1,4 +1,4 @@
-"""VP8 (lossy WebP) keyframe decoder tests — functions/vp8.py.
+"""VP8 (lossy WebP) keyframe decoder tests — media_codecs/vp8.py.
 
 Three gates:
 1. An EMBEDDED golden: a libwebp-encoded WebP committed as base64 with the
@@ -21,8 +21,8 @@ import struct
 import numpy as np
 import pytest
 
-from azure_workflow_for_kml_satellite_spark.functions import vp8
-from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+from media_codecs import vp8
+from media_codecs.webimage import (
     decode_webp,
     decode_webp_luma,
 )
@@ -176,7 +176,7 @@ def test_hostile_dimensions_rejected():
 def test_image_metadata_real_vp8_decode(spark):
     """The driver-facing surface: lossy-WebP rows now carry REAL pixel
     stats (round-4 verdict item 3 closed)."""
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
@@ -230,7 +230,7 @@ def test_lossless_code_length_order_golden():
     encoded lossless stream uses code-length symbol 16 at order position 8
     (WebP's order is 17,18,0,1,2,3,4,5,16,6,...), which the old DEFLATE-
     like ordering misparsed on EVERY nontrivial real-world stream."""
-    from azure_workflow_for_kml_satellite_spark.functions.vp8l import decode_vp8l
+    from media_codecs.vp8l import decode_vp8l
 
     import numpy as np
 
@@ -316,7 +316,7 @@ def _mux_anim(canvas_wh, frames):
     out += _chunk(b"ANIM", bytes([0, 0, 0, 0]) + (0).to_bytes(2, "little"))
     for x, y, dur, flags, still in frames:
         sub = still[12:]  # strip RIFF....WEBP, keep the image chunks
-        from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+        from media_codecs.webimage import (
             webp_dimensions,
         )
 
@@ -339,10 +339,10 @@ def test_animated_webp_demux_and_compositing():
     self-muxed container (no system muxer exists here), frames placed at
     offsets, overwrite vs alpha-blend vs dispose-to-background all
     asserted analytically."""
-    from azure_workflow_for_kml_satellite_spark.functions.vp8l import (
+    from media_codecs.vp8l import (
         encode_webp_lossless,
     )
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+    from media_codecs.webimage import (
         decode_webp,
         decode_webp_frames,
     )
@@ -411,10 +411,10 @@ def test_animated_webp_demux_and_compositing():
 def test_image_metadata_animated_webp(spark):
     """Animated WebP payloads flow through image_metadata via the
     first-composited-frame view (same convention as animated GIF)."""
-    from azure_workflow_for_kml_satellite_spark.functions.vp8l import (
+    from media_codecs.vp8l import (
         encode_webp_lossless,
     )
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         image_metadata,
         image_thumbnails,
     )
@@ -440,7 +440,7 @@ def test_alpha_unfilter_vectorized_matches_per_pixel_reference():
     every method, including 1-wide / 1-tall edge shapes."""
     import numpy as np
 
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+    from media_codecs.webimage import (
         _alpha_unfilter,
     )
 

@@ -1,4 +1,4 @@
-"""WebP lossless (functions/vp8l.py) — distance-map derivation pinned to
+"""WebP lossless (media_codecs/vp8l.py) — distance-map derivation pinned to
 the spec's listed prefix, encoder-decoder round trips, and hand-crafted
 bitstreams exercising every decoder path our subset encoder does not emit:
 all four transforms, the color cache, and LZ77 backward references."""
@@ -8,8 +8,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from azure_workflow_for_kml_satellite_spark.functions import vp8l as V
-from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_webp
+from media_codecs import vp8l as V
+from media_codecs.webimage import decode_webp
 
 # first 60 entries as listed in the published VP8L specification §4.2.2
 _SPEC_PREFIX = [
@@ -249,7 +249,7 @@ def test_corrupt_inputs_raise_cleanly():
 
 
 def test_image_metadata_decodes_vp8l(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
@@ -267,7 +267,7 @@ def test_image_metadata_decodes_vp8l(spark):
     assert rows["l"].width == 18 and rows["l"].height == 24 and rows["l"].channels == 4
     # same precision/expression as every other format's generic path
     assert rows["l"].mean_luma == round(float(img.mean()), 4)
-    # lossy VP8 rows now decode for real too (round-5: functions/vp8.py)
+    # lossy VP8 rows now decode for real too (round-5: media_codecs/vp8.py)
     assert rows["y"].decode_error is None
     assert rows["y"].width == 56 and rows["y"].height == 40
     assert rows["y"].mean_luma is not None and rows["y"].phash is not None

@@ -25,9 +25,9 @@ def _make_png(w, h, depth, ctype, raw_rows, interlace=0, plte=None, trns=None):
 def test_png_any_matches_strict_on_rgba():
     from azure_workflow_for_kml_satellite_spark.functions.png import (
         decode_png,
-        decode_png_any,
         encode_png_rgba,
     )
+    from media_codecs.png_any import decode_png_any
 
     img = np.random.default_rng(5).integers(0, 256, (23, 31, 4), dtype=np.uint8)
     enc = encode_png_rgba(img)
@@ -37,7 +37,7 @@ def test_png_any_matches_strict_on_rgba():
 
 
 def test_png_any_gray_palette_lowdepth_16bit():
-    from azure_workflow_for_kml_satellite_spark.functions.png import decode_png_any
+    from media_codecs.png_any import decode_png_any
 
     rng = np.random.default_rng(5)
     # grayscale 8-bit
@@ -80,10 +80,7 @@ def test_png_any_gray_palette_lowdepth_16bit():
 
 
 def test_png_any_adam7_equals_progressive_assembly():
-    from azure_workflow_for_kml_satellite_spark.functions.png import (
-        _ADAM7,
-        decode_png_any,
-    )
+    from media_codecs.png_any import _ADAM7, decode_png_any
 
     rng = np.random.default_rng(5)
     for h, w in ((21, 17), (8, 8), (1, 1), (3, 9), (16, 2)):
@@ -99,14 +96,14 @@ def test_png_any_adam7_equals_progressive_assembly():
 
 
 def test_png_any_rejects_corrupt():
-    from azure_workflow_for_kml_satellite_spark.functions.png import decode_png_any
+    from media_codecs.png_any import decode_png_any
 
     assert decode_png_any(b"\x89PNG\r\n\x1a\n" + b"junk") is None
     assert decode_png_any(_make_png(6, 4, 16, 2, b"short")) is None
 
 
 def test_gif_lzw_roundtrip_growth_and_clear():
-    from azure_workflow_for_kml_satellite_spark.functions.gif import (
+    from media_codecs.gif import (
         _lzw_decode,
         _lzw_encode,
     )
@@ -119,7 +116,7 @@ def test_gif_lzw_roundtrip_growth_and_clear():
 
 
 def test_gif_roundtrip_interlace_transparency_animation():
-    from azure_workflow_for_kml_satellite_spark.functions.gif import (
+    from media_codecs.gif import (
         decode_gif,
         decode_gif_frames,
         encode_gif,
@@ -148,7 +145,7 @@ def test_gif_roundtrip_interlace_transparency_animation():
 def test_gif_rejects_corrupt():
     import pytest
 
-    from azure_workflow_for_kml_satellite_spark.functions.gif import (
+    from media_codecs.gif import (
         decode_gif,
         encode_gif,
     )
@@ -175,7 +172,7 @@ def _bmp_bytes(img, top_down=False):
 
 
 def test_bmp_decode_variants():
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_bmp
+    from media_codecs.webimage import decode_bmp
 
     rng = np.random.default_rng(9)
     img = rng.integers(0, 256, (13, 10, 3), dtype=np.uint8)
@@ -201,7 +198,7 @@ def test_bmp_decode_variants():
 def test_webp_header_parse():
     import pytest
 
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+    from media_codecs.webimage import (
         webp_dimensions,
     )
 
@@ -226,7 +223,7 @@ def test_webp_header_parse():
 
 
 def test_image_metadata_bmp_webp(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
@@ -255,7 +252,7 @@ def test_gif_decodes_published_spec_vector():
     PIL/browsers). Pins the LZW code-width boundary to the spec — a
     self-round-tripping codec pair with a shared off-by-one would fail
     this."""
-    from azure_workflow_for_kml_satellite_spark.functions.gif import (
+    from media_codecs.gif import (
         _lzw_decode,
         decode_gif,
     )
@@ -358,7 +355,7 @@ def _make_tiff(img, endian="<", comp=1, rps=None, pred=1, photo=None):
 def test_tiff_decode_variants():
     import pytest
 
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_tiff
+    from media_codecs.webimage import decode_tiff
 
     rng = np.random.default_rng(21)
     rgb = rng.integers(0, 256, (13, 9, 3), dtype=np.uint8)
@@ -377,7 +374,7 @@ def test_tiff_decode_variants():
 
 
 def test_tiff_packbits_roundtrip():
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import _packbits
+    from media_codecs.webimage import _packbits
 
     # literal + repeat runs + no-op byte
     enc = bytes([2, 10, 20, 30]) + bytes([257 - 5, 7]) + bytes([128]) + bytes([0, 9])
@@ -385,7 +382,7 @@ def test_tiff_packbits_roundtrip():
 
 
 def test_image_metadata_real_tiff(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
@@ -409,7 +406,7 @@ def _ext80(rate):
 
 
 def test_audio_metadata_real_aiff(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         audio_metadata,
     )
 
@@ -460,7 +457,7 @@ def test_ico_decode_png_and_dib_entries():
     import pytest
 
     from azure_workflow_for_kml_satellite_spark.functions.png import encode_png_rgba
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import decode_ico
+    from media_codecs.webimage import decode_ico
 
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, (32, 32, 4), dtype=np.uint8)
@@ -480,7 +477,7 @@ def test_ico_decode_png_and_dib_entries():
 def test_svg_dimensions_parse():
     import pytest
 
-    from azure_workflow_for_kml_satellite_spark.functions.webimage import (
+    from media_codecs.webimage import (
         svg_dimensions,
     )
 
@@ -494,7 +491,7 @@ def test_svg_dimensions_parse():
 
 def test_image_metadata_ico_svg(spark):
     from azure_workflow_for_kml_satellite_spark.functions.png import encode_png_rgba
-    from azure_workflow_for_kml_satellite_spark.operators.multimodal import (
+    from media_codecs.multimodal import (
         image_metadata,
     )
 
