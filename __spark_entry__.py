@@ -307,20 +307,6 @@ def _q_cluster(spark, sf_dir):
     )
 
 
-def _q_cluster_star(spark, sf_dir):
-    """J9 through the O(log n) star-contraction CC (shared with the dedup
-    pipeline) — provably the same min-key labelling as cluster_aois, so it
-    shares q_cluster's union-find oracle."""
-    from azure_workflow_for_kml_satellite_spark.operators.cluster import (
-        cluster_aois_star,
-    )
-
-    aois = build_aois(spark, engine_dir(sf_dir))
-    return cluster_aois_star(aois).select(
-        "url", F.col("feature_index").cast("long").alias("feature_index"), "cluster_key"
-    )
-
-
 def _q_wdpa_overlap(spark, sf_dir):
     from azure_workflow_for_kml_satellite_spark.operators.pip import wdpa_overlap
 
@@ -777,20 +763,6 @@ def _q_dedup_clusters(spark, sf_dir):
     return near_dup_clusters(docs, minhash_lsh_pairs(docs, threshold=0.5))
 
 
-def _q_dedup_clusters_star(spark, sf_dir):
-    """O(log n)-round star-contraction CC over the same near-dup pairs —
-    the labelling contract (component-min keeper) is identical to min-label
-    propagation, so it shares q_dedup_clusters' independent union-find
-    oracle."""
-    from azure_workflow_for_kml_satellite_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        near_dup_clusters_star,
-    )
-
-    docs = _docs(spark, sf_dir)
-    return near_dup_clusters_star(docs, minhash_lsh_pairs(docs, threshold=0.5))
-
-
 def _q_simhash_pairs(spark, sf_dir):
     from azure_workflow_for_kml_satellite_spark.operators.dedup import (
         simhash_hamming_pairs,
@@ -1241,9 +1213,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # oracle-sharing twins (same oracle SQL as their base query) and
     # multi-round-green trivial queries sit past the 50-entry window.
     return {
-        # — round 7 rotation (VERDICT r6 task 3): the 13 queries with no
+        # — round 7 rotation (VERDICT r6 task 3): the 12 queries with no
         # driver row since r2-r5 (ANN trio, streaming pair, pricing pair,
-        # cell/tile/knn-cells/capped/star variants, exact-cosine baseline)
+        # cell/tile/knn-cells/capped variants, exact-cosine baseline)
         # rotate back INTO the window. Out: the r5+r6 consecutive-green
         # decode/text entries plus the r3+r6 export queries — all stay
         # covered every round by the full-set local gate (make gate) and
@@ -1262,7 +1234,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_tile_assignment": _q_tile_assignment,
         "q_knn_gauges_cells": _q_knn_gauges_cells,
         "q_ngram_jaccard_capped": _q_ngram_jaccard_capped,
-        "q_dedup_clusters_star": _q_dedup_clusters_star,
         # — previously green (CORRECTNESS_r03 + r6) —
         "q_extract_features": _q_extract_features,
         "q_quarantine": _q_quarantine,
@@ -1300,12 +1271,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_coord_text": _q_coord_text,
         "q_geojson": _q_geojson,
         "q_frame_csv": _q_frame_csv,
+        "q_aoi_csv": _q_aoi_csv,
         # ── entries below are PAST the driver's 50-query window ──
         # r5+r6 (decode/text block) and r3+r6 (exports) consecutive-green
         # queries rotated out; the full-set local gate
         # (scripts/check_correctness.py --exact) keeps covering all of
         # them every round, plus their pytest goldens.
-        "q_aoi_csv": _q_aoi_csv,
         "q_page_text": _q_page_text,
         "q_coord_csv": _q_coord_csv,
         "q_dedup_exact": _q_dedup_exact,
@@ -1314,7 +1285,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_simhash": _q_simhash,
         "q_sample_hash": _q_sample_hash,
         "q_fingerprint": _q_fingerprint,
-        "q_cluster_star": _q_cluster_star,
     }
 
 
@@ -1423,8 +1393,6 @@ def oracle_sql() -> dict[str, str]:
     sql["q_cluster"] = (
         f"SELECT url, feature_index, cluster_key FROM read_parquet('{_E}/expected/clusters.parquet')"
     )
-    # star-contraction CC provably produces the same min-key labelling
-    sql["q_cluster_star"] = sql["q_cluster"]
     sql["q_wdpa_overlap"] = (
         "SELECT url, feature_index, wdpa_id, pa_name, designation, iucn_category "
         f"FROM read_parquet('{_E}/expected/wdpa_overlap.parquet')"
@@ -1652,9 +1620,6 @@ def oracle_sql() -> dict[str, str]:
         "SELECT doc_id, cluster_id "
         f"FROM read_parquet('{_E}/expected/dedup_clusters.parquet')"
     )
-    # star contraction computes the same component-min labelling, so the
-    # same independent union-find expected table is its oracle
-    sql["q_dedup_clusters_star"] = sql["q_dedup_clusters"]
     sql["q_sample_hash"] = (
         "SELECT doc_id, lang, n_chars "
         f"FROM read_parquet('{_E}/expected/sample_hash.parquet')"

@@ -8,11 +8,12 @@ The reference does O(n²) haversine pairs + union-find single-linkage
    whose cells are ≥ eps everywhere (complete candidate generation,
    functions/cells.res_for_eps_km), with ``key_a < key_b`` and an exact
    haversine ≤ eps refinement;
-2. connected components via iterative **label propagation** (min-label
-   spread along edges until fixpoint) — the standard Spark CC loop; the
-   cluster label is the lexicographic min (url, feature_index) of the
-   component, giving a deterministic labelling the sequential oracle
-   reproduces with union-find.
+2. connected components via the engine's one CC step,
+   operators/dedup.near_dup_clusters (large-star/small-star contraction,
+   O(log n) rounds, raises on non-convergence); the cluster label is the
+   lexicographic min (url, feature_index) key of the component, giving a
+   deterministic labelling the sequential oracle reproduces with
+   union-find.
 """
 
 from __future__ import annotations
@@ -21,17 +22,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from azure_workflow_for_kml_satellite_spark.constants import DEFAULT_CLUSTER_EPS_KM
 from azure_workflow_for_kml_satellite_spark.functions.cells import res_for_eps_km
-
-_R_KM = 6371.0
-
-
-def _haversine_km_expr(lon1, lat1, lon2, lat2):
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = F.pow(F.sin(dlat / 2), 2) + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.pow(
-        F.sin(dlon / 2), 2
-    )
-    return F.lit(2 * _R_KM) * F.atan2(F.sqrt(a), F.sqrt(F.lit(1.0) - a))
+from azure_workflow_for_kml_satellite_spark.operators.dedup import near_dup_clusters
+from azure_workflow_for_kml_satellite_spark.operators.knn import _hav_km
 
 
 def _cell_parts(res: int, lon_col, lat_col):
@@ -72,90 +64,24 @@ def candidate_edges(aois: DataFrame, eps_km: float = DEFAULT_CLUSTER_EPS_KM) -> 
         F.col("iy").alias("jy"),
     )
     pairs = left.join(right, ["jx", "jy"]).filter(F.col("key_a") < F.col("key_b"))
-    dist = _haversine_km_expr(F.col("lon_a"), F.col("lat_a"), F.col("lon_b"), F.col("lat_b"))
+    dist = _hav_km(F.col("lon_a"), F.col("lat_a"), F.col("lon_b"), F.col("lat_b"))
     return pairs.filter(dist <= F.lit(eps_km)).select("key_a", "key_b")
 
 
 def cluster_aois(
     aois: DataFrame,
     eps_km: float = DEFAULT_CLUSTER_EPS_KM,
-    max_iter: int = 50,
-) -> DataFrame:
-    """(url, feature_index, cluster_key) — cluster_key = min member key."""
-    pts = aois.select(
-        "url",
-        "feature_index",
-        F.col("dedup_key").alias("key"),
-    ).cache()
-    edges = candidate_edges(aois, eps_km)
-    # undirected adjacency (both directions) for propagation
-    adj = edges.union(
-        edges.select(F.col("key_b").alias("key_a"), F.col("key_a").alias("key_b"))
-    ).cache()
-
-    labels = pts.select("key", F.col("key").alias("label"))
-    for _ in range(max_iter):
-        # min label among self and neighbors
-        neighbor_labels = (
-            adj.join(labels, adj.key_b == labels.key, "inner")
-            .select(F.col("key_a").alias("key"), "label")
-        )
-        new_labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("key")
-            .agg(F.min("label").alias("label"))
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            labels.alias("o")
-            .join(new_labels.alias("n"), "key")
-            .filter(F.col("o.label") != F.col("n.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # same contract as dedup.near_dup_clusters: never return a wrong
-        # labelling silently when a component's diameter exceeds the
-        # iteration budget — callers raise max_iter or use the O(log n)
-        # cluster_aois_star path
-        raise RuntimeError(
-            f"label propagation did not converge in {max_iter} rounds; "
-            "use cluster_aois_star for long-chained components"
-        )
-
-    return pts.join(labels, "key").select(
-        "url", "feature_index", F.col("label").alias("cluster_key")
-    )
-
-
-def cluster_aois_star(
-    aois: DataFrame,
-    eps_km: float = DEFAULT_CLUSTER_EPS_KM,
     max_rounds: int = 24,
 ) -> DataFrame:
-    """J9's 100 TB operating point: identical candidate edges and the same
-    min-key labelling contract as ``cluster_aois``, but connected
-    components run through the alternating large-star/small-star
-    contraction shared with the text-dedup pipeline
-    (operators/dedup.near_dup_clusters_star — Kiveris et al.), converging
-    in O(log n) rounds instead of O(component diameter): the right choice
-    when ε-chains of AOIs are long (parcel strips, river corridors). The
-    contraction only uses ordering and min over keys, so it applies to the
-    string (url:feature_index) keys unchanged."""
-    from azure_workflow_for_kml_satellite_spark.operators.dedup import (
-        near_dup_clusters_star,
-    )
-
+    """(url, feature_index, cluster_key) — cluster_key = min member key.
+    The contraction only uses ordering and min over keys, so it applies to
+    the string (url:feature_index) keys unchanged; ``max_rounds`` is its
+    round budget (RuntimeError when exceeded)."""
     pts = aois.select("url", "feature_index", F.col("dedup_key").alias("key"))
     edges = candidate_edges(aois, eps_km).select(
         F.col("key_a").alias("id_a"), F.col("key_b").alias("id_b")
     )
-    labels = near_dup_clusters_star(
-        pts.select(F.col("key").alias("doc_id")), edges, max_rounds
-    )
+    labels = near_dup_clusters(pts.select(F.col("key").alias("doc_id")), edges, max_rounds)
     return pts.join(labels, pts.key == labels.doc_id).select(
         "url", "feature_index", F.col("cluster_id").alias("cluster_key")
     )

@@ -246,85 +246,24 @@ def simhash(documents: DataFrame, bits: int = 64) -> DataFrame:
 
 
 def near_dup_clusters(
-    documents: DataFrame, pairs: DataFrame, max_iter: int = 20
+    documents: DataFrame, pairs: DataFrame, max_rounds: int = 24
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id) with
     cluster_id = the smallest doc_id in the component (the canonical
-    'keeper'); singletons label themselves.
+    'keeper'); singletons label themselves. The engine's one CC step: J9's
+    AOI clustering (operators/cluster.cluster_aois) runs through it too.
 
-    Iterative min-label propagation: each round every vertex takes the min
-    label among itself and its neighbours (one shuffle join per round over
-    (edge, label) — the standard Spark shape for CC; rounds needed =
-    graph diameter, which for near-dup clusters is tiny). Convergence is
-    detected with a changed-row count; if a pathological chain is still
-    changing after ``max_iter`` rounds the function RAISES rather than
-    silently returning partially-propagated (wrong) labels.
+    Precondition: every ``id_a``/``id_b`` in ``pairs`` is a ``doc_id`` of
+    ``documents``. A foreign id would become an edge node and could bridge
+    two components. ``minhash_lsh_pairs(documents)`` and
+    ``cluster.candidate_edges(aois)`` only emit ids of their input.
 
-    Lineage is cut each round: with a configured checkpoint dir
-    (``spark.sparkContext.setCheckpointDir``) a RELIABLE ``checkpoint()`` is
-    written — on a real cluster an executor loss mid-CC then recovers from
-    the checkpoint store instead of killing the job, which is what
-    ``localCheckpoint`` (executor-storage-pinned) cannot survive; without a
-    checkpoint dir the local variant is the fallback.
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
-    labels = documents.select(
-        F.col("doc_id"), F.col("doc_id").alias("cluster_id")
-    )
-    sc = documents.sparkSession.sparkContext
-    reliable = sc.getCheckpointDir() is not None
-    changed = 0
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("n_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("n_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-        )
-        # cut lineage growth each round (reliable when a checkpoint dir is set)
-        if reliable:
-            new_labels = new_labels.checkpoint(eager=True)
-        else:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed:
-        raise RuntimeError(
-            f"near_dup_clusters did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — raise max_iter; returning "
-            "truncated labels would be silently wrong"
-        )
-    return labels
-
-
-def near_dup_clusters_star(
-    documents: DataFrame, pairs: DataFrame, max_rounds: int = 24
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — same output contract as ``near_dup_clusters`` (cluster_id =
-    min doc_id of the component, singletons label themselves) but converges
-    in O(log n) rounds instead of O(graph diameter): the 100 TB choice when
-    near-dup chains can be long (boilerplate ladders, template families).
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014): converges
+    in O(log n) rounds instead of O(graph diameter), so long near-dup
+    chains (boilerplate ladders, template families) and long ε-chains of
+    AOIs (parcel strips, river corridors) cost no more rounds than short
+    ones.
 
     Each round is two grouped aggregations over the edge set:
     - large-star: every node's strictly-larger neighbours re-link to the
@@ -338,6 +277,11 @@ def near_dup_clusters_star(
     non-convergence within ``max_rounds`` raises rather than returning wrong
     labels (the paper's bound is O(log² n) rounds worst case, O(log n)
     typical; 24 double-rounds covers graphs far beyond 10¹² nodes).
+
+    Lineage is cut each round: with a configured checkpoint dir
+    (``spark.sparkContext.setCheckpointDir``) a RELIABLE ``checkpoint()`` is
+    written, so an executor loss mid-CC recovers from the checkpoint store;
+    without one ``localCheckpoint`` is the fallback.
     """
     spark = documents.sparkSession
     reliable = spark.sparkContext.getCheckpointDir() is not None
@@ -397,7 +341,7 @@ def near_dup_clusters_star(
         edges, n_edges = new_edges, n_new
     else:
         raise RuntimeError(
-            f"near_dup_clusters_star did not converge in {max_rounds} rounds"
+            f"near_dup_clusters did not converge in {max_rounds} rounds"
         )
     labels = edges.groupBy("v").agg(F.min("u").alias("root"))
     return (

@@ -11,17 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from azure_workflow_for_kml_satellite_spark.constants import MULTI_REGION_THRESHOLD_KM
-
-_R_KM = 6371.0
-
-
-def _hav(lon1, lat1, lon2, lat2):
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = F.pow(F.sin(dlat / 2), 2) + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.pow(
-        F.sin(dlon / 2), 2
-    )
-    return F.lit(2 * _R_KM) * F.atan2(F.sqrt(a), F.sqrt(F.lit(1.0) - a))
+from azure_workflow_for_kml_satellite_spark.operators.knn import _R_KM, _hav_km
 
 
 def _hav_py(lon1: float, lat1: float, lon2: float, lat2: float) -> float:
@@ -100,7 +90,7 @@ def is_multi_region(aois: DataFrame, threshold_km: float = MULTI_REGION_THRESHOL
         b = c.select(F.col("centroid_lon").alias("x2"), F.col("centroid_lat").alias("y2"))
         mx = (
             a.crossJoin(b)
-            .agg(F.max(_hav(F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"))).alias("m"))
+            .agg(F.max(_hav_km(F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"))).alias("m"))
             .collect()[0]["m"]
         )
         return bool(mx > threshold_km)
@@ -185,7 +175,7 @@ def is_multi_region(aois: DataFrame, threshold_km: float = MULTI_REGION_THRESHOL
     b = amb.select(F.col("centroid_lon").alias("x2"), F.col("centroid_lat").alias("y2"))
     mx = (
         a.crossJoin(b)
-        .agg(F.max(_hav(F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"))).alias("m"))
+        .agg(F.max(_hav_km(F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"))).alias("m"))
         .collect()[0]["m"]
     )
     return bool(mx is not None and mx > threshold_km)

@@ -37,9 +37,10 @@ _KM_PER_DEG_LAT = math.pi * _R_KM / 180.0  # 111.1949...
 
 
 def _hav_km(lon1, lat1, lon2, lat2):
-    """Haversine (km) as a column expression — the same formula as the
-    clustering/gate operators and the DuckDB oracle (bit-identical doubles
-    from identical inputs)."""
+    """Haversine (km) as a column expression — the one the kNN join, the
+    J9 clustering edges (operators/cluster) and the multi-region gate
+    (operators/gates) all use; the same formula as the DuckDB oracle
+    (bit-identical doubles from identical inputs)."""
     dlat = F.radians(lat2 - lat1)
     dlon = F.radians(lon2 - lon1)
     a = F.pow(F.sin(dlat / 2), 2) + F.cos(F.radians(lat1)) * F.cos(

@@ -187,7 +187,7 @@ def build_expected_text(
     )
 
     # near-dup clusters: independent union-find over the minhash pairs
-    # (the Spark side uses iterative min-label propagation instead)
+    # (the Spark side uses large-star/small-star contraction instead)
     parent = {did: did for did in doc_ids}
 
     def _find(x: int) -> int:

@@ -29,7 +29,6 @@ AUDITED = [
     "q_ngram_jaccard_capped",
     "q_minhash_lsh",
     "q_dedup_clusters",
-    "q_dedup_clusters_star",
     "q_simhash_pairs",
     "q_embed_near_dup_lsh",
     "q_ann_topk",

@@ -15,6 +15,28 @@ def _docs_df(spark, texts):
     )
 
 
+def _union_find_min_labels(nodes, edges):
+    """{node: min node of its connected component} by pure-Python
+    union-find — the independent reference for the Spark CC operator."""
+    parent = {x: x for x in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp_min = {}
+    for x in nodes:
+        r = find(x)
+        comp_min[r] = min(comp_min.get(r, x), x)
+    return {x: comp_min[find(x)] for x in nodes}
+
+
 def _brute_hamming(spark, docs, d):
     from azure_workflow_for_kml_satellite_spark.operators.dedup import simhash
 
@@ -217,7 +239,7 @@ def test_near_dup_clusters_raises_on_nonconvergence(spark):
         [(i, i + 1) for i in range(5)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(docs, chain, max_iter=1)
+        near_dup_clusters(docs, chain, max_rounds=1)
 
 
 def test_near_dup_clusters_reliable_checkpoint(spark, tmp_path):
@@ -386,13 +408,12 @@ def test_portfolio_two_level_fold_parity(spark):
 
 
 def test_near_dup_clusters_star_matches_label_propagation(spark):
-    """Large-star/small-star CC must produce the identical (doc_id →
-    component-min) labelling as min-label propagation, including on a long
-    path (diameter 60 — converges in O(log n) rounds, where propagation
-    needs 60) and on random graphs with singletons."""
+    """Large-star/small-star CC must produce the (doc_id → component-min)
+    labelling of a pure-Python union-find, including on a long path
+    (diameter 60 — converges in O(log n) rounds) and on random graphs with
+    singletons."""
     from azure_workflow_for_kml_satellite_spark.operators.dedup import (
         near_dup_clusters,
-        near_dup_clusters_star,
     )
 
     # long path 0-1-2-...-60 plus a separate triangle and singletons
@@ -401,12 +422,8 @@ def test_near_dup_clusters_star_matches_label_propagation(spark):
     path = [(i, i + 1) for i in range(60)]
     tri = [(63, 64), (64, 65), (65, 63)]
     pairs = spark.createDataFrame(path + tri, "id_a long, id_b long")
-    star = {r.doc_id: r.cluster_id for r in near_dup_clusters_star(docs, pairs).collect()}
-    prop = {
-        r.doc_id: r.cluster_id
-        for r in near_dup_clusters(docs, pairs, max_iter=80).collect()
-    }
-    assert star == prop
+    star = {r.doc_id: r.cluster_id for r in near_dup_clusters(docs, pairs).collect()}
+    assert star == _union_find_min_labels(range(n), path + tri)
     assert star[60] == 0 and star[65] == 63 and star[66] == 66
 
     # randomized union-find cross-check
@@ -414,26 +431,10 @@ def test_near_dup_clusters_star_matches_label_propagation(spark):
     m = 120
     edges = [(rng.randrange(m), rng.randrange(m)) for _ in range(100)]
     edges = [(a, b) for a, b in edges if a != b]
-    parent = list(range(m))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comp_min = {}
-    for i in range(m):
-        r = find(i)
-        comp_min[r] = min(comp_min.get(r, i), i)
-    expected = {i: comp_min[find(i)] for i in range(m)}
+    expected = _union_find_min_labels(range(m), edges)
     docs2 = spark.createDataFrame([(i, f"d{i}") for i in range(m)], "doc_id long, text string")
     pairs2 = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.doc_id: r.cluster_id for r in near_dup_clusters_star(docs2, pairs2).collect()}
+    got = {r.doc_id: r.cluster_id for r in near_dup_clusters(docs2, pairs2).collect()}
     assert got == expected
 
 
@@ -473,7 +474,7 @@ def test_near_dup_clusters_star_logn_on_huge_diameter(spark):
     from pyspark.sql import functions as F
 
     from azure_workflow_for_kml_satellite_spark.operators.dedup import (
-        near_dup_clusters_star,
+        near_dup_clusters,
     )
 
     n = 30_000
@@ -481,7 +482,7 @@ def test_near_dup_clusters_star_logn_on_huge_diameter(spark):
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    labels = near_dup_clusters_star(docs, pairs)  # raises if > 24 rounds
+    labels = near_dup_clusters(docs, pairs)  # raises if > 24 rounds
     agg = labels.agg(
         F.count("*").alias("n"),
         F.min("cluster_id").alias("lo"),

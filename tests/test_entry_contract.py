@@ -35,11 +35,19 @@ def test_queries_oracles_consistent():
         "q_events_hourly", "q_sessionize", "q_pricing_summary",
         "q_top_customers", "q_cell_density", "q_tile_assignment",
         "q_knn_gauges_cells", "q_ngram_jaccard_capped",
-        "q_dedup_clusters_star",
     ):
         assert name in in_window
     for name in ("q_page_text", "q_geojson"):
         assert name in qs  # rotated out but still present + locally gated
+
+
+def test_plan_audit_names_registered_queries():
+    """scripts/explain_audit.py audits queries by name: every audited name
+    must still be a registry entry, or `make plans` fails on a stale one."""
+    from scripts.explain_audit import AUDITED
+
+    missing = [name for name in AUDITED if name not in E.queries()]
+    assert not missing, missing
 
 
 def test_entry_smoke(spark):

@@ -1282,13 +1282,12 @@ def test_jpeg_12bit_extended_sequential_decodes():
 
 
 def test_cluster_star_matches_propagation_and_handles_long_chains(spark):
-    """cluster_aois_star must produce the IDENTICAL labelling as the
-    propagation path, including a 120-AOI chain whose diameter exceeds the
-    propagation loop's default budget-per-round reach."""
-    from azure_workflow_for_kml_satellite_spark.operators.cluster import (
-        cluster_aois,
-        cluster_aois_star,
-    )
+    """cluster_aois must produce the labelling of a pure-Python union-find
+    over the Python-haversine pairs within eps, including a 120-AOI chain
+    (diameter 119), and must raise when its round budget is too small."""
+    from azure_workflow_for_kml_satellite_spark.operators.cluster import cluster_aois
+    from azure_workflow_for_kml_satellite_spark.operators.gates import _hav_py
+    from tests.test_dedup_scale_ops import _union_find_min_labels
 
     # chain of points spaced just under eps (0.5 km) plus isolated points
     rows = []
@@ -1300,18 +1299,25 @@ def test_cluster_star_matches_propagation_and_handles_long_chains(spark):
         rows, "url string, feature_index long, dedup_key string, "
         "centroid_lon double, centroid_lat double"
     )
+
+    keys = [r[2] for r in rows]
+    near = [
+        (p[2], q[2])
+        for i, p in enumerate(rows)
+        for q in rows[i + 1:]
+        if _hav_py(p[3], p[4], q[3], q[4]) <= 0.5
+    ]
+    expected = _union_find_min_labels(keys, near)
     star = {(r.url, r.feature_index): r.cluster_key
-            for r in cluster_aois_star(df, eps_km=0.5).collect()}
-    prop = {(r.url, r.feature_index): r.cluster_key
-            for r in cluster_aois(df, eps_km=0.5, max_iter=200).collect()}
-    assert star == prop
+            for r in cluster_aois(df, eps_km=0.5).collect()}
+    assert star == {(r[0], r[1]): expected[r[2]] for r in rows}
     # whole chain is one component rooted at the min key
     assert star[("u000", 0)] == "u000:0" and star[("u119", 0)] == "u000:0"
     assert star[("iso3", 0)] == "iso3:0"
-    # the propagation loop REFUSES to return wrong labels when its budget
-    # is too small for the diameter
+    # the contraction REFUSES to return wrong labels when its round budget
+    # is too small for the chain
     with pytest.raises(RuntimeError, match="did not converge"):
-        cluster_aois(df, eps_km=0.5, max_iter=3)
+        cluster_aois(df, eps_km=0.5, max_rounds=1)
 
 
 def test_image_thumbnails_resize_op(spark):
