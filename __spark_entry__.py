@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from azure_workflow_for_kml_satellite_spark.constants import (
+    DEFAULT_CELL_RES,
+    RGB_DISPLAY_MIN_PIXELS,
     RUN_DATE_END,
     RUN_DATE_START,
 )
@@ -512,6 +514,8 @@ def _q_flood_summary(spark, sf_dir):
 
 
 def _q_display_annotations(spark, sf_dir):
+    from azure_workflow_for_kml_satellite_spark.operators.spatial_join import display_gsd_m
+
     ed = engine_dir(sf_dir)
     t = load_tables(spark, ed)
     aois = build_aois(spark, ed)
@@ -519,17 +523,9 @@ def _q_display_annotations(spark, sf_dir):
     j = aois.select("url", "feature_index", "has_naip", "max_span_m").join(
         frames, F.col("has_naip") == F.col("naip_variant"), "inner"
     )
-    # reference: frames.py:60-95
-    gsd = F.when(
-        F.col("collection").startswith("naip") & (F.col("year") <= 2014), F.lit(1.0)
-    ).otherwise(
-        F.when(F.col("collection") == "naip", F.lit(0.6))
-        .when(F.col("collection") == "sentinel-2-l2a", F.lit(10.0))
-        .when(F.col("collection") == "landsat-c2-l2", F.lit(30.0))
-        .otherwise(F.lit(10.0))
-    )
+    gsd = display_gsd_m(F.col("collection"), F.col("year"))
     est = F.col("max_span_m") / gsd
-    suitable = est >= 12
+    suitable = est >= RGB_DISPLAY_MIN_PIXELS
     return j.select(
         "url",
         F.col("feature_index").cast("long").alias("feature_index"),
@@ -812,23 +808,17 @@ def _q_cell_density(spark, sf_dir):
     id layout (res<<52)|(ix<<26)|iy reproduced arithmetically by the DuckDB
     oracle). Sum order pinned by (url, feature_index) sorted-array fold so
     the 2-dp rounding is partition-order-insensitive."""
-    from azure_workflow_for_kml_satellite_spark.constants import DEFAULT_CELL_RES
-    from azure_workflow_for_kml_satellite_spark.functions.cells import cell_size_deg
-
-    size = cell_size_deg(DEFAULT_CELL_RES)
-    aois = build_aois(spark, engine_dir(sf_dir))
-    nmax = (1 << DEFAULT_CELL_RES) - 1
-    ix = F.floor((F.col("centroid_lon") + F.lit(180.0)) / F.lit(size)).cast("long")
-    iy = F.floor((F.col("centroid_lat") + F.lit(90.0)) / F.lit(size)).cast("long")
-    # cells.cell_of clamps to the grid so domain-edge points (lon=180,
-    # lat=90) share ids with every other cells.py-based operator
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(nmax))
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(nmax))
-    cell = (
-        F.lit(DEFAULT_CELL_RES).cast("long") * F.lit(1 << 52)
-        + ix * F.lit(1 << 26)
-        + iy
+    from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
+        cell_id,
+        cell_ix,
+        cell_iy,
     )
+
+    aois = build_aois(spark, engine_dir(sf_dir))
+    res = DEFAULT_CELL_RES
+    # clamped to the grid like cells.cell_of, so domain-edge points (lon=180,
+    # lat=90) share ids with every other cell-indexed operator
+    cell = cell_id(cell_ix("centroid_lon", res), cell_iy("centroid_lat", res), res)
     with_cell = aois.select(
         cell.alias("cell_id"), "url", "feature_index", "area_ha"
     )

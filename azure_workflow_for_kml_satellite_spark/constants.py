@@ -55,7 +55,6 @@ EUDR_CUTOFF_DATE = "2020-12-31"
 # --- Cell index (ours; plays the H3/S2 role from SURVEY.md §2.3 J1) ---
 # Resolution r => cell edge of 360 / 2**r degrees of longitude.
 DEFAULT_CELL_RES = 10  # ~0.35 deg ≈ 39 km at equator — scene tiles cover ~4-9 cells
-CLUSTER_CELL_RES = 10  # coarse cells for the 25 km epsilon-clustering join
 
 # --- Raster-stage grain (ours) ---
 # Tasks per core of the two per-window raster stages: the NDVI repartition

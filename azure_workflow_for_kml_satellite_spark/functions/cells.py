@@ -11,13 +11,9 @@ engine's joins pure equi-joins on a long key — exactly the discipline an H3
 polyfill would give — while remaining reproducible everywhere. Antimeridian
 wrapping is intentionally NOT handled, replicating the reference's documented
 lenient behavior (reference: tests/test_geo.py:300-317).
-
-Vectorized (numpy) variants are provided for use inside pandas UDFs.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 from azure_workflow_for_kml_satellite_spark.constants import DEFAULT_CELL_RES
 
@@ -36,63 +32,11 @@ def cell_of(lon: float, lat: float, res: int = DEFAULT_CELL_RES) -> int:
     return (res << 52) | (ix << 26) | iy
 
 
-def cells_of_np(lon: np.ndarray, lat: np.ndarray, res: int = DEFAULT_CELL_RES) -> np.ndarray:
-    """Vectorized cell_of for pandas UDFs."""
-    size = cell_size_deg(res)
-    nmax = (1 << res) - 1
-    ix = np.clip(((lon + 180.0) // size).astype(np.int64), 0, nmax)
-    iy = np.clip(((lat + 90.0) // size).astype(np.int64), 0, nmax)
-    return (np.int64(res) << 52) | (ix << 26) | iy
-
-
-def polyfill_bbox(bbox: list[float], res: int = DEFAULT_CELL_RES) -> list[int]:
-    """All cells intersecting a [min_lon, min_lat, max_lon, max_lat] bbox.
-
-    This is the polyfill used on both sides of the spatial equi-join; a
-    geometry and a scene whose bboxes intersect always share >=1 cell, so the
-    cell join is a complete candidate generator and the exact bbox predicate
-    is pure refinement.
-    """
-    size = cell_size_deg(res)
-    nmax = (1 << res) - 1
-    ix0 = max(0, min(int((bbox[0] + 180.0) // size), nmax))
-    ix1 = max(0, min(int((bbox[2] + 180.0) // size), nmax))
-    iy0 = max(0, min(int((bbox[1] + 90.0) // size), nmax))
-    iy1 = max(0, min(int((bbox[3] + 90.0) // size), nmax))
-    out: list[int] = []
-    base = res << 52
-    for ix in range(ix0, ix1 + 1):
-        hi = base | (ix << 26)
-        for iy in range(iy0, iy1 + 1):
-            out.append(hi | iy)
-    return out
-
-
-def kring(cell: int, k: int = 1) -> list[int]:
-    """The (2k+1)^2 neighborhood of a cell (clamped at grid edges).
-
-    Used by the epsilon-distance clustering self-join (SURVEY.md J9): with
-    cell size >= eps, any two points within eps km share a cell or lie in
-    adjacent cells, so the kRing join is a complete candidate generator.
-    """
-    res = cell >> 52
-    ix = (cell >> 26) & ((1 << 26) - 1)
-    iy = cell & ((1 << 26) - 1)
-    nmax = (1 << res) - 1
-    out = []
-    base = res << 52
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            jx, jy = ix + dx, iy + dy
-            if 0 <= jx <= nmax and 0 <= jy <= nmax:
-                out.append(base | (jx << 26) | jy)
-    return out
-
-
 def res_for_eps_km(eps_km: float, max_abs_lat: float = 60.0) -> int:
     """Finest resolution whose cell edge is >= eps_km everywhere below
-    ``max_abs_lat``, so a kring(k=1) self-join is a complete candidate
-    generator for pairs within eps_km.
+    ``max_abs_lat``, so two points within eps_km share a cell or lie in
+    adjacent cells and the 3×3-neighbourhood self-join
+    (operators/cluster.candidate_edges) is a complete candidate generator.
 
     The binding direction is longitude at high latitude: a cell's east-west
     extent in km is 360/2**r * 111.32 * cos(lat).

@@ -201,11 +201,6 @@ def point_buffer_ring(lat: float, lon: float, buffer_m: float = 500.0, segments:
     return ensure_closed(ring)
 
 
-def bboxes_intersect(a: list[float], b: list[float]) -> bool:
-    """Exact bbox intersection refinement predicate for the cell equi-join."""
-    return a[0] <= b[2] and b[0] <= a[2] and a[1] <= b[3] and b[1] <= a[3]
-
-
 def point_in_ring(lon: float, lat: float, ring: Ring) -> bool:
     """Ray-casting point-in-polygon test over one ring (boundary-exclusive on
     the right edge; standard even-odd rule)."""

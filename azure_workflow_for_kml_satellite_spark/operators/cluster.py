@@ -24,14 +24,7 @@ from azure_workflow_for_kml_satellite_spark.constants import DEFAULT_CLUSTER_EPS
 from azure_workflow_for_kml_satellite_spark.functions.cells import res_for_eps_km
 from azure_workflow_for_kml_satellite_spark.operators.dedup import near_dup_clusters
 from azure_workflow_for_kml_satellite_spark.operators.knn import _hav_km
-
-
-def _cell_parts(res: int, lon_col, lat_col):
-    size = 360.0 / (1 << res)
-    nmax = (1 << res) - 1
-    ix = F.greatest(F.lit(0), F.least(F.lit(nmax), F.floor((lon_col + 180.0) / F.lit(size))))
-    iy = F.greatest(F.lit(0), F.least(F.lit(nmax), F.floor((lat_col + 90.0) / F.lit(size))))
-    return ix.cast("long"), iy.cast("long")
+from azure_workflow_for_kml_satellite_spark.operators.spatial_join import cell_ix, cell_iy
 
 
 def candidate_edges(aois: DataFrame, eps_km: float = DEFAULT_CLUSTER_EPS_KM) -> DataFrame:
@@ -42,8 +35,9 @@ def candidate_edges(aois: DataFrame, eps_km: float = DEFAULT_CLUSTER_EPS_KM) -> 
         "centroid_lon",
         "centroid_lat",
     )
-    ix, iy = _cell_parts(res, F.col("centroid_lon"), F.col("centroid_lat"))
-    pts = pts.withColumn("ix", ix).withColumn("iy", iy)
+    pts = pts.withColumn("ix", cell_ix("centroid_lon", res)).withColumn(
+        "iy", cell_iy("centroid_lat", res)
+    )
     # left side explodes its 3x3 kRing; right side keeps its own cell
     left = (
         pts.withColumn("dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))

@@ -30,7 +30,6 @@ NDVI_DECLINE_THRESHOLD = -0.05
 
 WORLDCOVER_RES_M = 20.0
 LULC_RES_M = 30.0
-ALOS_RES_M = 50.0
 TREE_CLASS = 10  # WorldCover tree-cover code (reference: eudr.py:229-241)
 LULC_YEARS = list(range(2019, 2024))
 
@@ -164,7 +163,8 @@ def landsat_baseline(aois: DataFrame, scenes: DataFrame) -> DataFrame:
     not the buffered one) with cloud ≤ 30 (ndvi.py:283)."""
     from azure_workflow_for_kml_satellite_spark.operators.ndvi import compute_ndvi_for_row
     from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
-        explode_bbox_cells,
+        _bbox_cell_join,
+        scene_bbox,
     )
 
     spark = aois.sparkSession
@@ -181,31 +181,12 @@ def landsat_baseline(aois: DataFrame, scenes: DataFrame) -> DataFrame:
             (F.to_date("datetime") >= F.to_date("w_start"))
             & (F.to_date("datetime") <= F.to_date("w_end"))
         )
-        .select(
-            "window_id",
-            "scene_id",
-            "cloud_cover",
-            "datetime",
-            "resolution_m",
-            F.col("min_lon").alias("s_min_lon"),
-            F.col("min_lat").alias("s_min_lat"),
-            F.col("max_lon").alias("s_max_lon"),
-            F.col("max_lat").alias("s_max_lat"),
-        )
     )
-    s = explode_bbox_cells(cand_scenes, "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat")
-    a = explode_bbox_cells(
-        aois.select("url", "feature_index", "min_lon", "min_lat", "max_lon", "max_lat"),
-        "min_lon",
-        "min_lat",
-        "max_lon",
-        "max_lat",
-    )
-    pairs = a.join(F.broadcast(s), "cell").filter(
-        (F.col("min_lon") <= F.col("s_max_lon"))
-        & (F.col("s_min_lon") <= F.col("max_lon"))
-        & (F.col("min_lat") <= F.col("s_max_lat"))
-        & (F.col("s_min_lat") <= F.col("max_lat"))
+    bbox = ("min_lon", "min_lat", "max_lon", "max_lat")
+    pairs = _bbox_cell_join(
+        aois.select("url", "feature_index", *bbox),
+        bbox,
+        scene_bbox(cand_scenes, "window_id", "scene_id", "cloud_cover", "datetime", "resolution_m"),
     )
     best = pairs.groupBy("url", "feature_index", "window_id").agg(
         F.min_by(

@@ -28,9 +28,10 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from azure_workflow_for_kml_satellite_spark.constants import EARTH_RADIUS_KM
 from azure_workflow_for_kml_satellite_spark.functions.cells import cell_size_deg
 
-_R_KM = 6371.0
+_R_KM = EARTH_RADIUS_KM
 # conservative km per degree of latitude (minimum over the ellipsoid-ish
 # sphere model used by the haversine: exactly pi*R/180 for the sphere)
 _KM_PER_DEG_LAT = math.pi * _R_KM / 180.0  # 111.1949...

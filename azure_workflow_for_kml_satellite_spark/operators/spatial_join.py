@@ -2,9 +2,13 @@
 engine's centerpiece).
 
 Spark-first design:
+- One helper, ``_bbox_cell_join``, is the engine's only bbox theta join: the
+  J1 candidates, the display mosaic, J3 tile assignment and the Landsat
+  baseline (operators/eudr.py) all call it.
 - Both sides are polyfilled to grid cells with **pure column expressions**
   (floor arithmetic + ``sequence`` + ``explode``) — no Python in the hot path,
-  whole-stage-codegen friendly.
+  whole-stage-codegen friendly. ``cell_ix``/``cell_iy``/``cell_id`` are the
+  one column form of functions/cells.cell_of.
 - Candidate generation is a plain equi-join on the int64 cell id; the exact
   bbox-intersection predicate (the reference's STAC ``bbox=`` /
   ``s_intersects`` semantics, planetary_computer.py:159-165, mosaic.py:52-64)
@@ -25,43 +29,45 @@ scene side is broadcast (default: it is a dimension) there is no shuffle to
 skew. For the non-broadcast path, ``salt`` deterministically splits each hot
 cell key: aoi side gets ``pmod(xxhash64(url, feature_index), salt)``, the
 scene side explodes all salt ids (reference analog: area-based reroute to
-bigger nodes, batch.py:28-30; SURVEY.md §4).
+bigger nodes, batch.py:28-30; SURVEY.md §4). When the data picks the salted
+path, it uses ``AUTO_SALT`` salts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from azure_workflow_for_kml_satellite_spark.constants import (
+    COLLECTION_DISPLAY_GSD_M,
     DEFAULT_CELL_RES,
+    DEFAULT_MAX_CLOUD_COVER_PCT,
+    NAIP_LEGACY_GSD_M,
+    NAIP_LEGACY_MAX_YEAR,
+    RGB_DISPLAY_MIN_PIXELS,
 )
+from azure_workflow_for_kml_satellite_spark.functions.cells import cell_size_deg
 
-# ── cell expressions (mirror functions/cells.py in pure SQL) ────────────────
-
-
-def _cell_size(res: int) -> float:
-    return 360.0 / (1 << res)
+# ── cell expressions (functions/cells.cell_of in pure SQL) ──────────────────
 
 
-def _ix_expr(lon_col: str, res: int):
-    size = _cell_size(res)
-    nmax = (1 << res) - 1
+def _clamped_cell(shifted: Column, res: int) -> Column:
     return F.greatest(
         F.lit(0),
-        F.least(F.lit(nmax), F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(size))),
+        F.least(F.lit((1 << res) - 1), F.floor(shifted / F.lit(cell_size_deg(res)))),
     )
 
 
-def _iy_expr(lat_col: str, res: int):
-    size = _cell_size(res)
-    nmax = (1 << res) - 1
-    return F.greatest(
-        F.lit(0),
-        F.least(F.lit(nmax), F.floor((F.col(lat_col) + F.lit(90.0)) / F.lit(size))),
-    )
+def cell_ix(lon: str | Column, res: int) -> Column:
+    """Grid column of a longitude, clamped to the grid."""
+    return _clamped_cell((F.col(lon) if isinstance(lon, str) else lon) + F.lit(180.0), res)
 
 
-def _cell_id(ix, iy, res: int):
+def cell_iy(lat: str | Column, res: int) -> Column:
+    """Grid row of a latitude, clamped to the grid."""
+    return _clamped_cell((F.col(lat) if isinstance(lat, str) else lat) + F.lit(90.0), res)
+
+
+def cell_id(ix: Column, iy: Column, res: int) -> Column:
     return (
         F.lit(res).cast("long") * F.lit(1 << 52).cast("long")
         + ix.cast("long") * F.lit(1 << 26).cast("long")
@@ -79,19 +85,81 @@ def explode_bbox_cells(
     out: str = "cell",
 ) -> DataFrame:
     """Polyfill a bbox to cells entirely in column expressions: one output row
-    per (input row, covering cell)."""
+    per (input row, covering cell). Bboxes that intersect always share ≥ 1
+    cell, so the cell equi-join is a complete candidate generator and the bbox
+    predicate is pure refinement."""
     df = (
-        df.withColumn("_ix0", _ix_expr(min_lon, res))
-        .withColumn("_ix1", _ix_expr(max_lon, res))
-        .withColumn("_iy0", _iy_expr(min_lat, res))
-        .withColumn("_iy1", _iy_expr(max_lat, res))
+        df.withColumn("_ix0", cell_ix(min_lon, res))
+        .withColumn("_ix1", cell_ix(max_lon, res))
+        .withColumn("_iy0", cell_iy(min_lat, res))
+        .withColumn("_iy1", cell_iy(max_lat, res))
     )
     df = df.withColumn("_ix", F.explode(F.sequence("_ix0", "_ix1"))).withColumn(
         "_iy", F.explode(F.sequence("_iy0", "_iy1"))
     )
-    return df.withColumn(out, _cell_id(F.col("_ix"), F.col("_iy"), res)).drop(
+    return df.withColumn(out, cell_id(F.col("_ix"), F.col("_iy"), res)).drop(
         "_ix0", "_ix1", "_iy0", "_iy1", "_ix", "_iy"
     )
+
+
+_BUF_BBOX = ("buf_min_lon", "buf_min_lat", "buf_max_lon", "buf_max_lat")
+
+
+def scene_bbox(scenes: DataFrame, *cols: str | Column) -> DataFrame:
+    """``cols`` of a scenes table plus its bbox as ``s_min_lon … s_max_lat``."""
+    return scenes.select(
+        *cols, *[F.col(c).alias(f"s_{c}") for c in ("min_lon", "min_lat", "max_lon", "max_lat")]
+    )
+
+
+def _bbox_cell_join(
+    aois: DataFrame,
+    aoi_bbox: tuple[str, str, str, str],
+    scenes: DataFrame,
+    res: int = DEFAULT_CELL_RES,
+    broadcast: bool = True,
+    salt: int = 1,
+    also: Column | None = None,
+) -> DataFrame:
+    """Every (aoi, scene) row pair whose bboxes intersect, each exactly once.
+
+    ``aoi_bbox`` names the aoi bbox columns (min_lon, min_lat, max_lon,
+    max_lat); scenes carry theirs as ``s_min_lon … s_max_lat``. Both sides
+    are exploded to cells and equi-joined on ``cell``: the scene side is
+    broadcast, or — ``broadcast=False`` — split ``salt`` ways on the shuffle
+    path (aois keyed by ``url, feature_index``). The exact bbox predicate,
+    with ``also`` ANDed in front, refines the candidates; the reporter-cell
+    filter then keeps each pair once."""
+    a = explode_bbox_cells(aois, *aoi_bbox, res=res)
+    s = explode_bbox_cells(scenes, "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat", res=res)
+    keys = ["cell"]
+    if broadcast:
+        s = F.broadcast(s)
+    elif salt > 1:
+        a = a.withColumn(
+            "salt", F.pmod(F.xxhash64("url", "feature_index"), F.lit(salt))
+        )
+        s = s.withColumn(
+            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        ).withColumn("salt", F.col("salt").cast("long"))
+        keys.append("salt")
+
+    min_lon, min_lat, max_lon, max_lat = aoi_bbox
+    hit = (
+        (F.col(min_lon) <= F.col("s_max_lon"))
+        & (F.col("s_min_lon") <= F.col(max_lon))
+        & (F.col(min_lat) <= F.col("s_max_lat"))
+        & (F.col("s_min_lat") <= F.col(max_lat))
+    )
+    joined = a.join(s, on=keys, how="inner").filter(hit if also is None else also & hit)
+    # Reporter cell: only the cell containing the intersection's min corner
+    # emits the pair — no distinct() shuffle needed.
+    rep = cell_id(
+        cell_ix(F.greatest(min_lon, "s_min_lon"), res),
+        cell_iy(F.greatest(min_lat, "s_min_lat"), res),
+        res,
+    )
+    return joined.filter(F.col("cell") == rep).drop(*keys)
 
 
 # ── scene × frame dimension ─────────────────────────────────────────────────
@@ -126,16 +194,13 @@ def scene_frame_candidates(
     # the scenes file is small but the downstream cell explode + broadcast
     # build would otherwise run in its single scan task — parallelize it
     scenes = scenes.repartition(scenes.sparkSession.sparkContext.defaultParallelism)
-    s = scenes.select(
+    s = scene_bbox(
+        scenes,
         "scene_id",
         F.col("collection").alias("scene_collection"),
         "datetime",
         "cloud_cover",
         "resolution_m",
-        F.col("min_lon").alias("s_min_lon"),
-        F.col("min_lat").alias("s_min_lat"),
-        F.col("max_lon").alias("s_max_lon"),
-        F.col("max_lat").alias("s_max_lat"),
     )
     return s.join(
         F.broadcast(f),
@@ -148,8 +213,6 @@ def scene_frame_candidates(
 
 
 # ── the join ────────────────────────────────────────────────────────────────
-
-AOI_KEY = ["url", "feature_index"]
 
 _AOI_CARRY = [
     "url",
@@ -174,22 +237,8 @@ def estimate_scene_cell_rows(scene_frames: DataFrame, res: int = DEFAULT_CELL_RE
     """Exact row count of the cell-exploded scene×frame dim, computed as one
     cheap aggregate over the (small relative to AOIs) scene×frame table —
     sum over rows of (#x cells × #y cells) their bbox covers."""
-    size = _cell_size(res)
-    nmax = (1 << res) - 1
-
-    def _clamp(c):
-        return F.greatest(F.lit(0), F.least(F.lit(nmax), c))
-
-    nx = (
-        _clamp(F.floor((F.col("s_max_lon") + 180.0) / size))
-        - _clamp(F.floor((F.col("s_min_lon") + 180.0) / size))
-        + 1
-    )
-    ny = (
-        _clamp(F.floor((F.col("s_max_lat") + 90.0) / size))
-        - _clamp(F.floor((F.col("s_min_lat") + 90.0) / size))
-        + 1
-    )
+    nx = cell_ix("s_max_lon", res) - cell_ix("s_min_lon", res) + 1
+    ny = cell_iy("s_max_lat", res) - cell_iy("s_min_lat", res) + 1
     row = scene_frames.agg(F.sum(nx * ny).alias("n")).collect()[0]
     return int(row["n"] or 0)
 
@@ -197,6 +246,8 @@ def estimate_scene_cell_rows(scene_frames: DataFrame, res: int = DEFAULT_CELL_RE
 # Above this many exploded dim rows the broadcast build (~150 B/row on the
 # driver + every executor) stops being worth it vs a salted shuffle join.
 MAX_BROADCAST_CELL_ROWS = 2_000_000
+# Salt count of the shuffle path when the data, not the caller, picks it.
+AUTO_SALT = 8
 
 
 def spatial_join_candidates(
@@ -205,73 +256,27 @@ def spatial_join_candidates(
     res: int = DEFAULT_CELL_RES,
     broadcast_scenes: bool | None = None,
     salt: int = 1,
-    auto_salt: int = 8,
 ) -> DataFrame:
-    """All (aoi, frame, candidate scene) rows: cell equi-join + exact bbox
-    refinement + reporter-cell dedup.
+    """All (aoi, frame, candidate scene) rows: the cell join of the buffered
+    aoi bbox against the scene×frame dim, restricted to the aoi's NAIP
+    variant.
 
     ``broadcast_scenes=None`` (default) picks the strategy from the data:
     the exploded scene×frame×cell dim row count is estimated with one cheap
     aggregate; small dims broadcast (AOI side never shuffles), large dims —
     e.g. a multi-year 10⁷-scene STAC catalog — go through the salted shuffle
-    join with ``auto_salt`` salts instead of exceeding broadcast limits.
+    join with ``AUTO_SALT`` salts instead of exceeding broadcast limits.
     Both paths produce identical rows (tested)."""
     if broadcast_scenes is None:
         est = estimate_scene_cell_rows(scene_frames, res)
         broadcast_scenes = est <= MAX_BROADCAST_CELL_ROWS
         if not broadcast_scenes and salt == 1:
-            salt = auto_salt
-    a = explode_bbox_cells(
-        aois.select(*_AOI_CARRY),
-        "buf_min_lon",
-        "buf_min_lat",
-        "buf_max_lon",
-        "buf_max_lat",
-        res=res,
-    )
-    s = explode_bbox_cells(
-        scene_frames, "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat", res=res
-    )
-
-    join_keys = ["cell"]
-    if salt > 1 and not broadcast_scenes:
-        a = a.withColumn(
-            "salt", F.pmod(F.xxhash64("url", "feature_index"), F.lit(salt))
-        )
-        s = s.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        ).withColumn("salt", F.col("salt").cast("long"))
-        join_keys.append("salt")
-    if broadcast_scenes:
-        s = F.broadcast(s)
-
-    joined = a.join(s, on=join_keys, how="inner").filter(
+            salt = AUTO_SALT
+    return _bbox_cell_join(
+        aois.select(*_AOI_CARRY), _BUF_BBOX, scene_frames, res, broadcast_scenes, salt,
         # NAIP-variant frame selection (aois.has_naip picks the frame set)
-        (F.col("naip_variant") == F.col("has_naip"))
-        # exact bbox intersection refinement (J1)
-        & (F.col("buf_min_lon") <= F.col("s_max_lon"))
-        & (F.col("s_min_lon") <= F.col("buf_max_lon"))
-        & (F.col("buf_min_lat") <= F.col("s_max_lat"))
-        & (F.col("s_min_lat") <= F.col("buf_max_lat"))
+        also=F.col("naip_variant") == F.col("has_naip"),
     )
-    # Reporter-cell dedup: only the cell containing the intersection's
-    # min corner emits the pair — no distinct() shuffle needed.
-    rep_ix = _ix_expr_val(F.greatest("buf_min_lon", "s_min_lon"), res)
-    rep_iy = _iy_expr_val(F.greatest("buf_min_lat", "s_min_lat"), res)
-    joined = joined.filter(F.col("cell") == _cell_id(rep_ix, rep_iy, res))
-    return joined.drop("cell", "salt") if salt > 1 else joined.drop("cell")
-
-
-def _ix_expr_val(col, res: int):
-    size = _cell_size(res)
-    nmax = (1 << res) - 1
-    return F.greatest(F.lit(0), F.least(F.lit(nmax), F.floor((col + F.lit(180.0)) / F.lit(size))))
-
-
-def _iy_expr_val(col, res: int):
-    size = _cell_size(res)
-    nmax = (1 << res) - 1
-    return F.greatest(F.lit(0), F.least(F.lit(nmax), F.floor((col + F.lit(90.0)) / F.lit(size))))
 
 
 def best_scene_per_frame(candidates: DataFrame) -> DataFrame:
@@ -330,6 +335,19 @@ def spatial_join_best_scene(
     return best_scene_per_frame(cand)
 
 
+def display_gsd_m(collection: Column, year: Column) -> Column:
+    """Display ground sample distance of a frame (F15; reference
+    frames.py:60-95): 1 m for NAIP vintages up to NAIP_LEGACY_MAX_YEAR, else
+    the collection's GSD, 10 m for any other collection. RGB display is
+    suitable when ``max_span_m / display_gsd_m ≥ RGB_DISPLAY_MIN_PIXELS``."""
+    gsd = F.when(
+        (collection == "naip") & (year <= NAIP_LEGACY_MAX_YEAR), F.lit(NAIP_LEGACY_GSD_M)
+    )
+    for coll, m in COLLECTION_DISPLAY_GSD_M.items():
+        gsd = gsd.when(collection == coll, F.lit(m))
+    return gsd.otherwise(F.lit(10.0))
+
+
 def best_display_scene(
     aois: DataFrame,
     scenes: DataFrame,
@@ -341,12 +359,12 @@ def best_display_scene(
     """Display-mosaic selection with the reference's fallback ladder
     (SURVEY.md §7.4 risk 6; reference runner.py:228-294, mosaic.py:62-72):
 
-    - only frames whose RGB display is suitable (estimated pixels ≥ 12,
+    - only frames whose RGB display is suitable (``display_gsd_m``,
       frames.py:75-76) register a display mosaic;
     - candidates come from the frame's DISPLAY collection; NAIP ranks by
       datetime DESC (newest vintage wins — mosaic.py:68-72, no cloud
-      property), cloud collections rank by cloud ASC with the ≤20 ceiling
-      (runner.py:229-234);
+      property), cloud collections rank by cloud ASC with the
+      DEFAULT_MAX_CLOUD_COVER_PCT ceiling (runner.py:229-234);
     - a NAIP frame with no NAIP scene falls back to a Sentinel-2 mosaic and
       reports display_collection='sentinel-2-l2a' (runner.py:244-254).
 
@@ -362,15 +380,8 @@ def best_display_scene(
         "frame_id", "naip_variant", "year", "start", "end",
         F.col("collection").alias("frame_collection"), "is_naip",
     )
-    s = scenes.select(
-        "scene_id",
-        F.col("collection").alias("scene_collection"),
-        "datetime",
-        "cloud_cover",
-        F.col("min_lon").alias("s_min_lon"),
-        F.col("min_lat").alias("s_min_lat"),
-        F.col("max_lon").alias("s_max_lon"),
-        F.col("max_lat").alias("s_max_lat"),
+    s = scene_bbox(
+        scenes, "scene_id", F.col("collection").alias("scene_collection"), "datetime", "cloud_cover"
     )
     # candidate set: primary display collection, plus sentinel-2 fallback
     # rows for NAIP frames
@@ -381,7 +392,7 @@ def best_display_scene(
         & (F.to_date("datetime") <= F.to_date("end"))
         & (
             (F.col("frame_collection") == "naip")  # NAIP: no cloud property
-            | (F.col("cloud_cover") <= 20.0)
+            | (F.col("cloud_cover") <= DEFAULT_MAX_CLOUD_COVER_PCT)
         ),
         "inner",
     ).withColumn("fallback_used", F.lit(False))
@@ -390,38 +401,18 @@ def best_display_scene(
         (F.col("scene_collection") == "sentinel-2-l2a")
         & (F.to_date("datetime") >= F.to_date("start"))
         & (F.to_date("datetime") <= F.to_date("end"))
-        & (F.col("cloud_cover") <= 20.0),
+        & (F.col("cloud_cover") <= DEFAULT_MAX_CLOUD_COVER_PCT),
         "inner",
     ).withColumn("fallback_used", F.lit(True))
     cand = prim.unionByName(fb)
 
-    a = explode_bbox_cells(
-        aois.select("url", "feature_index", "has_naip", "max_span_m",
-                    "buf_min_lon", "buf_min_lat", "buf_max_lon", "buf_max_lat"),
-        "buf_min_lon", "buf_min_lat", "buf_max_lon", "buf_max_lat", res=res,
+    joined = _bbox_cell_join(
+        aois.select("url", "feature_index", "has_naip", "max_span_m", *_BUF_BBOX),
+        _BUF_BBOX, cand, res, also=F.col("naip_variant") == F.col("has_naip"),
     )
-    sc = F.broadcast(explode_bbox_cells(cand, "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat", res=res))
-    joined = a.join(sc, "cell").filter(
-        (F.col("naip_variant") == F.col("has_naip"))
-        & (F.col("buf_min_lon") <= F.col("s_max_lon"))
-        & (F.col("s_min_lon") <= F.col("buf_max_lon"))
-        & (F.col("buf_min_lat") <= F.col("s_max_lat"))
-        & (F.col("s_min_lat") <= F.col("buf_max_lat"))
-    )
-    rep_ix = _ix_expr_val(F.greatest("buf_min_lon", "s_min_lon"), res)
-    rep_iy = _iy_expr_val(F.greatest("buf_min_lat", "s_min_lat"), res)
-    joined = joined.filter(F.col("cell") == _cell_id(rep_ix, rep_iy, res))
-
     # F15 suitability gate (display only registered when suitable)
-    gsd = F.when(
-        (F.col("frame_collection") == "naip") & (F.col("year") <= 2014), F.lit(1.0)
-    ).otherwise(
-        F.when(F.col("frame_collection") == "naip", F.lit(0.6))
-        .when(F.col("frame_collection") == "sentinel-2-l2a", F.lit(10.0))
-        .when(F.col("frame_collection") == "landsat-c2-l2", F.lit(30.0))
-        .otherwise(F.lit(10.0))
-    )
-    joined = joined.filter(F.col("max_span_m") / gsd >= 12)
+    gsd = display_gsd_m(F.col("frame_collection"), F.col("year"))
+    joined = joined.filter(F.col("max_span_m") / gsd >= RGB_DISPLAY_MIN_PIXELS)
 
     # ladder order: primary before fallback; NAIP newest-first, others
     # least-cloudy-first; deterministic tiebreaks
@@ -447,39 +438,12 @@ def best_display_scene(
     )
 
 
-def tile_assignment(
-    aois: DataFrame,
-    scenes: DataFrame,
-    res: int = DEFAULT_CELL_RES,
-    broadcast_scenes: bool = True,
-) -> DataFrame:
+def tile_assignment(aois: DataFrame, scenes: DataFrame, res: int = DEFAULT_CELL_RES) -> DataFrame:
     """J3: every (geometry, intersecting scene tile) pair — the
     geometry↔raster-tile assignment relation."""
-    a = explode_bbox_cells(
-        aois.select("url", "feature_index", "buf_min_lon", "buf_min_lat", "buf_max_lon", "buf_max_lat"),
-        "buf_min_lon",
-        "buf_min_lat",
-        "buf_max_lon",
-        "buf_max_lat",
-        res=res,
+    return _bbox_cell_join(
+        aois.select("url", "feature_index", *_BUF_BBOX),
+        _BUF_BBOX,
+        scene_bbox(scenes, "scene_id", "collection"),
+        res,
     )
-    s = scenes.select(
-        "scene_id",
-        "collection",
-        F.col("min_lon").alias("s_min_lon"),
-        F.col("min_lat").alias("s_min_lat"),
-        F.col("max_lon").alias("s_max_lon"),
-        F.col("max_lat").alias("s_max_lat"),
-    )
-    s = explode_bbox_cells(s, "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat", res=res)
-    if broadcast_scenes:
-        s = F.broadcast(s)
-    joined = a.join(s, "cell").filter(
-        (F.col("buf_min_lon") <= F.col("s_max_lon"))
-        & (F.col("s_min_lon") <= F.col("buf_max_lon"))
-        & (F.col("buf_min_lat") <= F.col("s_max_lat"))
-        & (F.col("s_min_lat") <= F.col("buf_max_lat"))
-    )
-    rep_ix = _ix_expr_val(F.greatest("buf_min_lon", "s_min_lon"), res)
-    rep_iy = _iy_expr_val(F.greatest("buf_min_lat", "s_min_lat"), res)
-    return joined.filter(F.col("cell") == _cell_id(rep_ix, rep_iy, res)).drop("cell")

@@ -20,6 +20,9 @@ AUDITED = [
     "q_extract_features",
     "q_aoi_prep",
     "q_spatial_join",
+    "q_tile_assignment",
+    "q_display_scene",
+    "q_landsat_baseline",
     "q_ndvi_stats",
     "q_ndvi_utm",
     "q_season_changes",

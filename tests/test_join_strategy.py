@@ -95,3 +95,74 @@ def test_inflated_scene_table_routes_to_salted_path(spark, monkeypatch):
         .select(*cols).collect()
     )
     assert got == ref
+
+
+def test_bbox_cell_join_matches_cross_join(spark):
+    """The cell join emits every intersecting (aoi, scene) bbox pair exactly
+    once — boxes touching along a cell boundary or at a corner, boxes on the
+    lon=180 / lat=90 clamp edge, boxes spanning many cells, and disjoint
+    boxes sharing a cell — on the broadcast and the salted path, for the
+    buffered and the plain aoi bbox."""
+    from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
+        _bbox_cell_join,
+        scene_bbox,
+    )
+
+    res = 3  # 45° cells: cell edges at lon -135, -90, …, 135 and lat -45, 0, 45
+    aoi_boxes = {
+        "corner": (-10.0, -10.0, 0.0, 0.0),
+        "edge": (40.0, 10.0, 45.0, 20.0),
+        "clamp": (170.0, 80.0, 180.0, 90.0),
+        "wide": (-170.0, -80.0, 170.0, 80.0),
+        "lonely": (100.0, -40.0, 110.0, -30.0),
+    }
+    scene_boxes = {
+        "corner": (0.0, 0.0, 10.0, 10.0),
+        "edge": (45.0, 0.0, 50.0, 30.0),
+        "clamp": (179.0, 89.0, 180.0, 90.0),
+        "wide": (-100.0, -50.0, 100.0, 50.0),
+        "same_cell_disjoint": (120.0, -40.0, 130.0, -30.0),
+        "far": (-179.0, -89.0, -178.0, -88.0),
+    }
+    # the buffered bboxes run past the grid edges and add three pairs:
+    # wide-far, wide-clamp and lonely-same_cell_disjoint (touching at lon 120)
+    pad = 10.0
+    aois = spark.createDataFrame(
+        [
+            (url, 0, *b, b[0] - pad, b[1] - pad, b[2] + pad, b[3] + pad)
+            for url, b in aoi_boxes.items()
+        ],
+        "url string, feature_index int, min_lon double, min_lat double, "
+        "max_lon double, max_lat double, buf_min_lon double, buf_min_lat double, "
+        "buf_max_lon double, buf_max_lat double",
+    )
+    scenes = scene_bbox(
+        spark.createDataFrame(
+            [(sid, *b) for sid, b in scene_boxes.items()],
+            "scene_id string, min_lon double, min_lat double, max_lon double, max_lat double",
+        ),
+        "scene_id",
+    )
+
+    for prefix in ("", "buf_"):
+        bbox = tuple(prefix + c for c in ("min_lon", "min_lat", "max_lon", "max_lat"))
+        lo_x, lo_y, hi_x, hi_y = (F.col(c) for c in bbox)
+        ref = sorted(
+            tuple(r)
+            for r in aois.crossJoin(scenes)
+            .filter(
+                (lo_x <= F.col("s_max_lon")) & (F.col("s_min_lon") <= hi_x)
+                & (lo_y <= F.col("s_max_lat")) & (F.col("s_min_lat") <= hi_y)
+            )
+            .select("url", "scene_id")
+            .collect()
+        )
+        assert len(ref) == len(set(ref)) >= 10
+        for broadcast, salt in ((True, 1), (False, 4)):
+            got = sorted(
+                tuple(r)
+                for r in _bbox_cell_join(aois, bbox, scenes, res, broadcast, salt)
+                .select("url", "scene_id")
+                .collect()
+            )
+            assert got == ref, (prefix, broadcast, salt)
