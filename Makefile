@@ -5,7 +5,7 @@
 #
 #   make check   — pytest suite + full exact correctness gate at sf0.01
 #   make gate    — correctness gate only (~4 min)
-#   make test    — pytest only
+#   make test    — pytest only (tests/ + the benchmark's own checks)
 #   make bench   — headline suite at $(SF_DIR), best of 2 runs
 #   make plans   — regenerate PLANS.md physical-plan audit
 #
@@ -19,7 +19,7 @@ SF_DIR  ?= /root/testdata/sf0.1
 check: test gate
 
 test:
-	python -m pytest tests/ -x -q
+	python -m pytest tests/ perfbench/test_perfbench.py -x -q
 
 gate:
 	$(PY) scripts/check_correctness.py --sf sf0.01 --exact

@@ -492,7 +492,7 @@ static void radix_select_pair(const float *a, int64_t n, int64_t k1, int64_t k2,
 /* All per-row reductions in one call.
  * out6: {mean, std, min, max, med_lo, med_hi}; out2: {n_loss, n_gain}.
  * med_lo/med_hi are np.sort(a)[n//2 - 1] / [n//2] (med_lo == med_hi for
- * odd n) — the caller reproduces _median_sorted's np.mean on them.
+ * odd n) — raster._median_of_pair reproduces np.median's np.mean on them.
  * Caller guarantees n >= 1, no NaN. */
 void kmlsat_stats_f32(const float *a, int64_t n, float loss_t, float gain_t,
                       float *out6, int64_t *out2) {

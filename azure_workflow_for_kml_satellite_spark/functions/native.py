@@ -3,11 +3,12 @@
 Compiles the C source with the system gcc on first use (cached as
 ``/tmp/kmlsat_native_<sha1>.so``, atomic rename so concurrent Spark
 workers race safely) and exposes typed wrappers. Anything missing or
-failing — no gcc, compile error, load error — leaves ``LIB = None`` and
-the callers keep the pure-numpy path, which produces bit-identical
-results (the C kernels are an exact mirror; see native.c header and
-tests/test_native_kernels.py). The reason is kept in ``BUILD_ERROR`` and
-printed to stderr once per process.
+failing — no gcc, compile error, load error — leaves ``LIB = None``. The
+C-or-numpy choice is made in three places only: ``stats_f32`` here, and
+``raster.window_values`` / ``raster.pair_deltas``; each runs a numpy twin
+that produces bit-identical results (the C kernels are an exact mirror;
+see native.c header and tests/test_native_kernels.py). The reason is kept
+in ``BUILD_ERROR`` and printed to stderr once per process.
 
 The C statistics reproduce numpy 1.26's summation order. After loading,
 one ``stats_f32`` call per probe length is compared bitwise with numpy;
@@ -129,15 +130,15 @@ def available() -> bool:
 
 
 def stats_f32(arr, loss_t: float = 0.0, gain_t: float = 0.0):
-    """All per-row reductions of a contiguous float32 array in one C call
-    (numpy-exact; see native.c §stats): returns
+    """All per-row reductions of an array in one call: returns
     ``(mean, std, vmin, vmax, med_lo, med_hi, n_loss, n_gain)`` where the
     floats are bitwise np.mean/np.std/np.sort-order-statistic values and
     the counts are ``sum(arr < loss_t)`` / ``sum(arr > gain_t)`` under
-    numpy's f32 scalar-comparison cast. Caller guarantees len >= 1,
-    float32, C-contiguous, no NaN."""
-    import ctypes
-
+    numpy's f32 scalar-comparison cast. One fused C call (native.c §stats)
+    for a C-contiguous float32 array when the kernel is loaded, else
+    ``_stats_numpy``. Caller guarantees len >= 1, no NaN."""
+    if LIB is None or arr.dtype != np.float32 or not arr.flags["C_CONTIGUOUS"]:
+        return _stats_numpy(arr, loss_t, gain_t)
     out6 = (ctypes.c_float * 6)()
     out2 = (ctypes.c_int64 * 2)()
     LIB.kmlsat_stats_f32(
@@ -150,23 +151,30 @@ def stats_f32(arr, loss_t: float = 0.0, gain_t: float = 0.0):
     )
 
 
+def _stats_numpy(arr, loss_t: float = 0.0, gain_t: float = 0.0):
+    """``stats_f32``'s numpy twin (the no-kernel path and the self-check's
+    reference)."""
+    n = len(arr)
+    s = np.sort(arr)
+    return (
+        np.mean(arr), np.std(arr), s[0], s[-1], s[(n - 1) // 2], s[n // 2],
+        int(np.sum(arr < loss_t)), int(np.sum(arr > gain_t)),
+    )
+
+
 _STATS_NAMES = ("mean", "std", "min", "max", "median_lo", "median_hi",
                 "n_loss", "n_gain")
 
 
 def _stats_mismatch() -> str | None:
-    """Names of the ``stats_f32`` outputs that differ bitwise from numpy on
-    a fixed seeded probe (an odd length above the 8192-element reduce
-    chunk and an even one), or None when all agree."""
+    """Names of the ``stats_f32`` outputs that differ bitwise from
+    ``_stats_numpy`` on a fixed seeded probe (an odd length above the
+    8192-element reduce chunk and an even one), or None when all agree."""
     rng = np.random.default_rng(20011)
     bad = []
     for n in (20011, 20012):
         x = rng.standard_normal(n, dtype=np.float32)
-        s = np.sort(x)
-        want = (
-            np.mean(x), np.std(x), s[0], s[-1], s[(n - 1) // 2], s[n // 2],
-            int(np.sum(x < -0.1)), int(np.sum(x > 0.1)),
-        )
+        want = _stats_numpy(x, -0.1, 0.1)
         got = stats_f32(x, -0.1, 0.1)
         for name, g, w in zip(_STATS_NAMES, got, want):
             if np.float32(g).tobytes() != np.float32(w).tobytes():

@@ -242,6 +242,39 @@ def gen_band(
     raise ValueError(f"unknown band code {band}")
 
 
+def window_recipe(
+    scene_id: str,
+    scene_bbox: list[float],
+    resolution_m: float,
+    read_bbox: list[float],
+    collection: str,
+) -> tuple[int, str, tuple[int, int, int, int], tuple | None] | None:
+    """The read recipe of one frame: ``(seed, collection, win, aux_win)``, or
+    None when the read window is empty. ``aux_win`` is the mask band's
+    window: Landsat QA shares ``win``; the S2 SCL band is read at 2x pixel
+    size (``s2_aux_win``; None when that window is empty)."""
+    win = window_from_bounds(scene_bbox, resolution_m, read_bbox)
+    if win is None:
+        return None
+    aux_win = win if collection == "landsat-c2-l2" else s2_aux_win(
+        scene_bbox, resolution_m, read_bbox
+    )
+    return scene_seed(scene_id), collection, win, aux_win
+
+
+def _recipe_bands(recipe) -> dict[str, np.ndarray]:
+    seed, collection, win, aux_win = recipe
+    out = {
+        "red": gen_band(seed, BAND_RED, win),
+        "nir": gen_band(seed, BAND_NIR, win),
+    }
+    if collection == "landsat-c2-l2":
+        out["qa"] = gen_band(seed, BAND_QA, aux_win)
+    elif aux_win is not None:
+        out["scl"] = gen_band(seed, BAND_SCL, aux_win)
+    return out
+
+
 def read_window_bands(
     scene_id: str,
     scene_bbox: list[float],
@@ -254,21 +287,8 @@ def read_window_bands(
     (20 m vs 10 m — exercises the categorical resample path, ndvi.py:166-180).
     Landsat: red/nir/qa all at resolution_m.
     """
-    seed = scene_seed(scene_id)
-    win = window_from_bounds(scene_bbox, resolution_m, read_bbox)
-    if win is None:
-        return None
-    out = {
-        "red": gen_band(seed, BAND_RED, win),
-        "nir": gen_band(seed, BAND_NIR, win),
-    }
-    if collection == "sentinel-2-l2a":
-        scl_win = window_from_bounds(scene_bbox, resolution_m * 2, read_bbox)
-        if scl_win is not None:
-            out["scl"] = gen_band(seed, BAND_SCL, scl_win)
-    elif collection == "landsat-c2-l2":
-        out["qa"] = gen_band(seed, BAND_QA, win)
-    return out
+    recipe = window_recipe(scene_id, scene_bbox, resolution_m, read_bbox, collection)
+    return None if recipe is None else _recipe_bands(recipe)
 
 
 def read_window_bands_utm(
@@ -455,6 +475,14 @@ def ndvi_landsat(
     return ndvi, valid_mask, qa_masked_count
 
 
+def _recipe_ndvi(recipe) -> tuple[np.ndarray, np.ndarray, int]:
+    """ndvi_s2/ndvi_landsat on a recipe's full window."""
+    bands = _recipe_bands(recipe)
+    if recipe[1] == "landsat-c2-l2":
+        return ndvi_landsat(bands["red"], bands["nir"], bands["qa"])
+    return ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
+
+
 def window_ndvi(
     scene_id: str,
     scene_bbox: list[float],
@@ -465,12 +493,8 @@ def window_ndvi(
     """read_window_bands → ndvi_s2/ndvi_landsat on the full window:
     ``(ndvi, valid_mask, masked_count)``, or None when the window is empty.
     The arrays are scratch-backed — consume (or copy) before the next call."""
-    bands = read_window_bands(scene_id, scene_bbox, resolution_m, read_bbox, collection)
-    if bands is None:
-        return None
-    if collection == "landsat-c2-l2":
-        return ndvi_landsat(bands["red"], bands["nir"], bands.get("qa"))
-    return ndvi_s2(bands["red"], bands["nir"], bands.get("scl"))
+    recipe = window_recipe(scene_id, scene_bbox, resolution_m, read_bbox, collection)
+    return None if recipe is None else _recipe_ndvi(recipe)
 
 
 def ndvi_statistics(ndvi: np.ndarray, valid_mask: np.ndarray) -> dict | None:
@@ -483,59 +507,29 @@ def ndvi_statistics_from_values(
     valid_pixels: np.ndarray, total_pixels: int
 ) -> dict | None:
     """The ndvi_statistics reductions over an already-compacted valid-pixel
-    array (row-major order). The native window kernel compacts into exactly
-    the array ``ndvi[valid_mask]`` yields, so both entry points are
-    bit-identical."""
+    array (row-major order, as ``ndvi[valid_mask]`` and the native window
+    kernel both yield it), via ``native.stats_f32``."""
     n = len(valid_pixels)
     if n == 0:
         return None
     from azure_workflow_for_kml_satellite_spark.functions import native as N
 
-    if (
-        N.available()
-        and valid_pixels.dtype == np.float32
-        and valid_pixels.flags["C_CONTIGUOUS"]
-    ):
-        # one fused C call (native.c §stats — bitwise np.mean/np.std and
-        # np.sort's order statistics; tests/test_native_kernels.py pins it)
-        mean, std, vmin, vmax, med_lo, med_hi, _, _ = N.stats_f32(valid_pixels)
-        return {
-            "mean": round(mean, 4),
-            "min": round(vmin, 4),
-            "max": round(vmax, 4),
-            "std": round(std, 4),
-            "median": round(float(_median_of_pair(med_lo, med_hi, n)), 4),
-            "valid_pixels": int(n),
-            "total_pixels": int(total_pixels),
-        }
-    s = np.sort(valid_pixels)
+    mean, std, vmin, vmax, med_lo, med_hi, _, _ = N.stats_f32(valid_pixels)
     return {
-        "mean": round(float(np.mean(valid_pixels)), 4),
-        "min": round(float(s[0]), 4),
-        "max": round(float(s[-1]), 4),
-        "std": round(float(np.std(valid_pixels)), 4),
-        "median": round(float(_median_sorted(s)), 4),
+        "mean": round(float(mean), 4),
+        "min": round(float(vmin), 4),
+        "max": round(float(vmax), 4),
+        "std": round(float(std), 4),
+        "median": round(float(_median_of_pair(med_lo, med_hi, n)), 4),
         "valid_pixels": int(n),
         "total_pixels": int(total_pixels),
     }
 
 
-def _median_sorted(s: np.ndarray):
-    """np.median of a NaN-free array, taken from its sorted copy. Identical
-    value: np.median partitions to the same order statistics this sorted
-    array holds, then np.mean's the middle slice — reproduced verbatim here.
-    (On this numpy build, SIMD np.sort beats introselect np.partition ~1.5x
-    on the duplicate-heavy NDVI distribution, and the sorted array also gives
-    min/max for free.)"""
-    n = len(s)
-    h = n // 2
-    return np.mean(s[h - 1 : h + 1]) if n % 2 == 0 else np.mean(s[h : h + 1])
-
-
 def _median_of_pair(med_lo: float, med_hi: float, n: int):
-    """_median_sorted from the two middle order statistics (as produced by
-    the native radix select): the same np.mean call on the same values, so
-    the result is bit-identical to the sorted-slice path."""
+    """np.median of a NaN-free float32 array from its two middle order
+    statistics: np.median takes the same order statistics and np.mean's the
+    middle slice, reproduced here on the same values — bit-identical."""
     if n % 2 == 0:
         return np.mean(np.array([med_lo, med_hi], dtype=np.float32))
     return np.mean(np.array([med_hi], dtype=np.float32))
@@ -550,13 +544,15 @@ def s2_aux_win(
 
 # ── fused native kernels (functions/native.c; bit-identical fast path) ──────
 #
-# When the ctypes library is available the window/pair evaluators below feed
+# When the ctypes library is available the window/pair kernels below feed
 # the reductions from a single fused C pass (hash → band → NDVI → mask →
 # row-major compaction), instead of ~30 elementwise numpy passes. The C
 # mirror is exact (see native.c header), so every downstream value is
-# bit-identical either way. The numpy full-window path (``window_ndvi``,
-# ``change_stats``) is both the fallback and the differential oracle
-# (tests/test_native_kernels.py).
+# bit-identical either way. ``window_values`` and ``pair_deltas`` are the
+# only places that choose between C and the numpy full-window path
+# (``_recipe_ndvi``), which is both the no-gcc path and the differential
+# oracle (tests/test_native_kernels.py); ``native.stats_f32`` makes the same
+# choice for the reductions.
 
 
 def native_side_params(
@@ -628,6 +624,64 @@ def native_window_valid(
     return buf[: int(n)], int(masked.value)
 
 
+def native_pair_deltas(
+    seed_a, coll_a, win_a, aux_a, seed_b, coll_b, win_b, aux_b, min_h, min_w
+) -> np.ndarray:
+    """Jointly-valid deltas (b − a, row-major over the common top-left
+    ``min_h × min_w`` window) via the fused C pair kernel — a scratch view,
+    consume before the next call. Caller must have checked
+    native.available()."""
+    import ctypes
+
+    from azure_workflow_for_kml_satellite_spark.functions import native as N
+
+    ka, ar0, ac0, aar0, aac0, ari, aci, as1000 = native_side_params(
+        seed_a, coll_a, win_a, aux_a, min_h, min_w
+    )
+    kb, br0, bc0, bar0, bac0, bri, bci, bs1000 = native_side_params(
+        seed_b, coll_b, win_b, aux_b, min_h, min_w
+    )
+    buf = _scratch("nat_deltas", min_h * min_w, np.float32)
+    n = N.LIB.kmlsat_change_pair_valid(
+        int(seed_a) & 0xFFFFFFFF, ka, ar0, ac0, aar0, aac0,
+        _i64p(ari), _i64p(aci), as1000,
+        int(seed_b) & 0xFFFFFFFF, kb, br0, bc0, bar0, bac0,
+        _i64p(bri), _i64p(bci), bs1000,
+        min_h, min_w,
+        buf.ctypes.data_as(ctypes.POINTER(ctypes.c_float)),
+    )
+    return buf[: int(n)]
+
+
+def window_values(recipe) -> tuple[np.ndarray, int]:
+    """(valid NDVI values row-major, masked_count) of a ``window_recipe``:
+    the fused C pass when available, else the numpy kernel's
+    ``ndvi[valid_mask]`` (same values)."""
+    from azure_workflow_for_kml_satellite_spark.functions import native as N
+
+    if N.available():
+        return native_window_valid(*recipe)
+    ndvi, valid_mask, masked = _recipe_ndvi(recipe)
+    return ndvi[valid_mask], masked
+
+
+def pair_deltas(recipe_a, recipe_b) -> np.ndarray:
+    """Jointly-valid deltas b − a of two ``window_recipe``s over their common
+    top-left window, row-major: the fused C pair kernel when available,
+    else the numpy rasters' ``joint_deltas`` (same values)."""
+    from azure_workflow_for_kml_satellite_spark.functions import native as N
+
+    if N.available():
+        win_a, win_b = recipe_a[2], recipe_b[2]
+        min_h = min(win_a[1] - win_a[0], win_b[1] - win_b[0])
+        min_w = min(win_a[3] - win_a[2], win_b[3] - win_b[2])
+        return native_pair_deltas(*recipe_a, *recipe_b, min_h, min_w)
+    ndvi_a, mask_a, _ = _recipe_ndvi(recipe_a)
+    masked_a = np.where(mask_a, ndvi_a, np.nan)  # owned: side b reuses the scratch
+    ndvi_b, mask_b, _ = _recipe_ndvi(recipe_b)
+    return joint_deltas(masked_a, np.where(mask_b, ndvi_b, np.nan))
+
+
 def ndvi_window_stats_blocked(
     scene_id: str,
     scene_bbox: list[float],
@@ -637,37 +691,48 @@ def ndvi_window_stats_blocked(
 ) -> tuple[dict | None, int] | None:
     """Windowed read + NDVI kernel + stats for one row. Returns None when
     the window is empty (the ``bands is None`` case), else
-    ``(stats | None, masked_count)`` — the fused C pass when available,
-    otherwise the window_ndvi → ndvi_statistics chain (same values)."""
-    from azure_workflow_for_kml_satellite_spark.functions import native as N
-
-    if not N.available():
-        res = window_ndvi(scene_id, scene_bbox, resolution_m, read_bbox, collection)
-        if res is None:
-            return None
-        ndvi, valid_mask, masked = res
-        return ndvi_statistics(ndvi, valid_mask), masked
-    win = window_from_bounds(scene_bbox, resolution_m, read_bbox)
-    if win is None:
+    ``(stats | None, masked_count)``."""
+    recipe = window_recipe(scene_id, scene_bbox, resolution_m, read_bbox, collection)
+    if recipe is None:
         return None
-    aux_win = win if collection == "landsat-c2-l2" else s2_aux_win(
-        scene_bbox, resolution_m, read_bbox
-    )
-    values, masked = native_window_valid(scene_seed(scene_id), collection, win, aux_win)
+    values, masked = window_values(recipe)
+    win = recipe[2]
     total = (win[1] - win[0]) * (win[3] - win[2])
     return ndvi_statistics_from_values(values, total), masked
 
 
-def change_result(
-    mean, median, std, vmin, vmax,
-    n_valid: int, n_loss: int, n_gain: int, pixel_area_ha: float,
-) -> dict:
-    """The change-metrics dict from a pair's delta reductions and threshold
-    counts (reference: change_detection.py:98-116); ``n_valid`` >= 1."""
+def joint_deltas(ndvi_a: np.ndarray, ndvi_b: np.ndarray) -> np.ndarray:
+    """b − a over the pixels finite in both masked rasters, row-major within
+    their common top-left window (reference: change_detection.py:64-80)."""
+    min_h = min(ndvi_a.shape[0], ndvi_b.shape[0])
+    min_w = min(ndvi_a.shape[1], ndvi_b.shape[1])
+    ndvi_a = ndvi_a[:min_h, :min_w]
+    ndvi_b = ndvi_b[:min_h, :min_w]
+    valid = np.isfinite(ndvi_a) & np.isfinite(ndvi_b)
+    return (ndvi_b - ndvi_a)[valid]
+
+
+def delta_change(
+    deltas: np.ndarray,
+    pixel_area_ha: float,
+    loss_threshold: float = -0.1,
+    gain_threshold: float = 0.1,
+) -> dict | None:
+    """The change-metrics dict of a jointly-valid delta array — its
+    ``native.stats_f32`` reductions and threshold counts (reference:
+    change_detection.py:98-116); None when it is empty."""
+    n_valid = len(deltas)
+    if n_valid == 0:
+        return None
+    from azure_workflow_for_kml_satellite_spark.functions import native as N
+
+    mean, std, vmin, vmax, med_lo, med_hi, n_loss, n_gain = N.stats_f32(
+        deltas, loss_threshold, gain_threshold
+    )
     n_stable = n_valid - n_loss - n_gain
     return {
         "mean_delta": round(float(mean), 4),
-        "median_delta": round(float(median), 4),
+        "median_delta": round(float(_median_of_pair(med_lo, med_hi, n_valid)), 4),
         "std_delta": round(float(std), 4),
         "min_delta": round(float(vmin), 4),
         "max_delta": round(float(vmax), 4),
@@ -690,25 +755,8 @@ def change_stats(
 ) -> dict | None:
     """Per-pixel change metrics over jointly-finite pixels
     (reference: change_detection.py:64-116 pure-python path)."""
-    min_h = min(ndvi_a.shape[0], ndvi_b.shape[0])
-    min_w = min(ndvi_a.shape[1], ndvi_b.shape[1])
-    ndvi_a = ndvi_a[:min_h, :min_w]
-    ndvi_b = ndvi_b[:min_h, :min_w]
-    valid = np.isfinite(ndvi_a) & np.isfinite(ndvi_b)
-    if not np.any(valid):
-        return None
-    delta = np.where(valid, ndvi_b - ndvi_a, np.nan)
-    valid_deltas = delta[valid]
-    return change_result(
-        np.mean(valid_deltas),
-        np.median(valid_deltas),
-        np.std(valid_deltas),
-        np.min(valid_deltas),
-        np.max(valid_deltas),
-        int(np.sum(valid)),
-        int(np.sum(valid_deltas < loss_threshold)),
-        int(np.sum(valid_deltas > gain_threshold)),
-        pixel_area_ha,
+    return delta_change(
+        joint_deltas(ndvi_a, ndvi_b), pixel_area_ha, loss_threshold, gain_threshold
     )
 
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
@@ -72,100 +71,26 @@ def _recipe_args(rec: dict, prefix: str) -> tuple:
     )
 
 
-def masked_ndvi_for_recipe(rec: dict, prefix: str = "") -> np.ndarray | None:
-    """Regenerate the frame's masked NDVI raster (NaN outside valid) exactly
-    as the NDVI stage wrote it (operators/ndvi.py; reference ndvi.py:239-241)."""
-    out = R.window_ndvi(*_recipe_args(rec, prefix))
-    if out is None or not np.any(out[1]):
-        return None
-    ndvi, mask, _ = out
-    return np.where(mask, ndvi, np.nan).astype(np.float32)
-
-
-def _recipe_windows(rec: dict, prefix: str):
-    """(seed, collection, win, aux_win) for one side of a pair, or None
-    when the read window is empty (the ``bands is None`` case)."""
-    scene_id, scene_bbox, res, read_bbox, collection = _recipe_args(rec, prefix)
-    win = R.window_from_bounds(scene_bbox, res, read_bbox)
-    if win is None:
-        return None
-    aux_win = win if collection == "landsat-c2-l2" else R.s2_aux_win(
-        scene_bbox, res, read_bbox
-    )
-    return R.scene_seed(scene_id), collection, win, aux_win
-
-
-def _native_pair_deltas(
-    seed_a, coll_a, win_a, aux_a, seed_b, coll_b, win_b, aux_b, min_h, min_w
-) -> np.ndarray:
-    """Jointly-valid deltas via the fused C pair kernel — a scratch view,
-    consumed by the reductions in the caller before any further call."""
-    import ctypes
-
-    from azure_workflow_for_kml_satellite_spark.functions import native as N
-
-    ka, ar0, ac0, aar0, aac0, ari, aci, as1000 = R.native_side_params(
-        seed_a, coll_a, win_a, aux_a, min_h, min_w
-    )
-    kb, br0, bc0, bar0, bac0, bri, bci, bs1000 = R.native_side_params(
-        seed_b, coll_b, win_b, aux_b, min_h, min_w
-    )
-    buf = R._scratch("nat_deltas", min_h * min_w, np.float32)
-    n = N.LIB.kmlsat_change_pair_valid(
-        int(seed_a) & 0xFFFFFFFF, ka, ar0, ac0, aar0, aac0,
-        R._i64p(ari), R._i64p(aci), as1000,
-        int(seed_b) & 0xFFFFFFFF, kb, br0, bc0, bar0, bac0,
-        R._i64p(bri), R._i64p(bci), bs1000,
-        min_h, min_w,
-        buf.ctypes.data_as(ctypes.POINTER(ctypes.c_float)),
-    )
-    return buf[: int(n)]
-
-
 def change_stats_for_pair_blocked(
     rec: dict,
     loss_threshold: float,
     gain_threshold: float,
 ) -> dict | None:
-    """Change metrics for one (a_, b_) recipe pair: the fused C pair kernel
-    when available, otherwise masked_ndvi_for_recipe(a/b) + R.change_stats
-    (same values). Pixel area comes from raster a (reference:
-    change_detection.py:59,70-71); an empty window, an all-invalid side and
-    an empty joint-valid set all yield None."""
-    from azure_workflow_for_kml_satellite_spark.functions import native as N
-
+    """Change metrics for one (a_, b_) recipe pair: both sides' jointly-valid
+    deltas (``R.pair_deltas``) reduced by ``R.delta_change``. Pixel area
+    comes from raster a (reference: change_detection.py:59,70-71); an empty
+    window, an all-invalid side and an empty joint-valid set all yield
+    None."""
+    recipe_a = R.window_recipe(*_recipe_args(rec, "a_"))
+    recipe_b = R.window_recipe(*_recipe_args(rec, "b_"))
+    if recipe_a is None or recipe_b is None:
+        return None
     res_a = float(rec["a_resolution_m"])
-    pixel_area_ha = abs(res_a * res_a) / 10_000
-    if not N.available():
-        ndvi_a = masked_ndvi_for_recipe(rec, "a_")
-        ndvi_b = masked_ndvi_for_recipe(rec, "b_")
-        if ndvi_a is None or ndvi_b is None:
-            return None
-        return R.change_stats(
-            ndvi_a, ndvi_b, pixel_area_ha, loss_threshold, gain_threshold
-        )
-    wa = _recipe_windows(rec, "a_")
-    wb = _recipe_windows(rec, "b_")
-    if wa is None or wb is None:
-        return None
-    win_a, win_b = wa[2], wb[2]
-    min_h = min(win_a[1] - win_a[0], win_b[1] - win_b[0])
-    min_w = min(win_a[3] - win_a[2], win_b[3] - win_b[2])
-    # fused C pass over both sides (functions/native.c): the compacted delta
-    # array equals the full-window path's ``delta[valid]`` bit-for-bit, and
-    # the fused C reductions are bitwise np.mean/np.std/np.sort order
-    # statistics / f32-cast threshold counts (native.c §stats; pinned in
-    # tests/test_native_kernels.py)
-    valid_deltas = _native_pair_deltas(*wa, *wb, min_h, min_w)
-    n_valid = len(valid_deltas)
-    if n_valid == 0:
-        return None
-    mean_d, std_d, min_d, max_d, med_lo, med_hi, n_loss, n_gain = N.stats_f32(
-        valid_deltas, loss_threshold, gain_threshold
-    )
-    return R.change_result(
-        mean_d, R._median_of_pair(med_lo, med_hi, n_valid), std_d, min_d, max_d,
-        n_valid, n_loss, n_gain, pixel_area_ha,
+    return R.delta_change(
+        R.pair_deltas(recipe_a, recipe_b),
+        abs(res_a * res_a) / 10_000,
+        loss_threshold,
+        gain_threshold,
     )
 
 

@@ -161,7 +161,11 @@ def landsat_baseline(aois: DataFrame, scenes: DataFrame) -> DataFrame:
     (reference: runner.py:174-206). One row per (aoi, window) that found a
     scene; candidates use the PLAIN aoi bbox (the reference passes flat_bbox,
     not the buffered one) with cloud ≤ 30 (ndvi.py:283)."""
-    from azure_workflow_for_kml_satellite_spark.operators.ndvi import compute_ndvi_for_row
+    from azure_workflow_for_kml_satellite_spark.operators.ndvi import (
+        NDVI_ROW_COLS,
+        append_row_stats,
+        compute_ndvi_for_row,
+    )
     from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
         _bbox_cell_join,
         scene_bbox,
@@ -202,28 +206,12 @@ def landsat_baseline(aois: DataFrame, scenes: DataFrame) -> DataFrame:
         F.first("max_lat").alias("max_lat"),
     ).select("url", "feature_index", "window_id", "min_lon", "min_lat", "max_lon", "max_lat", "best.*")
 
-    schema = T.StructType(
-        list(best.schema.fields)
-        + [
-            T.StructField("ndvi_mean", T.DoubleType()),
-            T.StructField("valid_pixels", T.LongType()),
-        ]
+    return append_row_stats(
+        best,
+        [T.StructField("ndvi_mean", T.DoubleType()), T.StructField("valid_pixels", T.LongType())],
+        [c for c in NDVI_ROW_COLS if c != "ndvi_collection"],
+        lambda rec: compute_ndvi_for_row({**rec, "ndvi_collection": "landsat-c2-l2"}),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            means, valids = [], []
-            for rec in pdf.to_dict("records"):
-                rec["ndvi_collection"] = "landsat-c2-l2"
-                st = compute_ndvi_for_row(rec)
-                means.append(st["ndvi_mean"])
-                valids.append(st["valid_pixels"])
-            out = pdf.copy()
-            out["ndvi_mean"] = pd.Series(means, index=pdf.index, dtype=object)
-            out["valid_pixels"] = pd.Series(valids, index=pdf.index, dtype=object)
-            yield out
-
-    return best.mapInPandas(run, schema)
 
 
 def landsat_baseline_summary(baseline: DataFrame) -> DataFrame:

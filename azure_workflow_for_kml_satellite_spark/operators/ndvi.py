@@ -66,8 +66,8 @@ def compute_ndvi_for_row(rec: dict, include_raster: bool = False) -> dict:
     scene_bbox = [rec["s_min_lon"], rec["s_min_lat"], rec["s_max_lon"], rec["s_max_lat"]]
     args = (rec["scene_id"], scene_bbox, rec["resolution_m"], read_bbox, rec["ndvi_collection"])
     if not include_raster:
-        # stats-only rows never materialize the window (fused C pass when
-        # available — see raster.py native section)
+        # stats-only rows never materialize the window (the fused C pass
+        # when available — see raster.window_values)
         res = R.ndvi_window_stats_blocked(*args)
         return _stat_row(None) if res is None else _stat_row(*res)
     res = R.window_ndvi(*args)
@@ -178,56 +178,58 @@ def compute_ndvi_utm_row(rec: dict) -> dict:
     return out
 
 
+def append_row_stats(
+    df: DataFrame,
+    fields: list[T.StructField],
+    needed: list[str],
+    row_fn,
+) -> DataFrame:
+    """Append ``fields`` to every row of ``df`` via mapInPandas: ``row_fn``
+    gets a dict of the row's ``needed`` columns and returns a dict holding
+    (at least) the new fields by name.
+
+    Column-wise inner loop (no whole-row dict materialization): the values
+    are appended to the incoming Arrow batch as new columns — profiling
+    showed row-dict conversion dominating over the pixel math itself."""
+    schema = T.StructType(list(df.schema.fields) + fields)
+    names = [f.name for f in fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out_cols: dict[str, list] = {n: [] for n in names}
+            for vals in zip(*(pdf[c].values for c in needed)):
+                st = row_fn(dict(zip(needed, vals)))
+                for n in names:
+                    out_cols[n].append(st[n])
+            out = pdf.copy()
+            for n in names:
+                out[n] = pd.Series(out_cols[n], index=pdf.index, dtype=object)
+            yield out
+
+    return df.mapInPandas(run, schema)
+
+
+# the frame-recipe columns compute_ndvi_for_row reads
+NDVI_ROW_COLS = [
+    "scene_id", "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat",
+    "resolution_m", "ndvi_collection", "min_lon", "min_lat", "max_lon", "max_lat",
+]
+
+
 def ndvi_stats_utm(best_utm: DataFrame) -> DataFrame:
-    """Append cross-CRS NDVI + reprojection columns (same column-wise
-    mapInPandas shape as ndvi_stats)."""
-    schema = T.StructType(list(best_utm.schema.fields) + _UTM_STAT_FIELDS)
-    stat_names = [f.name for f in _UTM_STAT_FIELDS]
+    """Append cross-CRS NDVI + reprojection columns."""
     needed = [
         "scene_id", "epsg", "u_min_e", "u_min_n", "u_max_e", "u_max_n", "u_res_m",
         "min_lon", "min_lat", "max_lon", "max_lat",
     ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_cols: dict[str, list] = {n: [] for n in stat_names}
-            for vals in zip(*(pdf[c].values for c in needed)):
-                rec = dict(zip(needed, vals))
-                st = compute_ndvi_utm_row(rec)
-                for n in stat_names:
-                    out_cols[n].append(st[n])
-            out = pdf.copy()
-            for n in stat_names:
-                out[n] = pd.Series(out_cols[n], index=pdf.index, dtype=object)
-            yield out
-
-    return best_utm.mapInPandas(run, schema)
+    return append_row_stats(best_utm, _UTM_STAT_FIELDS, needed, compute_ndvi_utm_row)
 
 
 def ndvi_stats(best_scenes: DataFrame, include_raster: bool = False) -> DataFrame:
-    """Append NDVI statistic columns to the (aoi, frame, best scene) rows.
-
-    Column-wise inner loop (no per-row dict materialization): the stats are
-    appended to the incoming Arrow batch as new columns — profiling showed
-    row-dict conversion dominating over the pixel math itself."""
-    schema = T.StructType(list(best_scenes.schema.fields) + _STAT_FIELDS)
-    stat_names = [f.name for f in _STAT_FIELDS]
-    needed = [
-        "scene_id", "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat",
-        "resolution_m", "ndvi_collection", "min_lon", "min_lat", "max_lon", "max_lat",
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_cols: dict[str, list] = {n: [] for n in stat_names}
-            for vals in zip(*(pdf[c].values for c in needed)):
-                rec = dict(zip(needed, vals))
-                st = compute_ndvi_for_row(rec, include_raster)
-                for n in stat_names:
-                    out_cols[n].append(st[n])
-            out = pdf.copy()
-            for n in stat_names:
-                out[n] = pd.Series(out_cols[n], index=pdf.index, dtype=object)
-            yield out
-
-    return best_scenes.mapInPandas(run, schema)
+    """Append NDVI statistic columns to the (aoi, frame, best scene) rows."""
+    return append_row_stats(
+        best_scenes,
+        _STAT_FIELDS,
+        NDVI_ROW_COLS,
+        lambda rec: compute_ndvi_for_row(rec, include_raster),
+    )

@@ -85,30 +85,6 @@ def brute_force_topk(
     )
 
 
-def _rh_signature(emb_col: str, planes: int = 16):
-    """Random-hyperplane signature: plane p's normal component for dim d is a
-    deterministic pseudo-gaussian from xxhash64(d, p) (sum of two uniform
-    mixes, centered); sign of the dot product is bit p. Dimensionality comes
-    from F.size(emb_col) per row — no driver-side action needed."""
-    bits = []
-    for p in range(planes):
-        comp = F.aggregate(
-            F.zip_with(
-                F.col(emb_col),
-                F.sequence(F.lit(0), F.size(emb_col) - 1),
-                lambda v, d: v
-                * ((F.pmod(F.xxhash64(d, F.lit(p)), F.lit(2001)) - F.lit(1000.0)) / 1000.0),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(comp > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig
-
-
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -253,40 +229,6 @@ def _rh_band_buckets_vec(emb_col, planes: int, bands: int, weights):
         return pd.Series(out)
 
     return pandas_udf(buckets, "array<string>", PandasUDFType.SCALAR)(emb_col)
-
-
-def _rh_signature_vec(emb_col, planes: int, weights):
-    """Vectorized ``_rh_signature``: identical integer signature from the
-    precomputed plane-weight matrix (same fold parity as
-    ``_rh_band_buckets_vec``)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    dim = weights.shape[0]
-
-    def sig(vs: "pd.Series") -> "pd.Series":
-        if len(vs) == 0:
-            return pd.Series([], dtype="int64")
-        lens = np.fromiter((len(v) for v in vs), dtype=np.int64, count=len(vs))
-        if lens.max() > dim:
-            raise ValueError(
-                f"embedding dim {lens.max()} exceeds sampled dim {dim}; "
-                "vectorized LSH requires a uniform-dim corpus"
-            )
-        if lens.min() == lens.max() == dim:
-            bits = _rh_components(np.array(vs.tolist(), dtype=np.float64), weights) > 0
-        else:
-            bits = np.zeros((len(vs), planes), dtype=bool)
-            for i, v in enumerate(vs):
-                m = np.asarray(v, dtype=np.float64)[None, :]
-                bits[i] = _rh_components(m, weights)[0] > 0
-        out = np.zeros(len(vs), dtype=np.int64)
-        for p in range(planes):
-            out |= bits[:, p].astype(np.int64) << p
-        return pd.Series(out)
-
-    return pandas_udf(sig, "long", PandasUDFType.SCALAR)(emb_col)
 
 
 def lsh_band_shape(
@@ -625,39 +567,24 @@ def lsh_topk(
     weights = _plane_weights(embeddings, planes)
     emb = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn(
-        "sig",
-        _rh_signature("emb", planes)
+    )
+    buckets = (
+        _rh_band_buckets("emb", planes, 3)
         if weights is None  # empty corpus — lazy expression path
-        else _rh_signature_vec(F.col("emb"), planes, weights),
+        else _rh_band_buckets_vec(F.col("emb"), planes, 3, weights)
     )
-    band_size = planes // 3
-    bucket_exprs = [
-        F.concat_ws(
-            ":",
-            F.lit(bi),
-            F.shiftright("sig", bi * band_size)
-            .bitwiseAND(F.lit((1 << band_size) - 1))
-            .cast("string"),
-        )
-        for bi in range(3)
-    ]
     if coverage_band:
-        bucket_exprs.append(F.lit("cover:0"))
-    banded = emb.select(
-        "vec_id",
-        "emb",
-        F.explode(F.array(*bucket_exprs)).alias("bucket"),
-    )
-    # query side: filter BEFORE the signature/band computation — the bucket
-    # exprs are per-row pure, and the broadcast-build subtree otherwise
-    # recomputes signatures for the whole corpus to keep a handful of rows
+        buckets = F.concat(buckets, F.array(F.lit("cover:0")))
+    banded = emb.select("vec_id", "emb", F.explode(buckets).alias("bucket"))
+    # query side: filter BEFORE the band computation — the buckets are
+    # per-row pure, and the broadcast-build subtree otherwise recomputes
+    # them for the whole corpus to keep a handful of rows
     q = (
         emb.filter(F.col("vec_id").isin(query_ids))
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("emb").alias("q_emb"),
-            F.explode(F.array(*bucket_exprs)).alias("bucket"),
+            F.explode(buckets).alias("bucket"),
         )
     )
     cand = (

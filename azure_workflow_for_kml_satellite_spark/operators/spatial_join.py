@@ -82,12 +82,11 @@ def explode_bbox_cells(
     max_lon: str,
     max_lat: str,
     res: int = DEFAULT_CELL_RES,
-    out: str = "cell",
 ) -> DataFrame:
     """Polyfill a bbox to cells entirely in column expressions: one output row
-    per (input row, covering cell). Bboxes that intersect always share ≥ 1
-    cell, so the cell equi-join is a complete candidate generator and the bbox
-    predicate is pure refinement."""
+    per (input row, covering cell), the cell id in ``cell``. Bboxes that
+    intersect always share ≥ 1 cell, so the cell equi-join is a complete
+    candidate generator and the bbox predicate is pure refinement."""
     df = (
         df.withColumn("_ix0", cell_ix(min_lon, res))
         .withColumn("_ix1", cell_ix(max_lon, res))
@@ -97,7 +96,7 @@ def explode_bbox_cells(
     df = df.withColumn("_ix", F.explode(F.sequence("_ix0", "_ix1"))).withColumn(
         "_iy", F.explode(F.sequence("_iy0", "_iy1"))
     )
-    return df.withColumn(out, cell_id(F.col("_ix"), F.col("_iy"), res)).drop(
+    return df.withColumn("cell", cell_id(F.col("_ix"), F.col("_iy"), res)).drop(
         "_ix0", "_ix1", "_iy0", "_iy1", "_ix", "_iy"
     )
 

@@ -46,7 +46,8 @@ def main() -> int:
         brute_force_topk,
         ivf_topk,
         lsh_topk,
-        _rh_signature,
+        _plane_weights,
+        _rh_band_buckets_vec,
     )
 
     spark = get_spark("ann-curves", cores=16)
@@ -91,22 +92,10 @@ def main() -> int:
     # bits): join-side skew evidence
     planes = 12
     band_size = planes // 3
-    sig = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn("sig", _rh_signature("emb", planes))
-    buckets = sig.select(
+    buckets = emb.select(
         F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        F.lit(bi),
-                        F.shiftright("sig", bi * band_size)
-                        .bitwiseAND(F.lit((1 << band_size) - 1))
-                        .cast("string"),
-                    )
-                    for bi in range(3)
-                ]
+            _rh_band_buckets_vec(
+                F.col("embedding").cast("array<double>"), planes, 3, _plane_weights(emb, planes)
             )
         ).alias("bucket")
     ).groupBy("bucket").count()

@@ -583,19 +583,43 @@ def test_lsh_skew_guard_fires_on_mode_collapse_and_stays_exact(spark):
     assert got == exact
 
 
+def _rh_signature(emb_col: str, planes: int = 16):
+    """Random-hyperplane signature as JVM column expressions: plane p's
+    normal component for dim d is a deterministic pseudo-gaussian from
+    xxhash64(d, p) (sum of two uniform mixes, centered); sign of the dot
+    product is bit p. The independent reference for the production
+    ``similarity._rh_band_buckets_vec``."""
+    bits = []
+    for p in range(planes):
+        comp = F.aggregate(
+            F.zip_with(
+                F.col(emb_col),
+                F.sequence(F.lit(0), F.size(emb_col) - 1),
+                lambda v, d: v
+                * ((F.pmod(F.xxhash64(d, F.lit(p)), F.lit(2001)) - F.lit(1000.0)) / 1000.0),
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        bits.append(F.when(comp > 0, F.lit(1 << p)).otherwise(F.lit(0)))
+    sig = bits[0]
+    for b in bits[1:]:
+        sig = sig + b
+    return sig
+
+
 def test_vectorized_lsh_bits_match_jvm_expressions(spark):
-    """The production Arrow UDFs ``_rh_signature_vec``/``_rh_band_buckets_vec``
-    equal the JVM column expressions ``_rh_signature``/``_rh_band_buckets``
-    bit for bit: same signatures (12 planes) and the same bucket arrays at
-    the 0.9 operating point, on a seeded 300x8 corpus."""
+    """The production Arrow UDF ``_rh_band_buckets_vec`` equals the JVM
+    column expressions bit for bit on a seeded 300x8 corpus: lsh_topk's
+    12-plane, 3-band strings ``band:(sig >> 4·band) & 15`` derived from the
+    integer signature ``_rh_signature``, and ``_rh_band_buckets`` at the
+    0.9 operating point."""
     import numpy as np
 
     from azure_workflow_for_kml_satellite_spark.operators.similarity import (
         _plane_weights,
         _rh_band_buckets,
         _rh_band_buckets_vec,
-        _rh_signature,
-        _rh_signature_vec,
         lsh_band_shape,
     )
 
@@ -608,12 +632,18 @@ def test_vectorized_lsh_bits_match_jvm_expressions(spark):
     )
     rows, bands = lsh_band_shape(0.9)
     planes = rows * bands
+    sig = _rh_signature("emb", 12)
+    topk_jvm = F.array(*[
+        F.concat_ws(":", F.lit(bi), F.shiftright(sig, 4 * bi).bitwiseAND(F.lit(15)).cast("string"))
+        for bi in range(3)
+    ])
     got = (
         emb.select("vec_id", F.col("embedding").alias("emb"))
         .select(
             "vec_id",
-            _rh_signature("emb", 12).alias("sig_jvm"),
-            _rh_signature_vec(F.col("emb"), 12, _plane_weights(emb, 12)).alias("sig_vec"),
+            sig.alias("sig_jvm"),
+            topk_jvm.alias("topk_jvm"),
+            _rh_band_buckets_vec(F.col("emb"), 12, 3, _plane_weights(emb, 12)).alias("topk_vec"),
             _rh_band_buckets("emb", planes, bands).alias("bkt_jvm"),
             _rh_band_buckets_vec(
                 F.col("emb"), planes, bands, _plane_weights(emb, planes)
@@ -622,7 +652,7 @@ def test_vectorized_lsh_bits_match_jvm_expressions(spark):
         .collect()
     )
     assert len(got) == 300
-    assert [r.sig_vec for r in got] == [r.sig_jvm for r in got]
+    assert [r.topk_vec for r in got] == [r.topk_jvm for r in got]
     assert [r.bkt_vec for r in got] == [r.bkt_jvm for r in got]
     assert len({r.sig_jvm for r in got}) > 100  # the bits really vary
     assert all(len(r.bkt_jvm) == bands for r in got)

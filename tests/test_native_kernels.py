@@ -100,7 +100,7 @@ def test_change_pair_bit_identical():
         b = _numpy_ndvi(sb, cb, wb, ab)[0][:min_h, :min_w]
         valid = np.isfinite(a) & np.isfinite(b)
         vals_np = np.where(valid, b - a, np.nan)[valid]
-        vals_c = C._native_pair_deltas(sa, ca, wa, aa, sb, cb, wb, ab, min_h, min_w)
+        vals_c = R.native_pair_deltas(sa, ca, wa, aa, sb, cb, wb, ab, min_h, min_w)
         assert np.array_equal(vals_np, vals_c), (trial, sides)
 
 

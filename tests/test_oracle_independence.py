@@ -13,6 +13,7 @@ import numpy as np
 from azure_workflow_for_kml_satellite_spark.functions import geometry as geo
 from azure_workflow_for_kml_satellite_spark.functions import kml as kml_fn
 from azure_workflow_for_kml_satellite_spark.functions import metrics as M
+from azure_workflow_for_kml_satellite_spark.functions import native as N
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
 from azure_workflow_for_kml_satellite_spark.oracle import kernels as K
 
@@ -95,6 +96,16 @@ def test_windowing_and_ndvi_bit_parity():
         assert np.array_equal(n1[1], n2[1])
         assert n1[2] == n2[2]
         assert R.ndvi_statistics(n1[0], n1[1]) == K.ndvi_stats(n2[0], n2[1])
+        # the operators' stats entry point, on the C path and on the numpy
+        # path a box without gcc runs
+        want = (K.ndvi_stats(n2[0], n2[1]), n2[2])
+        assert R.ndvi_window_stats_blocked(sid, scene_bbox, res, rb, coll) == want
+        lib = N.LIB
+        try:
+            N.LIB = None
+            assert R.ndvi_window_stats_blocked(sid, scene_bbox, res, rb, coll) == want
+        finally:
+            N.LIB = lib
         m1 = np.where(n1[1], n1[0], np.nan).astype(np.float32)
         m1b = np.roll(m1, 1, axis=0)
         assert R.change_stats(m1, m1b, 0.01) == K.delta_stats(m1, m1b, 0.01)
