@@ -840,33 +840,27 @@ def _q_cell_density(spark, sf_dir):
 def _q_page_text(spark, sf_dir):
     """North-rule byte-identity gate (BASELINE.json input_hint): re-extract
     visible text from each page's html with the engine pipeline
-    (functions/kml.extract_text in an Arrow-batched pandas UDF) and md5 it;
-    the oracle holds md5 of the INDEPENDENT find()-scanner extraction
-    (oracle/kernels.visible_text) — the two agree only if both implement
-    the public rule correctly, byte for byte, per url."""
+    (functions/kml.extract_text in the operators/rows.map_rows row mapper)
+    and md5 it; the oracle holds md5 of the INDEPENDENT find()-scanner
+    extraction (oracle/kernels.visible_text) — the two agree only if both
+    implement the public rule correctly, byte for byte, per url."""
+    import hashlib
+
+    from pyspark.sql import types as T
+
     from azure_workflow_for_kml_satellite_spark.functions.kml import extract_text
+    from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
 
     pages = spark.read.parquet(f"{engine_dir(sf_dir)}/pages.parquet")
-
-    def run(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "text_md5": [
-                        hashlib.md5(
-                            extract_text(bytes(h)).encode("utf-8")
-                        ).hexdigest()
-                        for h in pdf["html"]
-                    ],
-                }
-            )
-
-    return pages.select("url", "html").mapInPandas(run, "url string, text_md5 string")
+    return map_rows(
+        pages.select("url", "html"),
+        ["url"],
+        ["html"],
+        [T.StructField("text_md5", T.StringType())],
+        lambda rec: [
+            {"text_md5": hashlib.md5(extract_text(bytes(rec["html"])).encode("utf-8")).hexdigest()}
+        ],
+    )
 
 
 def _q_coord_text(spark, sf_dir):

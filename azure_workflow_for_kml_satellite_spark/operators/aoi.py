@@ -1,7 +1,7 @@
 """geometries → AOIs preparation stage (SURVEY.md §7.1 step 3; G1-G8).
 
 Replicates ``geo.prepare_aoi`` (reference: treesight/geo.py:13-42) per
-feature inside one Arrow-batched ``mapInPandas`` pass: bbox, metric-buffered
+feature in one ``rows.map_rows`` pass (one output row per feature): bbox, metric-buffered
 bbox, geodesic area/perimeter, centroid, area warning (> 10 000 ha,
 reference: constants.py:28), plus engine columns the reference computes later
 or implicitly: CONUS/NAIP eligibility (frames.py:98-108), max AOI span
@@ -11,9 +11,6 @@ the spatial join and SQL oracles stay expression-only.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -24,6 +21,7 @@ from azure_workflow_for_kml_satellite_spark.constants import (
 )
 from azure_workflow_for_kml_satellite_spark.functions import geometry as geo
 from azure_workflow_for_kml_satellite_spark.functions.cells import cell_of
+from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
 
 AOI_EXTRA_FIELDS = [
     T.StructField("min_lon", T.DoubleType(), True),
@@ -46,10 +44,6 @@ AOI_EXTRA_FIELDS = [
 ]
 
 
-def _aoi_schema(features_schema: T.StructType) -> T.StructType:
-    return T.StructType(list(features_schema.fields) + AOI_EXTRA_FIELDS)
-
-
 def prepare_aois(
     features: DataFrame,
     buffer_m: float = DEFAULT_AOI_BUFFER_M,
@@ -58,46 +52,40 @@ def prepare_aois(
 ) -> DataFrame:
     """features → AOIs. Quarantine rows (error != null) are dropped here; the
     extraction stage is the place to audit them."""
-    schema = _aoi_schema(features.schema)
-    cols = [f.name for f in schema.fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                ext = geo.unflatten_ring([float(v) for v in rec["exterior"]])
-                bbox = geo.compute_bbox(ext)
-                buffered = geo.buffer_bbox(bbox, buffer_m)
-                area_ha, perimeter_km = geo.geodesic_area_and_perimeter(ext)
-                cen = geo.centroid(ext)
-                # reference: geo.py:23-25
-                warning = (
-                    f"Area {area_ha:.1f} ha exceeds max {max_area_ha:.1f} ha"
-                    if area_ha > max_area_ha
-                    else ""
-                )
-                rec.update(
-                    {
-                        "min_lon": bbox[0],
-                        "min_lat": bbox[1],
-                        "max_lon": bbox[2],
-                        "max_lat": bbox[3],
-                        "buf_min_lon": buffered[0],
-                        "buf_min_lat": buffered[1],
-                        "buf_max_lon": buffered[2],
-                        "buf_max_lat": buffered[3],
-                        "area_ha": area_ha,
-                        "perimeter_km": perimeter_km,
-                        "centroid_lon": cen[0],
-                        "centroid_lat": cen[1],
-                        "buffer_m": buffer_m,
-                        "area_warning": warning,
-                        "has_naip": geo.aoi_has_naip(ext),
-                        "max_span_m": geo.max_span_m(ext),
-                        "centroid_cell": cell_of(cen[0], cen[1], cell_res),
-                    }
-                )
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols)
+    def aoi_row(rec: dict) -> list[dict]:
+        ext = geo.unflatten_ring([float(v) for v in rec["exterior"]])
+        bbox = geo.compute_bbox(ext)
+        buffered = geo.buffer_bbox(bbox, buffer_m)
+        area_ha, perimeter_km = geo.geodesic_area_and_perimeter(ext)
+        cen = geo.centroid(ext)
+        # reference: geo.py:23-25
+        warning = (
+            f"Area {area_ha:.1f} ha exceeds max {max_area_ha:.1f} ha"
+            if area_ha > max_area_ha
+            else ""
+        )
+        return [
+            {
+                "min_lon": bbox[0],
+                "min_lat": bbox[1],
+                "max_lon": bbox[2],
+                "max_lat": bbox[3],
+                "buf_min_lon": buffered[0],
+                "buf_min_lat": buffered[1],
+                "buf_max_lon": buffered[2],
+                "buf_max_lat": buffered[3],
+                "area_ha": area_ha,
+                "perimeter_km": perimeter_km,
+                "centroid_lon": cen[0],
+                "centroid_lat": cen[1],
+                "buffer_m": buffer_m,
+                "area_warning": warning,
+                "has_naip": geo.aoi_has_naip(ext),
+                "max_span_m": geo.max_span_m(ext),
+                "centroid_cell": cell_of(cen[0], cen[1], cell_res),
+            }
+        ]
 
-    return features.filter(features.error.isNull()).mapInPandas(run, schema)
+    ok = features.filter(features.error.isNull())
+    return map_rows(ok, ok.columns, ["exterior"], AOI_EXTRA_FIELDS, aoi_row)

@@ -14,8 +14,6 @@ NOT year_b == year_a + 1 (reference: change_detection.py:190-197).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
@@ -26,21 +24,8 @@ from azure_workflow_for_kml_satellite_spark.constants import (
     RASTER_TASKS_PER_CORE,
 )
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
-
-# Columns that let the UDF regenerate one frame's masked NDVI raster.
-_RECIPE = [
-    "scene_id",
-    "s_min_lon",
-    "s_min_lat",
-    "s_max_lon",
-    "s_max_lat",
-    "resolution_m",
-    "ndvi_collection",
-    "min_lon",
-    "min_lat",
-    "max_lon",
-    "max_lat",
-]
+from azure_workflow_for_kml_satellite_spark.operators.ndvi import NDVI_ROW_COLS, recipe_args
+from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
 
 _CHANGE_FIELDS = [
     T.StructField("mean_delta", T.DoubleType(), True),
@@ -58,19 +43,6 @@ _CHANGE_FIELDS = [
 ]
 
 
-def _recipe_args(rec: dict, prefix: str) -> tuple:
-    """(scene_id, scene_bbox, resolution_m, read_bbox, collection) for one
-    side of a pair."""
-    p = lambda c: rec[prefix + c]
-    return (
-        p("scene_id"),
-        [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")],
-        p("resolution_m"),
-        [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")],
-        p("ndvi_collection"),
-    )
-
-
 def change_stats_for_pair_blocked(
     rec: dict,
     loss_threshold: float,
@@ -81,8 +53,8 @@ def change_stats_for_pair_blocked(
     comes from raster a (reference: change_detection.py:59,70-71); an empty
     window, an all-invalid side and an empty joint-valid set all yield
     None."""
-    recipe_a = R.window_recipe(*_recipe_args(rec, "a_"))
-    recipe_b = R.window_recipe(*_recipe_args(rec, "b_"))
+    recipe_a = R.window_recipe(*recipe_args(rec, "a_"))
+    recipe_b = R.window_recipe(*recipe_args(rec, "b_"))
     if recipe_a is None or recipe_b is None:
         return None
     res_a = float(rec["a_resolution_m"])
@@ -108,7 +80,7 @@ def season_changes(
     par = ndvi_df.sparkSession.sparkContext.defaultParallelism
     has_stat = (
         ndvi_df.filter(F.col("ndvi_mean").isNotNull())
-        .select("url", "feature_index", "season", "year", *_RECIPE)
+        .select("url", "feature_index", "season", "year", *NDVI_ROW_COLS)
         .coalesce(par)
     )
     w = Window.partitionBy("url", "feature_index", "season").orderBy("year")
@@ -118,8 +90,8 @@ def season_changes(
         "season",
         F.lag("year").over(w).alias("year_from"),
         F.col("year").alias("year_to"),
-        *[F.lag(c).over(w).alias(f"a_{c}") for c in _RECIPE],
-        *[F.col(c).alias(f"b_{c}") for c in _RECIPE],
+        *[F.lag(c).over(w).alias(f"a_{c}") for c in NDVI_ROW_COLS],
+        *[F.col(c).alias(f"b_{c}") for c in NDVI_ROW_COLS],
     ).filter(F.col("year_from").isNotNull())
     # The window shuffle clumps one AOI's (heavy) pairs into one partition;
     # pair recompute cost varies 4 orders of magnitude (monster 200px² vs
@@ -134,35 +106,22 @@ def season_changes(
         F.col("url"), F.col("feature_index"), F.col("season"), F.col("year_to"),
     )
 
-    key_cols = ["url", "feature_index", "season", "year_from", "year_to"]
-    schema = T.StructType(
-        [paired.schema[c] for c in key_cols]
-        + [T.StructField("label", T.StringType(), True)]
-        + _CHANGE_FIELDS
+    def pair_row(rec: dict) -> list[dict]:
+        stats = change_stats_for_pair_blocked(rec, loss_threshold, gain_threshold)
+        if stats is None:
+            return []
+        # reference: change_detection.py:235
+        label = f"{rec['season'].capitalize()} {rec['year_from']} → {rec['year_to']}"
+        return [{**stats, "label": label, "valid_change_pixels": stats["valid_pixels"]}]
+
+    return map_rows(
+        paired,
+        ["url", "feature_index", "season", "year_from", "year_to"],
+        ["season", "year_from", "year_to"]
+        + [f"{p}{c}" for p in ("a_", "b_") for c in NDVI_ROW_COLS],
+        [T.StructField("label", T.StringType(), True)] + _CHANGE_FIELDS,
+        pair_row,
     )
-    out_cols = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                stats = change_stats_for_pair_blocked(
-                    rec, loss_threshold, gain_threshold
-                )
-                if stats is None:
-                    continue
-                row = {k: rec[k] for k in key_cols}
-                season = rec["season"]
-                # reference: change_detection.py:235
-                row["label"] = f"{season.capitalize()} {rec['year_from']} → {rec['year_to']}"
-                row.update(stats)
-                row["valid_change_pixels"] = row.pop("valid_pixels")
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=out_cols) if rows else pd.DataFrame(
-                columns=out_cols
-            )
-
-    return paired.mapInPandas(run, schema)
 
 
 def change_summary_per_aoi(changes: DataFrame) -> DataFrame:

@@ -10,9 +10,7 @@ and flow into prepare_aois like KML features.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -24,6 +22,7 @@ from azure_workflow_for_kml_satellite_spark.functions.geometry import (
     point_buffer_ring,
 )
 from azure_workflow_for_kml_satellite_spark.operators.extract import FEATURES_SCHEMA
+from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
 
 DEFAULT_BUFFER_M = 500.0
 
@@ -105,24 +104,22 @@ def coordinate_text_features(
 ) -> DataFrame:
     """DataFrame of (source, coords_text) → feature rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in COORD_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for src, text in zip(pdf[source_col], pdf[text_col]):
-                for f in parse_coordinate_text(str(text), str(src), buffer_m):
-                    rows.append(
-                        {
-                            "source": f["source"],
-                            "feature_index": f.get("feature_index"),
-                            "name": f.get("name"),
-                            "exterior": flatten_ring(f["exterior"]) if "exterior" in f else None,
-                            "error": f.get("error"),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols)
+    def text_rows(rec: dict) -> list[dict]:
+        return [
+            {
+                "source": f["source"],
+                "feature_index": f.get("feature_index"),
+                "name": f.get("name"),
+                "exterior": flatten_ring(f["exterior"]) if "exterior" in f else None,
+                "error": f.get("error"),
+            }
+            for f in parse_coordinate_text(str(rec[text_col]), str(rec[source_col]), buffer_m)
+        ]
 
-    return df.select(source_col, text_col).mapInPandas(run, COORD_FEATURES_SCHEMA)
+    return map_rows(
+        df.select(source_col, text_col), [], [source_col, text_col],
+        COORD_FEATURES_SCHEMA.fields, text_rows,
+    )
 
 
 # fuzzy CSV column matching (reference: coordinate_parser.py:166-249)
@@ -164,37 +161,31 @@ def csv_point_features(
         F.row_number().over(Window.orderBy(F.monotonically_increasing_id())) - 1,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in COORD_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                i = int(rec["_row_idx"])
-                try:
-                    lat, lon = float(rec[lat_c]), float(rec[lon_c])
-                    if not (-90 <= lat <= 90 and -180 <= lon <= 180):
-                        raise ValueError(f"coordinates out of range: {lat},{lon}")
-                except (TypeError, ValueError) as exc:
-                    rows.append(
-                        {"source": source, "feature_index": None, "name": None,
-                         "exterior": None, "error": str(exc)}
-                    )
-                    continue
-                nm = str(rec[name_c]) if name_c and rec.get(name_c) is not None else (
-                    f"Point ({lat:.6f}, {lon:.6f})"
-                )
-                rows.append(
-                    {
-                        "source": source,
-                        "feature_index": i,
-                        "name": nm,
-                        "exterior": flatten_ring(point_buffer_ring(lat, lon, buffer_m)),
-                        "error": None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols)
+    def point_row(rec: dict) -> list[dict]:
+        try:
+            lat, lon = float(rec[lat_c]), float(rec[lon_c])
+            if not (-90 <= lat <= 90 and -180 <= lon <= 180):
+                raise ValueError(f"coordinates out of range: {lat},{lon}")
+        except (TypeError, ValueError) as exc:
+            return [
+                {"source": source, "feature_index": None, "name": None,
+                 "exterior": None, "error": str(exc)}
+            ]
+        nm = str(rec[name_c]) if name_c and rec[name_c] is not None else (
+            f"Point ({lat:.6f}, {lon:.6f})"
+        )
+        return [
+            {
+                "source": source,
+                "feature_index": int(rec["_row_idx"]),
+                "name": nm,
+                "exterior": flatten_ring(point_buffer_ring(lat, lon, buffer_m)),
+                "error": None,
+            }
+        ]
 
-    return csv_df.mapInPandas(run, COORD_FEATURES_SCHEMA)
+    needed = ["_row_idx", lat_c, lon_c] + ([name_c] if name_c else [])
+    return map_rows(csv_df, [], needed, COORD_FEATURES_SCHEMA.fields, point_row)
 
 
 def coord_features_to_feature_rows(coord_feats: DataFrame) -> DataFrame:

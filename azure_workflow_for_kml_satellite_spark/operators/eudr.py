@@ -8,20 +8,21 @@ enrichment/determination.py).
 - tree-cover trend across LULC years (A9: change if max−min > 10, trend by
   first-vs-last ± 5, reference eudr.py:444-469);
 - the determination rule engine (A13): flags assembled with Python f-string
-  formatting inside Arrow UDFs for exact text parity with the reference's
-  messages (Java's %.1f rounds HALF_UP, Python's half-even — so JVM
-  format_string is NOT equivalent on 2dp-rounded inputs).
+  formatting for exact text parity with the reference's messages (Java's
+  %.1f rounds HALF_UP, Python's half-even — so JVM format_string is NOT
+  equivalent on 2dp-rounded inputs).
+
+Every per-AOI Python step here (histograms, trend, Landsat NDVI, the loss
+and mean-delta flags) is a ``rows.map_rows`` row function.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
+from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
 
 # determination thresholds (reference: determination.py:19-21)
 LOSS_PCT_THRESHOLD = 5.0
@@ -36,17 +37,14 @@ LULC_YEARS = list(range(2019, 2024))
 
 # ── class histograms ─────────────────────────────────────────────────────────
 
-_HIST_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("feature_index", T.IntegerType()),
-        T.StructField("layer", T.StringType()),
-        T.StructField("class_code", T.LongType()),
-        T.StructField("pixel_count", T.LongType()),
-        T.StructField("area_pct", T.DoubleType()),
-        T.StructField("rank", T.LongType()),
-    ]
-)
+_HIST_FIELDS = [
+    T.StructField("layer", T.StringType()),
+    T.StructField("class_code", T.LongType()),
+    T.StructField("pixel_count", T.LongType()),
+    T.StructField("area_pct", T.DoubleType()),
+    T.StructField("rank", T.LongType()),
+]
+_BBOX = ["min_lon", "min_lat", "max_lon", "max_lat"]
 
 
 def class_histogram_per_aoi(
@@ -55,49 +53,27 @@ def class_histogram_per_aoi(
     """One row per (aoi, land-cover class), desc by pixel count; rank 1 is
     the dominant class (A4)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _HIST_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                classes = R.read_class_window(
-                    layer,
-                    [rec["min_lon"], rec["min_lat"], rec["max_lon"], rec["max_lat"]],
-                    resolution_m,
-                )
-                if classes is None:
-                    continue
-                for rank, h in enumerate(R.class_histogram(classes), start=1):
-                    rows.append(
-                        {
-                            "url": rec["url"],
-                            "feature_index": rec["feature_index"],
-                            "layer": layer,
-                            "class_code": h["class_code"],
-                            "pixel_count": h["pixel_count"],
-                            "area_pct": h["area_pct"],
-                            "rank": rank,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols)
+    def hist_rows(rec: dict) -> list[dict]:
+        classes = R.read_class_window(layer, [rec[c] for c in _BBOX], resolution_m)
+        if classes is None:
+            return []
+        return [
+            {"layer": layer, **h, "rank": rank}
+            for rank, h in enumerate(R.class_histogram(classes), start=1)
+        ]
 
-    return aois.select("url", "feature_index", "min_lon", "min_lat", "max_lon", "max_lat").mapInPandas(
-        run, _HIST_SCHEMA
-    )
+    src = aois.select("url", "feature_index", *_BBOX)
+    return map_rows(src, ["url", "feature_index"], _BBOX, _HIST_FIELDS, hist_rows)
 
 
-_TREND_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("feature_index", T.IntegerType()),
-        T.StructField("tree_pct_first", T.DoubleType()),
-        T.StructField("tree_pct_last", T.DoubleType()),
-        T.StructField("tree_pct_min", T.DoubleType()),
-        T.StructField("tree_pct_max", T.DoubleType()),
-        T.StructField("change_detected", T.BooleanType()),
-        T.StructField("tree_cover_trend", T.StringType()),
-    ]
-)
+_TREND_FIELDS = [
+    T.StructField("tree_pct_first", T.DoubleType()),
+    T.StructField("tree_pct_last", T.DoubleType()),
+    T.StructField("tree_pct_min", T.DoubleType()),
+    T.StructField("tree_pct_max", T.DoubleType()),
+    T.StructField("change_detected", T.BooleanType()),
+    T.StructField("tree_cover_trend", T.StringType()),
+]
 
 
 def lulc_tree_trend(aois: DataFrame, years: list[int] | None = None) -> DataFrame:
@@ -106,46 +82,34 @@ def lulc_tree_trend(aois: DataFrame, years: list[int] | None = None) -> DataFram
     increasing by last-vs-first ± 5, else stable)."""
     years = years or LULC_YEARS
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _TREND_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                bbox = [rec["min_lon"], rec["min_lat"], rec["max_lon"], rec["max_lat"]]
-                pcts = []
-                for yr in years:
-                    classes = R.read_class_window(f"io-lulc-{yr}", bbox, LULC_RES_M)
-                    if classes is None:
-                        continue
-                    hist = R.class_histogram(classes)
-                    total = sum(h["pixel_count"] for h in hist)
-                    tree = sum(
-                        h["pixel_count"] for h in hist if h["class_code"] == TREE_CLASS
-                    )
-                    pcts.append(round(100.0 * tree / total, 2) if total else 0.0)
-                if not pcts:
-                    continue
-                delta = pcts[-1] - pcts[0]
-                trend = (
-                    "declining" if delta < -5 else "increasing" if delta > 5 else "stable"
-                )
-                rows.append(
-                    {
-                        "url": rec["url"],
-                        "feature_index": rec["feature_index"],
-                        "tree_pct_first": pcts[0],
-                        "tree_pct_last": pcts[-1],
-                        "tree_pct_min": min(pcts),
-                        "tree_pct_max": max(pcts),
-                        "change_detected": (max(pcts) - min(pcts)) > 10,
-                        "tree_cover_trend": trend,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols)
+    def trend_rows(rec: dict) -> list[dict]:
+        bbox = [rec[c] for c in _BBOX]
+        pcts = []
+        for yr in years:
+            classes = R.read_class_window(f"io-lulc-{yr}", bbox, LULC_RES_M)
+            if classes is None:
+                continue
+            hist = R.class_histogram(classes)
+            total = sum(h["pixel_count"] for h in hist)
+            tree = sum(h["pixel_count"] for h in hist if h["class_code"] == TREE_CLASS)
+            pcts.append(round(100.0 * tree / total, 2) if total else 0.0)
+        if not pcts:
+            return []
+        delta = pcts[-1] - pcts[0]
+        trend = "declining" if delta < -5 else "increasing" if delta > 5 else "stable"
+        return [
+            {
+                "tree_pct_first": pcts[0],
+                "tree_pct_last": pcts[-1],
+                "tree_pct_min": min(pcts),
+                "tree_pct_max": max(pcts),
+                "change_detected": (max(pcts) - min(pcts)) > 10,
+                "tree_cover_trend": trend,
+            }
+        ]
 
-    return aois.select("url", "feature_index", "min_lon", "min_lat", "max_lon", "max_lat").mapInPandas(
-        run, _TREND_SCHEMA
-    )
+    src = aois.select("url", "feature_index", *_BBOX)
+    return map_rows(src, ["url", "feature_index"], _BBOX, _TREND_FIELDS, trend_rows)
 
 
 # ── Landsat historical baseline (A12) ────────────────────────────────────────
@@ -163,7 +127,6 @@ def landsat_baseline(aois: DataFrame, scenes: DataFrame) -> DataFrame:
     not the buffered one) with cloud ≤ 30 (ndvi.py:283)."""
     from azure_workflow_for_kml_satellite_spark.operators.ndvi import (
         NDVI_ROW_COLS,
-        append_row_stats,
         compute_ndvi_for_row,
     )
     from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
@@ -206,11 +169,12 @@ def landsat_baseline(aois: DataFrame, scenes: DataFrame) -> DataFrame:
         F.first("max_lat").alias("max_lat"),
     ).select("url", "feature_index", "window_id", "min_lon", "min_lat", "max_lon", "max_lat", "best.*")
 
-    return append_row_stats(
+    return map_rows(
         best,
-        [T.StructField("ndvi_mean", T.DoubleType()), T.StructField("valid_pixels", T.LongType())],
+        best.columns,
         [c for c in NDVI_ROW_COLS if c != "ndvi_collection"],
-        lambda rec: compute_ndvi_for_row({**rec, "ndvi_collection": "landsat-c2-l2"}),
+        [T.StructField("ndvi_mean", T.DoubleType()), T.StructField("valid_pixels", T.LongType())],
+        lambda rec: [compute_ndvi_for_row({**rec, "ndvi_collection": "landsat-c2-l2"})],
     )
 
 
@@ -244,45 +208,28 @@ def determination(
     LULC declining trend. Output flags joined with '|'."""
 
     # per-change loss flags, formatted in Python for parity
-    flag_schema = T.StructType(
-        [
-            season_changes.schema["url"],
-            season_changes.schema["feature_index"],
-            T.StructField("season", T.StringType()),
-            T.StructField("year_from", T.LongType()),
-            T.StructField("year_to", T.LongType()),
-            T.StructField("flag", T.StringType()),
-        ]
+    def loss_flag(rec: dict) -> list[dict]:
+        # the positive test: a NaN loss emits no flag
+        if rec["loss_pct"] >= loss_pct_threshold and rec["loss_ha"] >= loss_ha_threshold:
+            # reference: determination.py:53-56
+            return [
+                {
+                    "flag": f"Vegetation loss {rec['loss_pct']:.1f}% "
+                    f"({rec['loss_ha']:.1f} ha) in {rec['label']}"
+                }
+            ]
+        return []
+
+    per_change = map_rows(
+        season_changes.select(
+            "url", "feature_index", "season", "year_from", "year_to",
+            "loss_pct", "loss_ha", "label",
+        ),
+        ["url", "feature_index", "season", "year_from", "year_to"],
+        ["loss_pct", "loss_ha", "label"],
+        [T.StructField("flag", T.StringType())],
+        loss_flag,
     )
-
-    def loss_flags(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in flag_schema.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                if (
-                    rec["loss_pct"] >= loss_pct_threshold
-                    and rec["loss_ha"] >= loss_ha_threshold
-                ):
-                    rows.append(
-                        {
-                            "url": rec["url"],
-                            "feature_index": rec["feature_index"],
-                            "season": rec["season"],
-                            "year_from": int(rec["year_from"]),
-                            "year_to": int(rec["year_to"]),
-                            # reference: determination.py:53-56
-                            "flag": (
-                                f"Vegetation loss {rec['loss_pct']:.1f}% "
-                                f"({rec['loss_ha']:.1f} ha) in {rec['label']}"
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols)
-
-    per_change = season_changes.select(
-        "url", "feature_index", "season", "year_from", "year_to", "loss_pct", "loss_ha", "label"
-    ).mapInPandas(loss_flags, flag_schema)
 
     loss_agg = per_change.groupBy("url", "feature_index").agg(
         F.transform(
@@ -294,34 +241,23 @@ def determination(
     )
 
     # mean-delta flag text needs Python %+.4f parity
-    delta_schema = T.StructType(
-        [
-            change_summary.schema["url"],
-            change_summary.schema["feature_index"],
-            T.StructField("delta_flag", T.StringType()),
-        ]
-    )
+    def delta_flag(rec: dict) -> list[dict]:
+        ad = rec["avg_mean_delta"]
+        flag = None
+        if ad < ndvi_decline_threshold:  # False for a null (NaN) delta
+            # reference: determination.py:61-64
+            flag = (
+                f"Mean NDVI delta {ad:+.4f} below threshold "
+                f"({ndvi_decline_threshold:+.4f})"
+            )
+        return [{"delta_flag": flag}]
 
-    def delta_flags(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in delta_schema.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                flag = None
-                ad = rec["avg_mean_delta"]
-                if ad is not None and not pd.isna(ad) and ad < ndvi_decline_threshold:
-                    # reference: determination.py:61-64
-                    flag = (
-                        f"Mean NDVI delta {ad:+.4f} below threshold "
-                        f"({ndvi_decline_threshold:+.4f})"
-                    )
-                rows.append(
-                    {"url": rec["url"], "feature_index": rec["feature_index"], "delta_flag": flag}
-                )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(columns=cols)
-
-    deltas = change_summary.select("url", "feature_index", "avg_mean_delta").mapInPandas(
-        delta_flags, delta_schema
+    deltas = map_rows(
+        change_summary.select("url", "feature_index", "avg_mean_delta"),
+        ["url", "feature_index"],
+        ["avg_mean_delta"],
+        [T.StructField("delta_flag", T.StringType())],
+        delta_flag,
     )
 
     protected = wdpa_hits.select("url", "feature_index").distinct().withColumn(

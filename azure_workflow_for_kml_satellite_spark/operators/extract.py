@@ -1,6 +1,6 @@
 """pages → geometries extraction stage (SURVEY.md §7.1 step 2; S1-S4).
 
-One ``mapInPandas`` pass over the pages table: per page, find embedded KML /
+One ``rows.map_rows`` pass over the pages table: per page, find embedded KML /
 KMZ documents in ``html``, run the zip-bomb-guarded KMZ extraction
 (reference: parsers/__init__.py:37-82), structural validation
 (parsers/__init__.py:88-114) and the canonical polygon parse
@@ -19,9 +19,6 @@ on monster pages) for a column nothing downstream consumed (the
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,6 +26,7 @@ from pyspark.sql import types as T
 from azure_workflow_for_kml_satellite_spark.constants import MAX_FEATURES_PER_KML
 from azure_workflow_for_kml_satellite_spark.functions import kml as kml_fn
 from azure_workflow_for_kml_satellite_spark.functions.geometry import flatten_ring
+from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
 
 FEATURES_SCHEMA = T.StructType(
     [
@@ -123,15 +121,6 @@ def extract_features(
     still reads the html column, but Arrow serialization + Python regex work
     shrink by the selectivity factor."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                rows.extend(_extract_page(url, bytes(html), with_text))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURES_SCHEMA.fields]
-            ) if rows else pd.DataFrame(columns=[f.name for f in FEATURES_SCHEMA.fields])
-
     src = pages.select("url", "html")
     if prefilter:
         kml_marker = F.lit(b"<kml")
@@ -139,4 +128,7 @@ def extract_features(
         src = src.filter(
             F.contains("html", kml_marker) | F.contains("html", kmz_marker)
         )
-    return src.mapInPandas(run, FEATURES_SCHEMA)
+    return map_rows(
+        src, [], ["url", "html"], FEATURES_SCHEMA.fields,
+        lambda rec: _extract_page(rec["url"], bytes(rec["html"]), with_text),
+    )

@@ -1,11 +1,13 @@
 """Per-(geometry, frame, scene) NDVI statistics (SURVEY.md §2.4 A1, §2.9).
 
-``mapInPandas`` over the spatial-join output: each row independently performs
-a windowed band read of its scene (deterministic synthetic provider — the
-COG-windowed-read role, reference: ndvi.py:463-484), runs the reference's
-exact numpy NDVI + masking kernels (ndvi.py:189-236 for S2 incl. SCL
-nearest-neighbour resample; ndvi.py:372-447 for Landsat QA_PIXEL), and emits
-the rounded statistics struct.
+``rows.map_rows`` over the spatial-join output: each row independently
+performs a windowed band read of its scene (deterministic synthetic
+provider — the COG-windowed-read role, reference: ndvi.py:463-484), runs the
+reference's exact numpy NDVI + masking kernels (ndvi.py:189-236 for S2 incl.
+SCL nearest-neighbour resample; ndvi.py:372-447 for Landsat QA_PIXEL), and
+appends the rounded statistics columns. ``NDVI_ROW_COLS`` and
+``recipe_args`` are the one frame-recipe column list and argument assembly;
+the change pairs and the Landsat baseline read their windows through them.
 
 Parity note (SURVEY.md §7.4 risk 1): each group's stats are computed inside
 ONE udf call on the full window array — float32 reduction order is fixed and
@@ -14,13 +16,30 @@ identical to the sequential oracle, never a distributed aggregation.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from azure_workflow_for_kml_satellite_spark.functions import raster as R
+from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
+
+# the frame-recipe columns a row's window is read from (recipe_args)
+NDVI_ROW_COLS = [
+    "scene_id", "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat",
+    "resolution_m", "ndvi_collection", "min_lon", "min_lat", "max_lon", "max_lat",
+]
+
+
+def recipe_args(rec: dict, prefix: str = "") -> tuple:
+    """(scene_id, scene_bbox, resolution_m, read_bbox, collection) from the
+    ``prefix``-ed NDVI_ROW_COLS of ``rec``."""
+    p = lambda c: rec[prefix + c]
+    return (
+        p("scene_id"),
+        [p("s_min_lon"), p("s_min_lat"), p("s_max_lon"), p("s_max_lat")],
+        p("resolution_m"),
+        [p("min_lon"), p("min_lat"), p("max_lon"), p("max_lat")],
+        p("ndvi_collection"),
+    )
 
 _STAT_FIELDS = [
     T.StructField("ndvi_mean", T.DoubleType(), True),
@@ -62,9 +81,8 @@ def compute_ndvi_for_row(rec: dict, include_raster: bool = False) -> dict:
     bbox. Returns null stats when the window is empty or no valid pixels
     (reference returns None → frame has no stat, ndvi.py:219-221).
     """
-    read_bbox = [rec["min_lon"], rec["min_lat"], rec["max_lon"], rec["max_lat"]]
-    scene_bbox = [rec["s_min_lon"], rec["s_min_lat"], rec["s_max_lon"], rec["s_max_lat"]]
-    args = (rec["scene_id"], scene_bbox, rec["resolution_m"], read_bbox, rec["ndvi_collection"])
+    args = recipe_args(rec)
+    _, scene_bbox, _, read_bbox, _ = args
     if not include_raster:
         # stats-only rows never materialize the window (the fused C pass
         # when available — see raster.window_values)
@@ -178,58 +196,21 @@ def compute_ndvi_utm_row(rec: dict) -> dict:
     return out
 
 
-def append_row_stats(
-    df: DataFrame,
-    fields: list[T.StructField],
-    needed: list[str],
-    row_fn,
-) -> DataFrame:
-    """Append ``fields`` to every row of ``df`` via mapInPandas: ``row_fn``
-    gets a dict of the row's ``needed`` columns and returns a dict holding
-    (at least) the new fields by name.
-
-    Column-wise inner loop (no whole-row dict materialization): the values
-    are appended to the incoming Arrow batch as new columns — profiling
-    showed row-dict conversion dominating over the pixel math itself."""
-    schema = T.StructType(list(df.schema.fields) + fields)
-    names = [f.name for f in fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_cols: dict[str, list] = {n: [] for n in names}
-            for vals in zip(*(pdf[c].values for c in needed)):
-                st = row_fn(dict(zip(needed, vals)))
-                for n in names:
-                    out_cols[n].append(st[n])
-            out = pdf.copy()
-            for n in names:
-                out[n] = pd.Series(out_cols[n], index=pdf.index, dtype=object)
-            yield out
-
-    return df.mapInPandas(run, schema)
-
-
-# the frame-recipe columns compute_ndvi_for_row reads
-NDVI_ROW_COLS = [
-    "scene_id", "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat",
-    "resolution_m", "ndvi_collection", "min_lon", "min_lat", "max_lon", "max_lat",
-]
-
-
 def ndvi_stats_utm(best_utm: DataFrame) -> DataFrame:
     """Append cross-CRS NDVI + reprojection columns."""
     needed = [
         "scene_id", "epsg", "u_min_e", "u_min_n", "u_max_e", "u_max_n", "u_res_m",
         "min_lon", "min_lat", "max_lon", "max_lat",
     ]
-    return append_row_stats(best_utm, _UTM_STAT_FIELDS, needed, compute_ndvi_utm_row)
+    return map_rows(
+        best_utm, best_utm.columns, needed, _UTM_STAT_FIELDS,
+        lambda rec: [compute_ndvi_utm_row(rec)],
+    )
 
 
 def ndvi_stats(best_scenes: DataFrame, include_raster: bool = False) -> DataFrame:
     """Append NDVI statistic columns to the (aoi, frame, best scene) rows."""
-    return append_row_stats(
-        best_scenes,
-        _STAT_FIELDS,
-        NDVI_ROW_COLS,
-        lambda rec: compute_ndvi_for_row(rec, include_raster),
+    return map_rows(
+        best_scenes, best_scenes.columns, NDVI_ROW_COLS, _STAT_FIELDS,
+        lambda rec: [compute_ndvi_for_row(rec, include_raster)],
     )

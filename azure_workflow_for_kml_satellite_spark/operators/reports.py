@@ -3,16 +3,18 @@
 Distributed assembly of the reference's fpdf2 report (reference:
 blueprints/export.py:512-1533 — header, EUDR compliance summary,
 vegetation analysis, per-parcel evidence sections) as a binary column:
-the per-AOI metric tables are joined, grouped per source url, and one
-scalar UDF renders each group with the from-scratch PDF writer
+the per-AOI metric tables are joined, grouped per source url, and
+``rows.map_rows`` renders each group's row with the from-scratch PDF writer
 (functions/pdf.py). Report text mirrors the reference's section wording.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
 from azure_workflow_for_kml_satellite_spark.functions.pdf import PdfBuilder
+from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
 
 
 def report_content(url: str, parcels: list) -> tuple[list[str], list[list[str]]]:
@@ -133,29 +135,34 @@ def eudr_report_pdfs(
             "left",
         )
     )
-    render = F.udf(_render_report, "report_pdf binary, report_text string")
-    return (
-        j.groupBy("url")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    "feature_index",
-                    "name",
-                    "area_ha",
-                    "direction",
-                    "health_class",
-                    "trajectory",
-                    "deforestation_free",
-                    "confidence",
-                    "flags",
-                )
-            ).alias("parcels")
-        )
-        .withColumn("r", render("url", "parcels"))
-        .select(
-            "url",
-            F.col("r.report_pdf").alias("report_pdf"),
-            F.col("r.report_text").alias("report_text"),
-            F.size("parcels").alias("n_parcels"),
-        )
+    parcels = j.groupBy("url").agg(
+        F.collect_list(
+            F.struct(
+                "feature_index",
+                "name",
+                "area_ha",
+                "direction",
+                "health_class",
+                "trajectory",
+                "deforestation_free",
+                "confidence",
+                "flags",
+            )
+        ).alias("parcels")
+    )
+
+    def report_row(rec: dict) -> list[dict]:
+        pdf, text = _render_report(rec["url"], rec["parcels"])
+        return [{"report_pdf": pdf, "report_text": text, "n_parcels": len(rec["parcels"])}]
+
+    return map_rows(
+        parcels,
+        ["url"],
+        ["url", "parcels"],
+        [
+            T.StructField("report_pdf", T.BinaryType()),
+            T.StructField("report_text", T.StringType()),
+            T.StructField("n_parcels", T.IntegerType(), False),
+        ],
+        report_row,
     )

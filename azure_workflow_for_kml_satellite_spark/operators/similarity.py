@@ -109,48 +109,17 @@ def embedding_near_dup_pairs(
     )
 
 
-def _rh_band_buckets(emb_col: str, planes: int, bands: int):
-    """Array of ``bands`` bucket strings "band:value" — each band packs
-    ``planes // bands`` hyperplane sign bits. Pure column expressions
-    (signature bits never materialize as a >63-bit integer)."""
-    rows = planes // bands
-
-    def _component(p: int):
-        return lambda v, d: v * (
-            (F.pmod(F.xxhash64(d, F.lit(p)), F.lit(2001)) - F.lit(1000.0)) / 1000.0
-        )
-
-    out = []
-    for bi in range(bands):
-        val = F.lit(0)
-        for ri in range(rows):
-            comp = F.aggregate(
-                F.zip_with(
-                    F.col(emb_col),
-                    F.sequence(F.lit(0), F.size(emb_col) - 1),
-                    _component(bi * rows + ri),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            val = val + F.when(comp > 0, F.lit(1 << ri)).otherwise(F.lit(0))
-        out.append(F.concat_ws(":", F.lit(bi), val.cast("string")))
-    return F.array(*out)
-
-
 def _plane_weights(embeddings: DataFrame, planes: int):
     """dim × planes hyperplane-component matrix, computed with the SAME
     column expressions the per-element lambda uses (xxhash64 on int32 pairs,
     pmod 2001, centered /1000) so every value is bit-identical; the
     xxhash64 primitive only exists JVM-side, hence one tiny spark job over
-    range(dim). Returns None on an empty table. The dim probe is a LIMIT 1
-    read, not a scan."""
+    range(dim). The dimension is that of the first row (0 on an empty
+    table); callers drop null embeddings first."""
     import numpy as np
 
     first = embeddings.select(F.size("embedding").alias("d")).first()
-    if first is None or first["d"] is None:
-        return None
-    dim = int(first["d"])
+    dim = int(first["d"]) if first is not None else 0
     spark = embeddings.sparkSession
     cols = [
         (
@@ -166,7 +135,9 @@ def _plane_weights(embeddings: DataFrame, planes: int):
         .orderBy("d")
         .collect()
     )
-    return np.array([[r[f"p{p}"] for p in range(planes)] for r in rows], dtype=np.float64)
+    return np.array(
+        [[r[f"p{p}"] for p in range(planes)] for r in rows], dtype=np.float64
+    ).reshape(dim, planes)
 
 
 def _rh_components(mat, weights):
@@ -183,12 +154,15 @@ def _rh_components(mat, weights):
 
 
 def _rh_band_buckets_vec(emb_col, planes: int, bands: int, weights):
-    """Vectorized ``_rh_band_buckets``: same band:value strings from the
-    precomputed plane-weight matrix. The JVM higher-order fold is interpreted
-    per element — at the near-dup operating point (~96 planes) that is ~12 M
-    lambda evals per 2k vectors; this Arrow UDF is bit-identical (weights
-    from ``_plane_weights``, folds via ``_rh_components``). Rows longer than
-    the sampled dim raise a named error (uniform-dim corpus expected)."""
+    """Array of ``bands`` bucket strings "band:value" per embedding — each
+    band packs ``planes // bands`` hyperplane sign bits — from the
+    precomputed plane-weight matrix. It is bit-identical to the same fold
+    written as JVM higher-order column expressions (pinned by
+    tests/test_dedup_scale_ops.py), which are interpreted per element — at
+    the near-dup operating point (~96 planes) ~12 M lambda evals per 2k
+    vectors (weights from ``_plane_weights``, folds via ``_rh_components``).
+    Rows longer than the sampled dim raise a named error (uniform-dim corpus
+    expected)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf
@@ -349,16 +323,13 @@ def embedding_near_dup_lsh(
     explicitly via release_lsh_cache()."""
     rows, bands = shape if shape is not None else lsh_band_shape(threshold, target_recall)
     planes = rows * bands
+    embeddings = embeddings.filter(F.col("embedding").isNotNull())  # a null scores no cosine
     weights = _plane_weights(embeddings, planes)
     emb = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    ).withColumn(
+        "bucket", F.explode(_rh_band_buckets_vec(F.col("emb"), planes, bands, weights))
     )
-    if weights is None:  # empty corpus — the expression path handles it lazily
-        emb = emb.withColumn("bucket", F.explode(_rh_band_buckets("emb", planes, bands)))
-    else:
-        emb = emb.withColumn(
-            "bucket", F.explode(_rh_band_buckets_vec(F.col("emb"), planes, bands, weights))
-        )
     app_id = embeddings.sparkSession.sparkContext.applicationId
     release_lsh_cache(app_id)
     emb = emb.persist()
@@ -564,15 +535,12 @@ def lsh_topk(
     output PROVABLY equals ``brute_force_topk`` and the driver's exact
     oracle applies. The pruned default (sign-bit bands only) is what runs
     at 100 TB and is benchmarked/recall-tested separately."""
+    embeddings = embeddings.filter(F.col("embedding").isNotNull())  # a null scores no cosine
     weights = _plane_weights(embeddings, planes)
     emb = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    buckets = (
-        _rh_band_buckets("emb", planes, 3)
-        if weights is None  # empty corpus — lazy expression path
-        else _rh_band_buckets_vec(F.col("emb"), planes, 3, weights)
-    )
+    buckets = _rh_band_buckets_vec(F.col("emb"), planes, 3, weights)
     if coverage_band:
         buckets = F.concat(buckets, F.array(F.lit("cover:0")))
     banded = emb.select("vec_id", "emb", F.explode(buckets).alias("bucket"))

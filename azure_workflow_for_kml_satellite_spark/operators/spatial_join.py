@@ -382,28 +382,27 @@ def best_display_scene(
     s = scene_bbox(
         scenes, "scene_id", F.col("collection").alias("scene_collection"), "datetime", "cloud_cover"
     )
-    # candidate set: primary display collection, plus sentinel-2 fallback
-    # rows for NAIP frames
-    prim = s.join(
-        F.broadcast(f),
-        (F.col("scene_collection") == F.col("frame_collection"))
+    # ladder rungs: every frame in its own display collection, plus each
+    # NAIP frame again as its sentinel-2 fallback; one equi-join on the
+    # rung's collection finds both candidate sets
+    rungs = f.withColumns(
+        {"display_collection": F.col("frame_collection"), "fallback_used": F.lit(False)}
+    ).unionByName(
+        f.filter(F.col("is_naip")).withColumns(
+            {"display_collection": F.lit("sentinel-2-l2a"), "fallback_used": F.lit(True)}
+        )
+    )
+    cand = s.join(
+        F.broadcast(rungs),
+        (F.col("scene_collection") == F.col("display_collection"))
         & (F.to_date("datetime") >= F.to_date("start"))
         & (F.to_date("datetime") <= F.to_date("end"))
         & (
-            (F.col("frame_collection") == "naip")  # NAIP: no cloud property
+            (F.col("display_collection") == "naip")  # NAIP: no cloud property
             | (F.col("cloud_cover") <= DEFAULT_MAX_CLOUD_COVER_PCT)
         ),
         "inner",
-    ).withColumn("fallback_used", F.lit(False))
-    fb = s.join(
-        F.broadcast(f.filter(F.col("is_naip"))),
-        (F.col("scene_collection") == "sentinel-2-l2a")
-        & (F.to_date("datetime") >= F.to_date("start"))
-        & (F.to_date("datetime") <= F.to_date("end"))
-        & (F.col("cloud_cover") <= DEFAULT_MAX_CLOUD_COVER_PCT),
-        "inner",
-    ).withColumn("fallback_used", F.lit(True))
-    cand = prim.unionByName(fb)
+    )
 
     joined = _bbox_cell_join(
         aois.select("url", "feature_index", "has_naip", "max_span_m", *_BUF_BBOX),

@@ -534,7 +534,6 @@ def test_lsh_skew_guard_fires_on_mode_collapse_and_stays_exact(spark):
     import numpy as np
 
     from azure_workflow_for_kml_satellite_spark.operators.similarity import (
-        _rh_band_buckets,
         embedding_near_dup_lsh,
         embedding_near_dup_pairs,
         lsh_band_shape,
@@ -583,6 +582,36 @@ def test_lsh_skew_guard_fires_on_mode_collapse_and_stays_exact(spark):
     assert got == exact
 
 
+def _rh_band_buckets(emb_col: str, planes: int, bands: int):
+    """Array of ``bands`` bucket strings "band:value" — each band packs
+    ``planes // bands`` hyperplane sign bits — as JVM column expressions
+    (signature bits never materialize as a >63-bit integer). The
+    independent reference for ``similarity._rh_band_buckets_vec``."""
+    rows = planes // bands
+
+    def _component(p: int):
+        return lambda v, d: v * (
+            (F.pmod(F.xxhash64(d, F.lit(p)), F.lit(2001)) - F.lit(1000.0)) / 1000.0
+        )
+
+    out = []
+    for bi in range(bands):
+        val = F.lit(0)
+        for ri in range(rows):
+            comp = F.aggregate(
+                F.zip_with(
+                    F.col(emb_col),
+                    F.sequence(F.lit(0), F.size(emb_col) - 1),
+                    _component(bi * rows + ri),
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+            val = val + F.when(comp > 0, F.lit(1 << ri)).otherwise(F.lit(0))
+        out.append(F.concat_ws(":", F.lit(bi), val.cast("string")))
+    return F.array(*out)
+
+
 def _rh_signature(emb_col: str, planes: int = 16):
     """Random-hyperplane signature as JVM column expressions: plane p's
     normal component for dim d is a deterministic pseudo-gaussian from
@@ -618,7 +647,6 @@ def test_vectorized_lsh_bits_match_jvm_expressions(spark):
 
     from azure_workflow_for_kml_satellite_spark.operators.similarity import (
         _plane_weights,
-        _rh_band_buckets,
         _rh_band_buckets_vec,
         lsh_band_shape,
     )
@@ -656,3 +684,35 @@ def test_vectorized_lsh_bits_match_jvm_expressions(spark):
     assert [r.bkt_vec for r in got] == [r.bkt_jvm for r in got]
     assert len({r.sig_jvm for r in got}) > 100  # the bits really vary
     assert all(len(r.bkt_jvm) == bands for r in got)
+
+
+def test_lsh_operators_on_a_table_without_embeddings(spark):
+    """No row has an embedding (an empty table, or only nulls): both LSH
+    operators return no rows, with their output columns and types. A null
+    embedding beside real ones is dropped: it scores no cosine."""
+    from azure_workflow_for_kml_satellite_spark.operators.similarity import (
+        embedding_near_dup_lsh,
+        lsh_topk,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    for emb in (
+        spark.createDataFrame([], schema),
+        spark.createDataFrame([(1, None), (2, None)], schema),
+    ):
+        pairs = embedding_near_dup_lsh(emb, threshold=0.9)
+        assert pairs.dtypes == [("id_a", "bigint"), ("id_b", "bigint"), ("cosine", "double")]
+        assert pairs.count() == 0
+        topk = lsh_topk(emb, [1, 2], k=3)
+        assert topk.dtypes == [
+            ("query_id", "bigint"), ("neighbor_id", "bigint"), ("cosine", "double"), ("rank", "int"),
+        ]
+        assert topk.count() == 0
+
+    mixed = spark.createDataFrame([(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.01])], schema)
+    cos = round(1.0 / (1.0 + 0.01**2) ** 0.5, 6)
+    assert [tuple(r) for r in embedding_near_dup_lsh(mixed, threshold=0.9).collect()] == [
+        (1, 3, cos)
+    ]
+    topk = lsh_topk(mixed, [1, 2, 3], k=3, coverage_band=True)
+    assert sorted(tuple(r) for r in topk.collect()) == [(1, 3, cos, 1), (3, 1, cos, 1)]

@@ -166,3 +166,14 @@ def test_bbox_cell_join_matches_cross_join(spark):
                 .collect()
             )
             assert got == ref, (prefix, broadcast, salt)
+
+
+def test_display_scene_join_has_an_equi_key(spark):
+    """The display ladder joins scenes to its rungs on the collection: the
+    plan does not fall back to a nested-loop or cartesian join."""
+    import __spark_entry__ as E
+
+    df = E.queries()["q_display_scene"](spark, SF_SMALL)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan

@@ -24,6 +24,7 @@ sys.path.insert(0, str(REPO))
 from azure_workflow_for_kml_satellite_spark.functions import native as N  # noqa: E402
 from azure_workflow_for_kml_satellite_spark.functions import raster as R  # noqa: E402
 from azure_workflow_for_kml_satellite_spark.operators import change as C  # noqa: E402
+from azure_workflow_for_kml_satellite_spark.operators.ndvi import recipe_args  # noqa: E402
 
 pytestmark = pytest.mark.skipif(
     not N.available(), reason="native kernels unavailable (no gcc?)"
@@ -151,7 +152,7 @@ def test_stats_entrypoint_matches_forced_numpy():
         cases.append((f"scene-{trial}", scene, res, read, coll))
     recipes = random.Random(11)
     for i in range(150):
-        cases.append(C._recipe_args(_mk_recipe(recipes, big=(i % 17 == 0)), ""))
+        cases.append(recipe_args(_mk_recipe(recipes, big=(i % 17 == 0))))
     native_out = [R.ndvi_window_stats_blocked(*c) for c in cases]
     lib = N.LIB
     try:
