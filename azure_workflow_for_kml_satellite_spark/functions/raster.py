@@ -90,11 +90,9 @@ DEG_PER_METRE = 1.0 / 111_320.0
 
 
 def grid_shape(bbox: list[float], resolution_m: float) -> tuple[int, int]:
-    """(height, width) of a scene raster covering bbox at resolution_m."""
-    px = resolution_m * DEG_PER_METRE
-    h = max(1, int(round((bbox[3] - bbox[1]) / px)))
-    w = max(1, int(round((bbox[2] - bbox[0]) / px)))
-    return h, w
+    """(height, width) of a scene raster covering bbox at resolution_m: the
+    metric grid of ``grid_shape_m`` with a pixel of resolution_m in degrees."""
+    return grid_shape_m(bbox, resolution_m * DEG_PER_METRE)
 
 
 def window_from_bounds(
@@ -105,20 +103,10 @@ def window_from_bounds(
     """Pixel window (row0, row1, col0, col1) for read_bbox, clamped to the
     scene raster — the role of rasterio.windows.from_bounds + clamp
     (reference: ndvi.py:474-478). Floor/ceil semantics: any pixel touching
-    the bbox is included.
+    the bbox is included. The body is ``window_from_bounds_m``'s, with a
+    pixel of resolution_m in degrees.
     """
-    px = resolution_m * DEG_PER_METRE
-    h, w = grid_shape(scene_bbox, resolution_m)
-    x0, y1 = scene_bbox[0], scene_bbox[3]
-    import math
-
-    col0 = max(0, min(w, int(math.floor((read_bbox[0] - x0) / px))))
-    col1 = max(0, min(w, int(math.ceil((read_bbox[2] - x0) / px))))
-    row0 = max(0, min(h, int(math.floor((y1 - read_bbox[3]) / px))))
-    row1 = max(0, min(h, int(math.ceil((y1 - read_bbox[1]) / px))))
-    if col1 <= col0 or row1 <= row0:
-        return None
-    return row0, row1, col0, col1
+    return window_from_bounds_m(scene_bbox, resolution_m * DEG_PER_METRE, read_bbox)
 
 
 def grid_shape_m(bbox_m: list[float], resolution_m: float) -> tuple[int, int]:
@@ -134,8 +122,9 @@ def window_from_bounds_m(
     resolution_m: float,
     read_bbox_m: list[float],
 ) -> tuple[int, int, int, int] | None:
-    """Metric-grid variant of ``window_from_bounds`` for projected (UTM)
-    scenes: identical floor/ceil + clamp semantics, pixel size in metres."""
+    """Pixel window on a projected (UTM) scene grid, pixel size in CRS
+    units; the one window body (``window_from_bounds`` calls it with the
+    pixel size in degrees): floor/ceil + clamp."""
     import math
 
     px = resolution_m
@@ -302,18 +291,11 @@ def read_window_bands_utm(
     AOI bbox into the scene CRS, fulfilment.py:264-271). Distinct raster
     content from the geographic variant (seed is salted with ':utm');
     red/nir at resolution_m, SCL at 2x pixel size, all in CRS metres."""
-    seed = scene_seed(scene_id + ":utm")
     win = window_from_bounds_m(scene_bbox_m, resolution_m, read_bbox_m)
     if win is None:
         return None
-    out = {
-        "red": gen_band(seed, BAND_RED, win),
-        "nir": gen_band(seed, BAND_NIR, win),
-    }
     scl_win = window_from_bounds_m(scene_bbox_m, resolution_m * 2, read_bbox_m)
-    if scl_win is not None:
-        out["scl"] = gen_band(seed, BAND_SCL, scl_win)
-    return out
+    return _recipe_bands((scene_seed(scene_id + ":utm"), "sentinel-2-l2a", win, scl_win))
 
 
 def read_class_window(

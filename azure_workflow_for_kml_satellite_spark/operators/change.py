@@ -14,7 +14,6 @@ NOT year_b == year_a + 1 (reference: change_detection.py:190-197).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
@@ -128,44 +127,25 @@ def change_summary_per_aoi(changes: DataFrame) -> DataFrame:
     """A3: per-AOI rollup + trajectory classification
     (reference: change_detection.py:244-259).
 
-    Computed with the shared pure kernel inside applyInPandas rather than
-    Spark aggregates: the reference rounds with Python ``round`` (banker's),
-    Spark's ``round`` is HALF_UP — on exact .5 boundaries they differ, so
-    bit-for-bit parity requires the Python path (SURVEY.md §7.4 risk 1).
-    Groups are tiny (≤ #seasons × #years rows)."""
+    Computed with the shared pure kernel over each AOI's series
+    (``rows.map_rows``) rather than Spark aggregates: the reference rounds
+    with Python ``round`` (banker's), Spark's ``round`` is HALF_UP — on
+    exact .5 boundaries they differ, so bit-for-bit parity requires the
+    Python path (SURVEY.md §7.4 risk 1). Series are tiny (≤ #seasons ×
+    #years rows)."""
     from azure_workflow_for_kml_satellite_spark.functions.metrics import change_summary
 
-    schema = T.StructType(
-        [
-            changes.schema["url"],
-            changes.schema["feature_index"],
-            T.StructField("comparisons", T.LongType()),
-            T.StructField("total_loss_ha", T.DoubleType()),
-            T.StructField("total_gain_ha", T.DoubleType()),
-            T.StructField("avg_mean_delta", T.DoubleType()),
-            T.StructField("trajectory", T.StringType()),
-        ]
-    )
-
-    from pyspark.sql.functions import pandas_udf
-
-    out_t = T.StructType([f for f in schema.fields if f.name not in ("url", "feature_index")])
-
-    @pandas_udf(out_t)
-    def summary_udf(series: pd.Series) -> pd.DataFrame:
-        rows = []
-        for arr in series:
-            # canonical accumulation order: seasons sorted, years ascending —
-            # float sums are order-dependent and the reference iterates
-            # sorted(season_groups) by year (change_detection.py:190-197);
-            # sort_array on the struct gives exactly that order.
-            s = change_summary(
-                [x["mean_delta"] for x in arr],
-                [x["loss_ha"] for x in arr],
-                [x["gain_ha"] for x in arr],
-            )
-            rows.append(s)
-        return pd.DataFrame(rows, columns=[f.name for f in out_t.fields])
+    def summary_row(rec: dict) -> list[dict]:
+        # canonical accumulation order: seasons sorted, years ascending —
+        # float sums are order-dependent and the reference iterates
+        # sorted(season_groups) by year (change_detection.py:190-197);
+        # sort_array on the struct gives exactly that order.
+        arr = rec["series"]
+        return [change_summary(
+            [x["mean_delta"] for x in arr],
+            [x["loss_ha"] for x in arr],
+            [x["gain_ha"] for x in arr],
+        )]
 
     agg = (
         changes.select(
@@ -183,6 +163,16 @@ def change_summary_per_aoi(changes: DataFrame) -> DataFrame:
             ).alias("series")
         )
     )
-    return agg.select(
-        "url", "feature_index", summary_udf(F.col("series")).alias("s")
-    ).select("url", "feature_index", "s.*")
+    return map_rows(
+        agg,
+        ["url", "feature_index"],
+        ["series"],
+        [
+            T.StructField("comparisons", T.LongType()),
+            T.StructField("total_loss_ha", T.DoubleType()),
+            T.StructField("total_gain_ha", T.DoubleType()),
+            T.StructField("avg_mean_delta", T.DoubleType()),
+            T.StructField("trajectory", T.StringType()),
+        ],
+        summary_row,
+    )

@@ -12,6 +12,8 @@ Scale notes:
 - MinHash-LSH is the scale path: k hashes → b bands × r rows, candidates =
   pairs sharing a band bucket, verified with exact Jaccard. Probabilistic
   recall; its *verified* output is still exact-Jaccard-filtered.
+- Every Jaccard operator ends in one verify tail (``_jaccard_at_least``):
+  size join → Jaccard = |A∩B| / (|A|+|B|−|A∩B|) → threshold.
 - SimHash: 64-bit fingerprint; near-dups = fingerprints at Hamming
   distance ≤ d found by pigeonhole block join.
 
@@ -74,11 +76,24 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     )
 
 
-def _verified_jaccard(
-    cand: DataFrame, sh: DataFrame, sizes: DataFrame, threshold: float
-) -> DataFrame:
+def _jaccard_at_least(inter: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, inter) shingle-intersection counts → the pairs whose
+    Jaccard |A∩B| / (|A|+|B|−|A∩B|) is ≥ ``threshold``, set sizes counted
+    from the (doc_id, sh) table ``sh``: (id_a, id_b, jaccard rounded to 6
+    places). The one verify tail of every Jaccard operator."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    return (
+        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+        .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
+def _verified_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard for candidate (id_a, id_b) pairs: intersection count via
-    a shingle equi-join restricted to the candidates, |A∪B| = |A|+|B|−|A∩B|."""
+    a shingle equi-join restricted to the candidates, then the verify tail."""
     a = sh.select(F.col("doc_id").alias("id_a"), "sh")
     b = sh.select(F.col("doc_id").alias("id_b"), "sh")
     inter = (
@@ -87,13 +102,7 @@ def _verified_jaccard(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _jaccard_at_least(inter, sh, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -118,7 +127,6 @@ def ngram_jaccard_pairs(
     behaviour used by the oracle query.
     """
     sh = shingles(documents, n)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     if max_shingle_df is None:
         a = sh.select(F.col("doc_id").alias("id_a"), "sh")
         b = sh.select(F.col("doc_id").alias("id_b"), "sh")
@@ -128,18 +136,7 @@ def ngram_jaccard_pairs(
             .groupBy("id_a", "id_b")
             .agg(F.count("*").alias("inter"))
         )
-        return (
-            inter.join(
-                sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a"
-            )
-            .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-            .withColumn(
-                "jaccard",
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        )
+        return _jaccard_at_least(inter, sh, threshold)
     # scale path: document-frequency-capped candidate generation + exact verify
     rare = (
         sh.groupBy("sh")
@@ -156,7 +153,7 @@ def ngram_jaccard_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    return _verified_jaccard(cand, sh, sizes, threshold)
+    return _verified_jaccard(cand, sh, threshold)
 
 
 def minhash_signatures(documents: DataFrame, num_hashes: int = 64, n: int = 3) -> DataFrame:
@@ -217,9 +214,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # verify candidates with exact jaccard
-    sh = shingles(documents, n)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    return _verified_jaccard(cand, sh, sizes, threshold)
+    return _verified_jaccard(cand, shingles(documents, n), threshold)
 
 
 def simhash(documents: DataFrame, bits: int = 64) -> DataFrame:

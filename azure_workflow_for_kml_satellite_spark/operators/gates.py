@@ -11,19 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from azure_workflow_for_kml_satellite_spark.constants import MULTI_REGION_THRESHOLD_KM
+from azure_workflow_for_kml_satellite_spark.functions.geometry import haversine_km
 from azure_workflow_for_kml_satellite_spark.operators.knn import _R_KM, _hav_km
-
-
-def _hav_py(lon1: float, lat1: float, lon2: float, lat2: float) -> float:
-    import math
-
-    dlat = math.radians(lat2 - lat1)
-    dlon = math.radians(lon2 - lon1)
-    a = (
-        math.sin(dlat / 2) ** 2
-        + math.cos(math.radians(lat1)) * math.cos(math.radians(lat2)) * math.sin(dlon / 2) ** 2
-    )
-    return 2 * _R_KM * math.atan2(math.sqrt(a), math.sqrt(1 - a))
 
 
 def _span_bound_km(lo_x: float, lo_y: float, hi_x: float, hi_y: float) -> float:
@@ -83,7 +72,7 @@ def is_multi_region(aois: DataFrame, threshold_km: float = MULTI_REGION_THRESHOL
     ]
     for i in range(len(pts)):
         for j in range(i + 1, len(pts)):
-            if _hav_py(*pts[i], *pts[j]) > threshold_km:
+            if haversine_km(*pts[i], *pts[j]) > threshold_km:
                 return True  # witnessed by a real centroid pair
     if ext["n"] <= exact_limit:
         a = c.select(F.col("centroid_lon").alias("x1"), F.col("centroid_lat").alias("y1"))

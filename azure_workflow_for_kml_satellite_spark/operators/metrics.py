@@ -1,11 +1,12 @@
 """Per-AOI metrics: geometry, NDVI trend, weather summary, portfolio rollup
 (SURVEY.md §2.4 A5-A8, §2.8 G13-G15).
 
-Geometry metrics are pure column expressions (JVM-side); the NDVI trend uses
-``applyInPandas`` per AOI because the reference's arithmetic (OLS slope over
-the *valid-frame* index with original-frame-id drop tracking and Python
-``round``) must run on the ordered series in one place for exact parity
-(reference: aoi_metrics.py:51-122; SURVEY.md §7.4 risk 1).
+Geometry metrics are pure column expressions (JVM-side); the NDVI trend runs
+in Python over each AOI's series (``rows.map_rows``) because the reference's
+arithmetic (OLS slope over the *valid-frame* index with original-frame-id
+drop tracking and Python ``round``) must run on the ordered series in one
+place for exact parity (reference: aoi_metrics.py:51-122; SURVEY.md §7.4
+risk 1).
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from azure_workflow_for_kml_satellite_spark.constants import (
     METRES_PER_DEGREE_LATITUDE,
 )
 from azure_workflow_for_kml_satellite_spark.functions.metrics import ndvi_trend
+from azure_workflow_for_kml_satellite_spark.operators.rows import map_rows
 
 _KM_PER_DEG = METRES_PER_DEGREE_LATITUDE / 1000.0
 
@@ -53,50 +55,40 @@ def geometry_metrics(aois: DataFrame) -> DataFrame:
     )
 
 
-_TREND_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("feature_index", T.IntegerType()),
-        T.StructField("direction", T.StringType()),
-        T.StructField("observations", T.LongType()),
-        T.StructField("slope_per_frame", T.DoubleType()),
-        T.StructField("earliest_mean", T.DoubleType()),
-        T.StructField("latest_mean", T.DoubleType()),
-        T.StructField("overall_change", T.DoubleType()),
-        T.StructField("overall_change_pct", T.DoubleType()),
-        T.StructField("max_consecutive_drop", T.DoubleType()),
-        T.StructField("max_drop_frame_id", T.LongType()),
-        T.StructField("coefficient_of_variation", T.DoubleType()),
-        T.StructField("mean_ndvi", T.DoubleType()),
-        T.StructField("std_ndvi", T.DoubleType()),
-        T.StructField("health_class", T.StringType()),
-    ]
-)
+_TREND_FIELDS = [
+    T.StructField("direction", T.StringType()),
+    T.StructField("observations", T.LongType()),
+    T.StructField("slope_per_frame", T.DoubleType()),
+    T.StructField("earliest_mean", T.DoubleType()),
+    T.StructField("latest_mean", T.DoubleType()),
+    T.StructField("overall_change", T.DoubleType()),
+    T.StructField("overall_change_pct", T.DoubleType()),
+    T.StructField("max_consecutive_drop", T.DoubleType()),
+    T.StructField("max_drop_frame_id", T.LongType()),
+    T.StructField("coefficient_of_variation", T.DoubleType()),
+    T.StructField("mean_ndvi", T.DoubleType()),
+    T.StructField("std_ndvi", T.DoubleType()),
+    T.StructField("health_class", T.StringType()),
+]
 
 
 def ndvi_trend_per_aoi(ndvi_df: DataFrame) -> DataFrame:
     """A7: one trend row per AOI from its frame-ordered NDVI means.
 
     Shape: JVM-side ``collect_list(struct(frame_id, mean))`` + ``sort_array``
-    per AOI (map-side combining aggregation), then ONE Arrow-batched scalar
-    pandas UDF computes the reference arithmetic for thousands of AOIs per
-    batch — far cheaper than an applyInPandas call per group."""
-    from pyspark.sql.functions import pandas_udf
+    per AOI (map-side combining aggregation), then ``rows.map_rows`` runs
+    the reference arithmetic on each AOI's series, thousands of AOIs per
+    Arrow batch — far cheaper than an applyInPandas call per group."""
 
-    fields = [f for f in _TREND_SCHEMA.fields if f.name not in ("url", "feature_index")]
-    out_t = T.StructType(fields)
-
-    @pandas_udf(out_t)
-    def trend_udf(series: pd.Series) -> pd.DataFrame:
-        rows = []
-        for arr in series:
-            pairs = [(int(s["frame_id"]), None if s["ndvi_mean"] is None or pd.isna(s["ndvi_mean"]) else float(s["ndvi_mean"])) for s in arr]
-            t = ndvi_trend(pairs)
-            t["max_drop_frame_id"] = (
-                None if t["max_drop_frame_id"] is None else int(t["max_drop_frame_id"])
-            )
-            rows.append({f.name: t[f.name] for f in fields})
-        return pd.DataFrame(rows, columns=[f.name for f in fields])
+    def trend_row(rec: dict) -> list[dict]:
+        t = ndvi_trend([
+            (int(s["frame_id"]), None if pd.isna(s["ndvi_mean"]) else float(s["ndvi_mean"]))
+            for s in rec["series"]
+        ])
+        t["max_drop_frame_id"] = (
+            None if t["max_drop_frame_id"] is None else int(t["max_drop_frame_id"])
+        )
+        return [t]
 
     # The upstream NDVI cache keeps the raster stage's grain
     # (RASTER_TASKS_PER_CORE x parallelism, 16 partitions on 4 cores); this
@@ -114,9 +106,7 @@ def ndvi_trend_per_aoi(ndvi_df: DataFrame) -> DataFrame:
             F.sort_array(F.collect_list(F.struct("frame_id", "ndvi_mean"))).alias("series")
         )
     )
-    return agg.select(
-        "url", "feature_index", trend_udf(F.col("series")).alias("t")
-    ).select("url", "feature_index", "t.*")
+    return map_rows(agg, ["url", "feature_index"], ["series"], _TREND_FIELDS, trend_row)
 
 
 def aoi_region(aois: DataFrame, regions: DataFrame) -> DataFrame:

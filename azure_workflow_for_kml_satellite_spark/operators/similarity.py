@@ -1,12 +1,21 @@
 """Similarity search over ``embeddings`` (task brief: brute-force cosine
 top-k baseline + LSH-bucketed scale path).
 
-- Brute force: cross join queries × corpus with the cosine as a vectorized
-  Arrow UDF (``_cosine_vec``), top-k via window rank. Exact; the baseline
-  the oracle checks bit-for-bit (DuckDB list_cosine_similarity).
-- LSH path: random-hyperplane signatures (deterministic hyperplanes from
-  xxhash of (dim, plane)), candidates share a signature prefix bucket; top-k
-  among candidates. Approximate; checked rows-only.
+Every operator is "candidates → one shared tail":
+
+- input step: ``_vectors`` selects ``vec_id`` and the embedding as
+  ``array<double>`` and drops null embeddings (a null scores no cosine);
+- candidates: the cross join (exact ``brute_force_topk`` and
+  ``embedding_near_dup_pairs``, the references the others are checked
+  against), the IVF probe join, or the random-hyperplane bucket joins
+  (deterministic hyperplanes from xxhash of (dim, plane), with the skew
+  guard on the near-dup self-join);
+- tail: ``_topk`` (exact cosine as the vectorized Arrow UDF
+  ``_cosine_vec``, window rank) or ``_at_least`` (exact cosine ≥ τ).
+
+The exact operators are checked bit for bit by the oracle (DuckDB
+list_cosine_similarity); the approximate ones at their provable-equality
+operating points, and rows-only / recall elsewhere.
 """
 
 from __future__ import annotations
@@ -55,6 +64,44 @@ def _cosine_vec(a, b):
     return pandas_udf(cos, "double", PandasUDFType.SCALAR)(a, b)
 
 
+def _vectors(
+    embeddings: DataFrame, id_as: str = "vec_id", emb_as: str = "embedding"
+) -> DataFrame:
+    """The one input step: (vec_id, embedding cast to array<double>),
+    renamed to (``id_as``, ``emb_as``), of the rows that have an embedding
+    — a null row can score no cosine."""
+    return embeddings.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias(id_as), F.col("embedding").cast("array<double>").alias(emb_as)
+    )
+
+
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, q_emb, c_emb) candidate pairs → the ``k``
+    best per query by exact cosine, ties by neighbor_id:
+    (query_id, neighbor_id, cosine rounded to 6 places, rank)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        cand.select(
+            "query_id",
+            "neighbor_id",
+            _cosine_vec(F.col("q_emb"), F.col("c_emb")).alias("cosine"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
+    )
+
+
+def _at_least(cand: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, e_a, e_b) candidate pairs → the pairs whose exact
+    cosine is ≥ ``threshold``: (id_a, id_b, cosine rounded to 6 places)."""
+    return (
+        cand.withColumn("cosine", _cosine_vec(F.col("e_a"), F.col("e_b")))
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -62,27 +109,9 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k neighbours for the given query vec_ids (self
     excluded). Queries are broadcast — corpus side never shuffles."""
-    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("q_emb"),
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("c_emb"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cosine_vec(F.col("q_emb"), F.col("c_emb")))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    q = _vectors(embeddings, "query_id", "q_emb").filter(F.col("query_id").isin(query_ids))
+    c = _vectors(embeddings, "neighbor_id", "c_emb")
+    return _topk(c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k)
 
 
 def embedding_near_dup_pairs(
@@ -91,22 +120,11 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a, b) with cosine ≥ τ,
     a < b. Exact all-pairs — the correctness baseline; the scale path for
-    this operator is lsh_topk's banded signature buckets (candidates) with
-    this exact cosine as the verify step."""
-    a = embeddings.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").cast("array<double>").alias("e_a"),
-    )
-    b = embeddings.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").cast("array<double>").alias("e_b"),
-    )
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", _cosine_vec(F.col("e_a"), F.col("e_b")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    this operator is embedding_near_dup_lsh (banded signature buckets as
+    candidates, the same exact-cosine tail)."""
+    a = _vectors(embeddings, "id_a", "e_a")
+    b = _vectors(embeddings, "id_b", "e_b")
+    return _at_least(a.join(b, F.col("id_a") < F.col("id_b")), threshold)
 
 
 def _plane_weights(embeddings: DataFrame, planes: int):
@@ -115,7 +133,7 @@ def _plane_weights(embeddings: DataFrame, planes: int):
     pmod 2001, centered /1000) so every value is bit-identical; the
     xxhash64 primitive only exists JVM-side, hence one tiny spark job over
     range(dim). The dimension is that of the first row (0 on an empty
-    table); callers drop null embeddings first."""
+    table); callers pass ``_vectors(embeddings)``, which has no null rows."""
     import numpy as np
 
     first = embeddings.select(F.size("embedding").alias("d")).first()
@@ -323,19 +341,17 @@ def embedding_near_dup_lsh(
     explicitly via release_lsh_cache()."""
     rows, bands = shape if shape is not None else lsh_band_shape(threshold, target_recall)
     planes = rows * bands
-    embeddings = embeddings.filter(F.col("embedding").isNotNull())  # a null scores no cosine
-    weights = _plane_weights(embeddings, planes)
-    emb = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn(
-        "bucket", F.explode(_rh_band_buckets_vec(F.col("emb"), planes, bands, weights))
+    vecs = _vectors(embeddings)
+    weights = _plane_weights(vecs, planes)
+    emb = vecs.withColumn(
+        "bucket", F.explode(_rh_band_buckets_vec(F.col("embedding"), planes, bands, weights))
     )
     app_id = embeddings.sparkSession.sparkContext.applicationId
     release_lsh_cache(app_id)
     emb = emb.persist()
     _LSH_CACHE[app_id] = emb
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("emb").alias("e_a"), "bucket")
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("emb").alias("e_b"), "bucket")
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"), "bucket")
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"), "bucket")
     skew = lsh_bucket_skew(emb, skew_factor, min_hot_bucket)
     if skew["salted"]:
         from azure_workflow_for_kml_satellite_spark.plans.skew import salted_equi_join
@@ -349,13 +365,9 @@ def embedding_near_dup_lsh(
         )
     else:
         joined = a.join(b, "bucket")
-    return (
-        joined
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cosine", _cosine_vec(F.col("e_a"), F.col("e_b")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    return _at_least(
+        joined.filter(F.col("id_a") < F.col("id_b")).dropDuplicates(["id_a", "id_b"]),
+        threshold,
     )
 
 
@@ -368,8 +380,8 @@ def train_ivf_centroids(
 ) -> list[list[float]]:
     """Deterministic IVF centroid training: k-means/Lloyd with init = the
     ``n_centroids`` vectors of smallest xxhash64(vec_id) (reproducible, no
-    RNG), assignment in an Arrow-batched pandas UDF (numpy argmax of the
-    dot products), means via distributed per-dimension avg.
+    RNG), assignment = the first of ``_nearest_centroids`` (an Arrow-batched
+    pandas UDF), means via distributed per-dimension avg.
 
     IVF quality needs only a sketch of the distribution, so by default the
     Lloyd iterations run on a hash sample capped at ``max_train_rows``
@@ -381,7 +393,7 @@ def train_ivf_centroids(
     set is cached across the Lloyd iterations and unpersisted after."""
     import numpy as np
 
-    emb = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
+    emb = _vectors(embeddings, emb_as="emb")
     if sample_fraction is None and max_train_rows is not None:
         n = emb.count()
         if n > max_train_rows:
@@ -403,7 +415,7 @@ def train_ivf_centroids(
         centroids = np.array([r.emb for r in init], dtype=np.float64)
 
         for _ in range(iters):
-            assigned = emb.withColumn("cluster", _assign_udf(centroids)(F.col("emb")))
+            assigned = emb.withColumn("cluster", _nearest_centroids(centroids, 1)("emb")[0])
             new_rows = (
                 assigned.select("cluster", F.posexplode("emb").alias("pos", "v"))
                 .groupBy("cluster", "pos")
@@ -417,31 +429,12 @@ def train_ivf_centroids(
     return centroids.tolist()
 
 
-def _assign_udf(centroids):
-    """Pandas UDF assigning each vector to its max-cosine centroid."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    c = np.asarray(centroids, dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-
-    # explicit functionType form: `from __future__ import annotations` makes
-    # the pd.Series type hints unresolvable strings for pandas_udf inference
-    def assign(embs):
-        m = np.stack(embs.to_numpy())
-        mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(mn @ cn.T, axis=1).astype(np.int32))
-
-    from pyspark.sql.functions import PandasUDFType
-
-    return pandas_udf(assign, "int", PandasUDFType.SCALAR)
-
-
-def _probe_udf(centroids, n_probe: int):
-    """Pandas UDF mapping each query vector to its ``n_probe`` max-cosine
-    centroid ids (stable tie order) — the probe set stays a column, so
-    unbounded query sets never collect to the driver."""
+def _nearest_centroids(centroids, n: int):
+    """Pandas UDF mapping each vector to its ``n`` max-cosine centroid ids,
+    nearest first (stable order on ties), as array<int>. Its first entry is
+    the vector's assignment (``argmax``); the whole array is a query's probe
+    set, kept as a column so unbounded query sets never collect to the
+    driver."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf
@@ -449,13 +442,15 @@ def _probe_udf(centroids, n_probe: int):
     c = np.asarray(centroids, dtype=np.float64)
     cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
 
-    def probe(embs):
+    # explicit functionType form: `from __future__ import annotations` makes
+    # the pd.Series type hints unresolvable strings for pandas_udf inference
+    def nearest(embs):
         m = np.stack(embs.to_numpy())
         mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        idx = np.argsort(-(mn @ cn.T), axis=1, kind="stable")[:, :n_probe]
+        idx = np.argsort(-(mn @ cn.T), axis=1, kind="stable")[:, :n]
         return pd.Series([row.astype(np.int32) for row in idx])
 
-    return pandas_udf(probe, "array<int>", PandasUDFType.SCALAR)
+    return pandas_udf(nearest, "array<int>", PandasUDFType.SCALAR)
 
 
 def ivf_topk(
@@ -486,35 +481,21 @@ def ivf_topk(
     centroids = train_ivf_centroids(
         embeddings, n_centroids, iters, max_train_rows=max_train_rows
     )
-    emb = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn("cluster", _assign_udf(centroids)(F.col("emb")))
-
+    c = _vectors(embeddings, "neighbor_id", "c_emb").withColumn(
+        "cluster", _nearest_centroids(centroids, 1)("c_emb")[0]
+    )
     probes = (
-        embeddings.filter(F.col("vec_id").isin(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("q_emb"),
-        )
+        _vectors(embeddings, "query_id", "q_emb")
+        .filter(F.col("query_id").isin(query_ids))
         .withColumn(
-            "cluster", F.explode(_probe_udf(centroids, min(n_probe, n_centroids))("q_emb"))
+            "cluster",
+            F.explode(_nearest_centroids(centroids, min(n_probe, n_centroids))("q_emb")),
         )
     )
-    cand = emb.join(F.broadcast(probes), "cluster").filter(
-        F.col("vec_id") != F.col("query_id")
+    cand = c.join(F.broadcast(probes), "cluster").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    scored = cand.withColumn("cosine", _cosine_vec(F.col("q_emb"), F.col("emb")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _topk(cand, k)
 
 
 def lsh_topk(
@@ -531,40 +512,33 @@ def lsh_topk(
     q_ngram_jaccard_capped pattern): one extra band whose bucket value is
     constant is appended, so the banded candidate generation provably covers
     every (query, vector) pair — the identical explode → bucket equi-join →
-    dedup → exact-cosine verify → window top-k machinery runs, but its
-    output PROVABLY equals ``brute_force_topk`` and the driver's exact
-    oracle applies. The pruned default (sign-bit bands only) is what runs
-    at 100 TB and is benchmarked/recall-tested separately."""
-    embeddings = embeddings.filter(F.col("embedding").isNotNull())  # a null scores no cosine
-    weights = _plane_weights(embeddings, planes)
-    emb = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    dedup → exact-cosine top-k tail runs, but its output PROVABLY equals
+    ``brute_force_topk`` and the driver's exact oracle applies. The pruned
+    default (sign-bit bands only) is what runs at 100 TB and is
+    benchmarked/recall-tested separately."""
+    vecs = _vectors(embeddings)
+    buckets = _rh_band_buckets_vec(
+        F.col("embedding"), planes, 3, _plane_weights(vecs, planes)
     )
-    buckets = _rh_band_buckets_vec(F.col("emb"), planes, 3, weights)
     if coverage_band:
         buckets = F.concat(buckets, F.array(F.lit("cover:0")))
-    banded = emb.select("vec_id", "emb", F.explode(buckets).alias("bucket"))
+    banded = vecs.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        F.explode(buckets).alias("bucket"),
+    )
     # query side: filter BEFORE the band computation — the buckets are
     # per-row pure, and the broadcast-build subtree otherwise recomputes
     # them for the whole corpus to keep a handful of rows
-    q = (
-        emb.filter(F.col("vec_id").isin(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.explode(buckets).alias("bucket"),
-        )
+    q = vecs.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.explode(buckets).alias("bucket"),
     )
     cand = (
         banded.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "q_emb", F.col("emb").alias("c_emb"))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "q_emb", "c_emb")
         .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", _cosine_vec(F.col("q_emb"), F.col("c_emb")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _topk(cand, k)

@@ -44,6 +44,13 @@ def token_stats(documents: DataFrame) -> DataFrame:
     )
 
 
+def punct_ratio_expr():
+    """Share of the ``text`` characters that are neither word characters nor
+    whitespace (the length floored at 1, so an empty text scores 0)."""
+    punct = F.length("text") - F.length(F.regexp_replace("text", r"[^\w\s]", ""))
+    return punct / F.greatest(F.length("text"), F.lit(1))
+
+
 def quality_score(documents: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality heuristics; score in
     [0,1] = mean of three clamped components."""
@@ -54,8 +61,7 @@ def quality_score(documents: DataFrame) -> DataFrame:
         F.filter(toks, lambda w: w.isin(_EN_STOPWORDS))
     )
     stop_ratio = stop_hits / n_tokens
-    punct = F.length("text") - F.length(F.regexp_replace("text", r"[^\w\s]", ""))
-    punct_ratio = punct / F.greatest(F.length("text"), F.lit(1))
+    punct_ratio = punct_ratio_expr()
     len_component = F.least(n_tokens / F.lit(100.0), F.lit(1.0))
     stop_component = F.least(stop_ratio * 5.0, F.lit(1.0))
     punct_component = F.lit(1.0) - F.least(punct_ratio * 10.0, F.lit(1.0))

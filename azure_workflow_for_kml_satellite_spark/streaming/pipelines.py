@@ -13,10 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from azure_workflow_for_kml_satellite_spark.operators.dedup import tokens_expr
 from azure_workflow_for_kml_satellite_spark.operators.extract import (
     FEATURES_SCHEMA,
     extract_features,
 )
+from azure_workflow_for_kml_satellite_spark.operators.text import punct_ratio_expr
 
 
 def streaming_extract(spark: SparkSession, input_dir: str, pages_schema=None) -> DataFrame:
@@ -168,11 +170,9 @@ def streaming_quality_gate(
     batch quality_score heuristics (token floor + punctuation ceiling) as a
     pure column-expression filter — runs incrementally with no state."""
     docs = spark.readStream.schema(docs_schema).parquet(input_dir)
-    toks = F.split(F.lower(F.trim("text")), r"\s+")
-    punct = F.length("text") - F.length(F.regexp_replace("text", r"[^\w\s]", ""))
-    punct_ratio = punct / F.greatest(F.length("text"), F.lit(1))
+    punct_ratio = punct_ratio_expr()
     return (
-        docs.withColumn("n_tokens", F.size(toks))
+        docs.withColumn("n_tokens", F.size(tokens_expr()))
         .withColumn("punct_ratio", F.round(punct_ratio, 4))
         .filter((F.col("n_tokens") >= min_tokens) & (punct_ratio <= max_punct_ratio))
     )

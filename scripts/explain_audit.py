@@ -33,8 +33,10 @@ AUDITED = [
     "q_minhash_lsh",
     "q_dedup_clusters",
     "q_simhash_pairs",
+    "q_embed_near_dup",
     "q_embed_near_dup_lsh",
     "q_ann_topk",
+    "q_ann_lsh",
     "q_ann_ivf",
     "q_monthly_frames",
     "q_knn_gauges_cells",
@@ -47,9 +49,12 @@ AUDITED = [
     "q_pricing_summary",
 ]
 
-# Queries whose one BroadcastNestedLoopJoin is a non-equi predicate against a
-# broadcast-small side; any other nested loop is flagged for a look.
+# Queries whose one BroadcastNestedLoopJoin is intended: a non-equi predicate
+# against a broadcast-small side, or an exact all-pairs baseline; any other
+# nested loop is flagged for a look.
 NESTED_LOOP_OK = {
+    "q_embed_near_dup": "`<` over all vector pairs: the exact baseline "
+    "(its scale path is q_embed_near_dup_lsh)",
     "q_weather_summary": "AOI → region bbox against the small regions table",
     "q_ann_topk": "`!=` against the broadcast query set",
     "q_monthly_frames": "a date range against the broadcast month frames",

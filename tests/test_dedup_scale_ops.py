@@ -688,10 +688,15 @@ def test_vectorized_lsh_bits_match_jvm_expressions(spark):
 
 def test_lsh_operators_on_a_table_without_embeddings(spark):
     """No row has an embedding (an empty table, or only nulls): both LSH
-    operators return no rows, with their output columns and types. A null
-    embedding beside real ones is dropped: it scores no cosine."""
+    operators and both exact baselines return no rows, the LSH ones with
+    their output columns and types. A null embedding beside real ones is
+    dropped: it scores no cosine, and the exact baselines and IVF (every
+    list probed) return the rows of their LSH counterparts."""
     from azure_workflow_for_kml_satellite_spark.operators.similarity import (
+        brute_force_topk,
         embedding_near_dup_lsh,
+        embedding_near_dup_pairs,
+        ivf_topk,
         lsh_topk,
     )
 
@@ -708,6 +713,8 @@ def test_lsh_operators_on_a_table_without_embeddings(spark):
             ("query_id", "bigint"), ("neighbor_id", "bigint"), ("cosine", "double"), ("rank", "int"),
         ]
         assert topk.count() == 0
+        assert brute_force_topk(emb, [1, 2], k=3).count() == 0
+        assert embedding_near_dup_pairs(emb, threshold=0.9).count() == 0
 
     mixed = spark.createDataFrame([(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.01])], schema)
     cos = round(1.0 / (1.0 + 0.01**2) ** 0.5, 6)
@@ -716,3 +723,17 @@ def test_lsh_operators_on_a_table_without_embeddings(spark):
     ]
     topk = lsh_topk(mixed, [1, 2, 3], k=3, coverage_band=True)
     assert sorted(tuple(r) for r in topk.collect()) == [(1, 3, cos, 1), (3, 1, cos, 1)]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    mixed4 = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.01]), (4, [0.0, 1.0])], schema
+    )
+    for tau in (0.0, 0.9):
+        lsh_pairs = rows(embedding_near_dup_lsh(mixed4, threshold=tau))
+        assert lsh_pairs and rows(embedding_near_dup_pairs(mixed4, threshold=tau)) == lsh_pairs
+    lsh = rows(lsh_topk(mixed4, [1, 2, 3, 4], k=2, coverage_band=True))
+    assert len(lsh) == 6
+    assert rows(brute_force_topk(mixed4, [1, 2, 3, 4], k=2)) == lsh
+    assert rows(ivf_topk(mixed4, [1, 2, 3, 4], k=2, n_centroids=2, n_probe=2)) == lsh

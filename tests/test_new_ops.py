@@ -1286,7 +1286,7 @@ def test_cluster_star_matches_propagation_and_handles_long_chains(spark):
     over the Python-haversine pairs within eps, including a 120-AOI chain
     (diameter 119), and must raise when its round budget is too small."""
     from azure_workflow_for_kml_satellite_spark.operators.cluster import cluster_aois
-    from azure_workflow_for_kml_satellite_spark.operators.gates import _hav_py
+    from azure_workflow_for_kml_satellite_spark.functions.geometry import haversine_km
     from tests.test_dedup_scale_ops import _union_find_min_labels
 
     # chain of points spaced just under eps (0.5 km) plus isolated points
@@ -1305,7 +1305,7 @@ def test_cluster_star_matches_propagation_and_handles_long_chains(spark):
         (p[2], q[2])
         for i, p in enumerate(rows)
         for q in rows[i + 1:]
-        if _hav_py(p[3], p[4], q[3], q[4]) <= 0.5
+        if haversine_km(p[3], p[4], q[3], q[4]) <= 0.5
     ]
     expected = _union_find_min_labels(keys, near)
     star = {(r.url, r.feature_index): r.cluster_key
