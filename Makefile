@@ -1,6 +1,6 @@
 # One-command checks (VERDICT r5 task 9: rotated-out queries must not be
 # able to regress silently between driver windows — `make check` runs the
-# FULL-registry (58-query) exact oracle gate, not just the first
+# FULL-registry (57-query) exact oracle gate, not just the first
 # 50 entries).
 #
 #   make check   — pytest suite + full exact correctness gate at sf0.01

@@ -440,7 +440,8 @@ def _nearest_centroids(centroids, n: int):
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     c = np.asarray(centroids, dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    # axis -1: a table with no embedding trains no centroid, and [] is 1-D
+    cn = c / np.maximum(np.linalg.norm(c, axis=-1, keepdims=True), 1e-12)
 
     # explicit functionType form: `from __future__ import annotations` makes
     # the pd.Series type hints unresolvable strings for pandas_udf inference

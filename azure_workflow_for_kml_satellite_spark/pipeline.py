@@ -171,18 +171,12 @@ def run_eudr(
     """EP3 (reference: blueprints/analysis.py:490-640, runner.py:623-839):
     EUDR mode — frames cut to the post-2020 window (F4), supplementary
     layers, Landsat baseline, and the deforestation-free determination."""
-    from azure_workflow_for_kml_satellite_spark.operators.change import (
-        change_summary_per_aoi,
-        season_changes,
-    )
+    from azure_workflow_for_kml_satellite_spark.operators.change import season_changes
     from azure_workflow_for_kml_satellite_spark.operators.eudr import (
-        determination,
         landsat_baseline,
         landsat_baseline_summary,
-        lulc_tree_trend,
     )
     from azure_workflow_for_kml_satellite_spark.operators.ndvi import ndvi_stats
-    from azure_workflow_for_kml_satellite_spark.operators.pip import wdpa_overlap
     from azure_workflow_for_kml_satellite_spark.sources.frames import (
         EUDR_FRAME_DATE_START,
     )
@@ -205,21 +199,39 @@ def run_eudr(
         season_changes(nd), "change→summary/determination", contracts.SEASON_CHANGES
     )
     baseline = landsat_baseline(aois, t["scenes"])
-    det = determination(
-        aois,
-        change_summary_per_aoi(ch),
-        ch,
-        wdpa_overlap(aois, t["protected_areas"]),
-        lulc_tree_trend(aois),
-    )
     return {
         "aois": aois,
         "ndvi": nd,
         "season_changes": ch,
         "landsat_baseline": baseline,
         "landsat_baseline_summary": landsat_baseline_summary(baseline),
-        "determination": det,
+        "determination": eudr_determination(aois, ch, t["protected_areas"]),
     }
+
+
+def eudr_determination(
+    aois: DataFrame, changes: DataFrame, protected_areas: DataFrame
+) -> DataFrame:
+    """The deforestation-free verdict per AOI from its season ``changes``
+    (over whatever frame window the caller ran), the WDPA overlap and the
+    WorldCover tree-cover trend: the one composition ``run_eudr`` and
+    ``q_determination`` share."""
+    from azure_workflow_for_kml_satellite_spark.operators.change import (
+        change_summary_per_aoi,
+    )
+    from azure_workflow_for_kml_satellite_spark.operators.eudr import (
+        determination,
+        lulc_tree_trend,
+    )
+    from azure_workflow_for_kml_satellite_spark.operators.pip import wdpa_overlap
+
+    return determination(
+        aois,
+        change_summary_per_aoi(changes),
+        changes,
+        wdpa_overlap(aois, protected_areas),
+        lulc_tree_trend(aois),
+    )
 
 
 def build_ndvi(

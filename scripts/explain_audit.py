@@ -39,7 +39,7 @@ AUDITED = [
     "q_ann_lsh",
     "q_ann_ivf",
     "q_monthly_frames",
-    "q_knn_gauges_cells",
+    "q_knn_gauges",
     "q_portfolio",
     "q_source_stats",
     "q_cell_density",
@@ -59,6 +59,8 @@ NESTED_LOOP_OK = {
     "q_ann_topk": "`!=` against the broadcast query set",
     "q_monthly_frames": "a date range against the broadcast month frames",
     "q_landsat_baseline": "a date range against the 2-row broadcast window table",
+    "q_knn_gauges": "no key: every AOI centroid is scored against the 100-row "
+    "broadcast gauge table",
 }
 
 

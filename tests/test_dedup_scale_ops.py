@@ -688,10 +688,10 @@ def test_vectorized_lsh_bits_match_jvm_expressions(spark):
 
 def test_lsh_operators_on_a_table_without_embeddings(spark):
     """No row has an embedding (an empty table, or only nulls): both LSH
-    operators and both exact baselines return no rows, the LSH ones with
-    their output columns and types. A null embedding beside real ones is
-    dropped: it scores no cosine, and the exact baselines and IVF (every
-    list probed) return the rows of their LSH counterparts."""
+    operators, IVF and both exact baselines return no rows, the LSH ones
+    and IVF with their output columns and types. A null embedding beside
+    real ones is dropped: it scores no cosine, and the exact baselines and
+    IVF (every list probed) return the rows of their LSH counterparts."""
     from azure_workflow_for_kml_satellite_spark.operators.similarity import (
         brute_force_topk,
         embedding_near_dup_lsh,
@@ -715,6 +715,8 @@ def test_lsh_operators_on_a_table_without_embeddings(spark):
         assert topk.count() == 0
         assert brute_force_topk(emb, [1, 2], k=3).count() == 0
         assert embedding_near_dup_pairs(emb, threshold=0.9).count() == 0
+        ivf = ivf_topk(emb, [1, 2], k=3, n_centroids=2, n_probe=2)
+        assert ivf.dtypes == topk.dtypes and ivf.count() == 0
 
     mixed = spark.createDataFrame([(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.01])], schema)
     cos = round(1.0 / (1.0 + 0.01**2) ** 0.5, 6)

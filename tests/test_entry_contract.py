@@ -23,7 +23,7 @@ def test_queries_oracles_consistent():
     for name in ("q_minhash_lsh", "q_simhash", "q_simhash_pairs", "q_fingerprint",
                  "q_portfolio", "q_embed_near_dup_lsh"):
         assert name in qs and name in oracles
-    # round-7 rotation: the driver verifies the FIRST 50 entries; the 13
+    # round-7 rotation: the driver verifies the FIRST 50 entries; the 12
     # queries with no driver row since r2-r5 are back in the window, the
     # round-7-touched LSH persist gate stays in, and the rotated-out
     # r5+r6 / r3+r6 multi-green entries stay present (full-set local gate
@@ -34,7 +34,7 @@ def test_queries_oracles_consistent():
         "q_ann_lsh", "q_ann_ivf", "q_ann_topk", "q_embed_near_dup",
         "q_events_hourly", "q_sessionize", "q_pricing_summary",
         "q_top_customers", "q_cell_density", "q_tile_assignment",
-        "q_knn_gauges_cells", "q_ngram_jaccard_capped",
+        "q_ngram_jaccard_capped",
     ):
         assert name in in_window
     for name in ("q_page_text", "q_geojson"):

@@ -761,16 +761,12 @@ def _brute_knn(points, cands, k):
 
 
 def test_knn_join_paths_agree_and_match_bruteforce(spark):
-    """Broadcast baseline and expanding-ring grid path must produce the
-    IDENTICAL kNN result, matching a pure-python brute force — including
-    high-latitude points (longitude shrink) and a sparse region that forces
-    ring escalation past r=1."""
+    """The broadcast kNN join must equal a pure-python brute force, row for
+    row — including high-latitude points (longitude shrink) and a lone
+    point whose nearest candidates are thousands of km away."""
     import random as rnd
 
-    from azure_workflow_for_kml_satellite_spark.operators.knn import (
-        knn_join_broadcast,
-        knn_join_cells,
-    )
+    from azure_workflow_for_kml_satellite_spark.operators.knn import knn_join_broadcast
 
     rng = rnd.Random(13)
     # clustered candidates + a sparse far region + polar candidates
@@ -778,89 +774,58 @@ def test_knn_join_paths_agree_and_match_bruteforce(spark):
     cands += [(f"p{i}", rng.uniform(-180, 180), rng.uniform(80, 85)) for i in range(5)]
     cands += [("lone", 120.0, -45.0)]
     points = [(i, rng.uniform(-12, 12), rng.uniform(-12, 12)) for i in range(30)]
-    points += [(100, 118.0, -44.0)]        # nearest set needs escalation
+    points += [(100, 118.0, -44.0)]        # nearest set is far away
     points += [(101, 10.0, 83.0)]          # high latitude
     pdf = spark.createDataFrame(points, "pid long, centroid_lon double, centroid_lat double")
     cdf = spark.createDataFrame(cands, "station_id string, longitude double, latitude double")
-    kwargs = dict(point_keys=("pid",))
-    exact = sorted(map(tuple, knn_join_broadcast(pdf, cdf, k=3, **kwargs).collect()))
-    grid = sorted(map(tuple, knn_join_cells(pdf, cdf, k=3, res=7, **kwargs).collect()))
-    assert exact == grid
+    exact = sorted(map(tuple, knn_join_broadcast(pdf, cdf, k=3, point_keys=("pid",)).collect()))
     assert exact == _brute_knn(points, cands, 3)
 
 
 def test_knn_join_cells_fallback_when_fewer_than_k(spark):
-    from azure_workflow_for_kml_satellite_spark.operators.knn import (
-        knn_join_broadcast,
-        knn_join_cells,
-    )
+    """Fewer candidates than k: every point gets all of them, ranked, as
+    the brute force does."""
+    from azure_workflow_for_kml_satellite_spark.operators.knn import knn_join_broadcast
 
-    pdf = spark.createDataFrame(
-        [(0, 0.0, 0.0), (1, 90.0, 40.0)], "pid long, centroid_lon double, centroid_lat double"
-    )
-    cdf = spark.createDataFrame(
-        [("a", 1.0, 1.0), ("b", -179.0, -80.0)],
-        "station_id string, longitude double, latitude double",
-    )
-    kwargs = dict(point_keys=("pid",))
-    exact = sorted(map(tuple, knn_join_broadcast(pdf, cdf, k=5, **kwargs).collect()))
-    grid = sorted(map(tuple, knn_join_cells(pdf, cdf, k=5, res=6, max_ring=4, **kwargs).collect()))
-    # only 2 candidates exist → both paths return 2 rows per point, equal
-    assert len(exact) == 4 and exact == grid
+    points = [(0, 0.0, 0.0), (1, 90.0, 40.0)]
+    cands = [("a", 1.0, 1.0), ("b", -179.0, -80.0)]
+    pdf = spark.createDataFrame(points, "pid long, centroid_lon double, centroid_lat double")
+    cdf = spark.createDataFrame(cands, "station_id string, longitude double, latitude double")
+    exact = sorted(map(tuple, knn_join_broadcast(pdf, cdf, k=5, point_keys=("pid",)).collect()))
+    # only 2 candidates exist → 2 rows per point, equal to the brute force
+    assert len(exact) == 4 and exact == _brute_knn(points, cands, 5)
 
 
 def test_knn_join_cells_antimeridian_wrap(spark):
     """A point at lon +179.9 whose true nearest candidate sits at −179.9
-    (0.2° away across the antimeridian, but ~maximally far in raw cell
-    coordinates): the wrapped ring probes MUST find it, and both paths must
-    agree — this is exactly the configuration an unwrapped grid with a
-    coordinate-Δλ escape bound would get wrong."""
-    from azure_workflow_for_kml_satellite_spark.operators.knn import (
-        knn_join_broadcast,
-        knn_join_cells,
-    )
+    (0.2° away across the antimeridian, but 359.8° apart in raw longitude):
+    the broadcast join must rank it first and equal the brute force."""
+    from azure_workflow_for_kml_satellite_spark.operators.knn import knn_join_broadcast
 
-    pdf = spark.createDataFrame(
-        [(0, 179.9, 10.0)], "pid long, centroid_lon double, centroid_lat double"
-    )
-    cdf = spark.createDataFrame(
-        [("near_wrap", -179.9, 10.0), ("mid", 170.0, 10.0), ("far", 100.0, 10.0)],
-        "station_id string, longitude double, latitude double",
-    )
-    kwargs = dict(point_keys=("pid",))
-    exact = sorted(map(tuple, knn_join_broadcast(pdf, cdf, k=2, **kwargs).collect()))
-    grid = sorted(map(tuple, knn_join_cells(pdf, cdf, k=2, res=7, **kwargs).collect()))
-    assert exact == grid
+    points = [(0, 179.9, 10.0)]
+    cands = [("near_wrap", -179.9, 10.0), ("mid", 170.0, 10.0), ("far", 100.0, 10.0)]
+    pdf = spark.createDataFrame(points, "pid long, centroid_lon double, centroid_lat double")
+    cdf = spark.createDataFrame(cands, "station_id string, longitude double, latitude double")
+    exact = sorted(map(tuple, knn_join_broadcast(pdf, cdf, k=2, point_keys=("pid",)).collect()))
+    assert exact == _brute_knn(points, cands, 2)
     # the wrap candidate is rank 1 (≈22 km), 'mid' is rank 2 (≈1089 km)
     by_rank = {r[3]: r[1] for r in exact}
     assert by_rank == {1: "near_wrap", 2: "mid"}
 
 
 def test_knn_join_cells_near_pole_no_false_settle(spark):
-    """When |plat| + (r+1)·size reaches the pole, NO positive longitude
-    escape bound exists: a candidate in a wrapped-x cell far outside the
-    ring ('overpole', 180° away in longitude) sits a mere ~22 m across the
-    pole — closer than the in-ring candidate at ~100 m.  A clamped
-    phi_max bound (~0.109 km at res=6) would settle on the in-ring
-    candidate at r=1 and return the wrong top-1; the sound bound (0 in the
-    pole-touching regime) must keep expanding until the ring wraps and
-    find 'overpole'."""
-    from azure_workflow_for_kml_satellite_spark.operators.knn import (
-        knn_join_broadcast,
-        knn_join_cells,
-    )
+    """Near the pole a candidate 180° away in longitude ('overpole') sits a
+    mere ~22 m across the pole — closer than the candidate at the same
+    longitude (~100 m): the broadcast join must return 'overpole' as the
+    top-1 and equal the brute force."""
+    from azure_workflow_for_kml_satellite_spark.operators.knn import knn_join_broadcast
 
-    pdf = spark.createDataFrame(
-        [(0, 0.0, 89.9999)], "pid long, centroid_lon double, centroid_lat double"
-    )
-    cdf = spark.createDataFrame(
-        [("inring", 0.0, 89.999), ("overpole", 180.0, 89.9999)],
-        "station_id string, longitude double, latitude double",
-    )
-    kwargs = dict(point_keys=("pid",))
-    exact = sorted(map(tuple, knn_join_broadcast(pdf, cdf, k=1, **kwargs).collect()))
-    grid = sorted(map(tuple, knn_join_cells(pdf, cdf, k=1, res=6, **kwargs).collect()))
-    assert exact == grid
+    points = [(0, 0.0, 89.9999)]
+    cands = [("inring", 0.0, 89.999), ("overpole", 180.0, 89.9999)]
+    pdf = spark.createDataFrame(points, "pid long, centroid_lon double, centroid_lat double")
+    cdf = spark.createDataFrame(cands, "station_id string, longitude double, latitude double")
+    exact = sorted(map(tuple, knn_join_broadcast(pdf, cdf, k=1, point_keys=("pid",)).collect()))
+    assert exact == _brute_knn(points, cands, 1)
     assert exact[0][1] == "overpole" and exact[0][2] < 0.1
 
 

@@ -1,5 +1,6 @@
 """spark-submit entry point (scripts/submit_job.py): archive building,
-full-mode run with checkpointing, and resume short-circuit."""
+full-mode run with checkpointing, resume short-circuit, and the eudr and
+timelapse modes."""
 
 import json
 import sys
@@ -45,6 +46,20 @@ def test_submit_full_mode_checkpoints_and_resumes(spark, tmp_path):
     # checkpointed stage directories exist on disk
     assert (tmp_path / "t1" / "ndvi").exists()
     assert (tmp_path / "t1" / "_ledger").exists()
+
+
+def test_submit_eudr_and_timelapse_modes(spark):
+    """The two other modes, without a checkpoint root: every output has
+    rows, eudr gives one verdict per AOI, and timelapse turns the one
+    pasted coordinate into one AOI with one trend row."""
+    from submit_job import parse_args, run_job
+
+    eudr = run_job(spark, parse_args(["--sf-dir", SF_SMALL, "--mode", "eudr"]))["counts"]
+    assert all(n > 0 for n in eudr.values()), eudr
+    assert eudr["determination"] == eudr["aois"]
+    tl = run_job(spark, parse_args(["--sf-dir", SF_SMALL, "--mode", "timelapse"]))["counts"]
+    assert all(n > 0 for n in tl.values()), tl
+    assert tl["aois"] == 1 and tl["trend"] == 1
 
 
 def test_submit_session_master_fallback():
