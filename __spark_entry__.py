@@ -1169,8 +1169,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rotate back INTO the window. Out: the r5+r6 consecutive-green
         # decode/text entries plus the r3+r6 export queries — all stay
         # covered every round by the full-set local gate (make gate) and
-        # pytest goldens. q_embed_near_dup_lsh stays in (round-7 persist
-        # change around the skew probe). —
+        # pytest goldens. q_embed_near_dup_lsh stays in. —
         "q_embed_near_dup_lsh": _q_embed_near_dup_lsh,
         "q_ann_lsh": _q_ann_lsh,
         "q_ann_ivf": _q_ann_ivf,
@@ -1795,8 +1794,12 @@ def oracle_sql() -> dict[str, str]:
                round(1.0 - count(DISTINCT text) * 1.0 / count(*), 4) AS dup_rate
         FROM documents GROUP BY source
     """
-    sql["q_embed_near_dup"] = """
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+    # a null or all-zero embedding has no direction and scores no cosine
+    # (similarity._vectors drops it)
+    has_dir = "list_bool_or(list_transform(embedding, x -> x <> 0))"
+    sql["q_embed_near_dup"] = f"""
+        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
+                   WHERE {has_dir}),
         p AS (
           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                  list_dot_product(a.emb, b.emb)
@@ -1812,8 +1815,9 @@ def oracle_sql() -> dict[str, str]:
     ids = ", ".join(str(i) for i in _ANN_QUERY_IDS)
     sql["q_ann_topk"] = f"""
         WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
-                   FROM embeddings WHERE vec_id IN ({ids})),
-        c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS ce FROM embeddings),
+                   FROM embeddings WHERE vec_id IN ({ids}) AND {has_dir}),
+        c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS ce FROM embeddings
+              WHERE {has_dir}),
         s AS (
           SELECT q.query_id, c.neighbor_id,
                  list_dot_product(qe, ce)

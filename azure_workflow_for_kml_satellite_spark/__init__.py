@@ -14,8 +14,9 @@ Design notes (Spark-first, not a port):
   Arrow-batched pandas UDFs for geometry parsing and raster kernels.
 - The spatial join is an equi-join on discretized grid cells followed by an
   exact bbox/point-in-polygon refinement predicate (SURVEY.md J1).
-- Skewed (hot) cells are handled with explicit deterministic salting plus
-  AQE skew-join (see ``plans/skew.py``).
+- Skewed (hot) cells are handled with explicit deterministic salting on the
+  spatial join's shuffle path (``spatial_join.AUTO_SALT``); every other hot
+  join key, such as an LSH band bucket, is split by AQE's skew join.
 - Every stage can checkpoint per-partition lineage + metrics and resume
   (see ``plans/checkpoint.py``).
 """

@@ -4,12 +4,13 @@ top-k baseline + LSH-bucketed scale path).
 Every operator is "candidates → one shared tail":
 
 - input step: ``_vectors`` selects ``vec_id`` and the embedding as
-  ``array<double>`` and drops null embeddings (a null scores no cosine);
+  ``array<double>`` and drops null and all-zero embeddings (neither has a
+  direction, so neither scores a cosine);
 - candidates: the cross join (exact ``brute_force_topk`` and
   ``embedding_near_dup_pairs``, the references the others are checked
   against), the IVF probe join, or the random-hyperplane bucket joins
-  (deterministic hyperplanes from xxhash of (dim, plane), with the skew
-  guard on the near-dup self-join);
+  (deterministic hyperplanes from xxhash of (dim, plane); a hot bucket in
+  the near-dup self-join is split by AQE's skew join);
 - tail: ``_topk`` (exact cosine as the vectorized Arrow UDF
   ``_cosine_vec``, window rank) or ``_at_least`` (exact cosine ≥ τ).
 
@@ -68,9 +69,9 @@ def _vectors(
     embeddings: DataFrame, id_as: str = "vec_id", emb_as: str = "embedding"
 ) -> DataFrame:
     """The one input step: (vec_id, embedding cast to array<double>),
-    renamed to (``id_as``, ``emb_as``), of the rows that have an embedding
-    — a null row can score no cosine."""
-    return embeddings.filter(F.col("embedding").isNotNull()).select(
+    renamed to (``id_as``, ``emb_as``), of the rows whose embedding has a
+    direction — a null or all-zero vector can score no cosine."""
+    return embeddings.filter(F.exists("embedding", lambda x: x != 0)).select(
         F.col("vec_id").alias(id_as), F.col("embedding").cast("array<double>").alias(emb_as)
     )
 
@@ -252,64 +253,11 @@ def lsh_band_shape(
     return r, min(max_bands, b)
 
 
-def lsh_bucket_skew(
-    bucketed: DataFrame,
-    skew_factor: float = 8.0,
-    min_hot_bucket: int = 256,
-) -> dict:
-    """Band-bucket skew probe for the LSH guard: one map-combinable
-    groupBy-count plus a 2-scalar aggregate (bounded control-plane
-    collect). Returns {max, mean, hot_threshold, salted} where ``salted``
-    says whether the bucket self-join must route through plans/skew.py.
-
-    A healthy embedding distribution keeps the largest bucket a few
-    percent of all entries (measured 3.2 % at sf0.1, BASELINE.md); a
-    mode-collapsed embedder (many near-identical vectors) concentrates one
-    band bucket and would turn the bucket equi-join into a single
-    straggler partition at 100 TB. The threshold is relative to the mean
-    bucket (``skew_factor`` × mean) with an absolute floor so tiny tables
-    never trip it."""
-    row = (
-        bucketed.groupBy("bucket")
-        .count()
-        .agg(F.max("count").alias("mx"), F.avg("count").alias("mean"))
-        .first()
-    )
-    mx = int(row["mx"] or 0)
-    mean = float(row["mean"] or 0.0)
-    hot = max(min_hot_bucket, int(skew_factor * mean))
-    return {"max": mx, "mean": mean, "hot_threshold": hot, "salted": mx > hot}
-
-
-# At most one persisted bucketed frame PER SparkSession (keyed by
-# applicationId): a new call only unpersists its own session's previous
-# frame, so concurrent sessions cannot silently force each other's
-# still-lazy results to recompute (ADVICE r7). Single-threaded use within
-# one session is still assumed.
-_LSH_CACHE: dict[str, object] = {}
-
-
-def release_lsh_cache(app_id: str | None = None) -> None:
-    """Unpersist the bucketed frame cached by the last
-    embedding_near_dup_lsh call (non-blocking; no-op if none). With
-    ``app_id`` only that session's entry is released."""
-    keys = [app_id] if app_id is not None else list(_LSH_CACHE)
-    for k in keys:
-        df = _LSH_CACHE.pop(k, None)
-        if df is not None:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:  # session already stopped — nothing to free
-                pass
-
-
 def embedding_near_dup_lsh(
     embeddings: DataFrame,
     threshold: float = 0.95,
     target_recall: float = 0.99999,
     shape: tuple[int, int] | None = None,
-    skew_factor: float = 8.0,
-    min_hot_bucket: int = 256,
 ) -> DataFrame:
     """Scale path for embedding near-dup pairs: banded random-hyperplane
     buckets → candidate pairs → EXACT cosine verify.
@@ -321,24 +269,11 @@ def embedding_near_dup_lsh(
     and higher for pairs above it. Output schema matches
     embedding_near_dup_pairs.
 
-    Skew guard (automated round 6): the band-bucket histogram is measured
-    on every run (lsh_bucket_skew); when one bucket exceeds
-    ``skew_factor`` × the mean (floor ``min_hot_bucket``) — the
-    mode-collapsed-embedder shape — the self-join routes through
-    plans/skew.salted_equi_join, which spreads the hot bucket across salt
-    sub-keys while meeting every intra-bucket pair exactly once, so the
-    result set is IDENTICAL to the unsalted join (pytest-pinned against
-    the exact all-pairs baseline). lsh_topk needs no such guard: its
-    query side is broadcast, so no bucket key ever shuffles.
-
-    NOTE: calling this function triggers a Spark job eagerly (the skew
-    probe is an action at DataFrame-construction time). The bucketed
-    frame is persisted so the embeddings scan + band-bucket explode run
-    once, shared by the probe and the join. PySpark has no "first action
-    over the returned lazy frame has run" hook, so the cache is released
-    on the NEXT call to this function (bounded: at most one bucketed
-    frame stays cached, MEMORY_AND_DISK so eviction is safe) or
-    explicitly via release_lsh_cache()."""
+    A hot band bucket (a mode-collapsed embedder: many near-identical
+    vectors) needs no salting here: the self-join is a plain shuffle join
+    on ``bucket``, and AQE's skew join (on in ``get_spark``) splits the hot
+    bucket's shuffle partition on both sides. Both sides of that join read
+    one bucketed frame, which Spark computes once (exchange reuse)."""
     rows, bands = shape if shape is not None else lsh_band_shape(threshold, target_recall)
     planes = rows * bands
     vecs = _vectors(embeddings)
@@ -346,27 +281,12 @@ def embedding_near_dup_lsh(
     emb = vecs.withColumn(
         "bucket", F.explode(_rh_band_buckets_vec(F.col("embedding"), planes, bands, weights))
     )
-    app_id = embeddings.sparkSession.sparkContext.applicationId
-    release_lsh_cache(app_id)
-    emb = emb.persist()
-    _LSH_CACHE[app_id] = emb
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"), "bucket")
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"), "bucket")
-    skew = lsh_bucket_skew(emb, skew_factor, min_hot_bucket)
-    if skew["salted"]:
-        from azure_workflow_for_kml_satellite_spark.plans.skew import salted_equi_join
-
-        joined = salted_equi_join(
-            a,
-            b,
-            identity_cols=["id_a"],
-            cell_col="bucket",
-            hot_threshold=skew["hot_threshold"],
-        )
-    else:
-        joined = a.join(b, "bucket")
     return _at_least(
-        joined.filter(F.col("id_a") < F.col("id_b")).dropDuplicates(["id_a", "id_b"]),
+        a.join(b, "bucket")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"]),
         threshold,
     )
 
@@ -390,7 +310,8 @@ def train_ivf_centroids(
     dominate the whole query. ``sample_fraction`` overrides the derived
     fraction explicitly; below the cap the corpus trains unsampled (the
     small-sf determinism/recall contract is unchanged). The sampled training
-    set is cached across the Lloyd iterations and unpersisted after."""
+    set is cached across the Lloyd iterations and unpersisted after. A table
+    with no embedding trains no centroid (``[]``) and runs no Lloyd pass."""
     import numpy as np
 
     emb = _vectors(embeddings, emb_as="emb")
@@ -412,6 +333,8 @@ def train_ivf_centroids(
             .select("emb")
             .collect()
         )
+        if not init:
+            return []
         centroids = np.array([r.emb for r in init], dtype=np.float64)
 
         for _ in range(iters):

@@ -1,1 +1,1 @@
-"""Execution-plan utilities: checkpoint/lineage ledger, skew salting."""
+"""Execution-plan utilities: checkpoint/lineage ledger, plan contracts."""

@@ -6,8 +6,8 @@ Measures, on the driver's embeddings table:
   recall) at fixed n_centroids;
 - LSH recall@k vs signature width (band shape = 3 bands of planes/3 bits);
 - LSH bucket-size distribution for the pruned default (planes=12) — the
-  skew evidence: if a bucket held an outsized share of rows, the bucket
-  equi-join would need plans/skew.py salting.
+  skew evidence: a bucket with an outsized share of rows becomes one hot
+  shuffle partition of the bucket equi-join, which AQE's skew join splits.
 
     PYTHONPATH=/root/repo python scripts/ann_curves.py [--sf-dir DIR]
 

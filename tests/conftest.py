@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import sys
 from pathlib import Path
 
@@ -26,3 +27,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL
+
+
+@contextlib.contextmanager
+def spark_confs(spark, confs):
+    """Set session confs for the block; restore every one after it (the
+    ``spark`` fixture is shared)."""
+    before = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def final_plan(df) -> str:
+    """The physical plan of ``df``'s last run, as AQE finalised it; call it
+    after an action on ``df`` itself."""
+    return df._jdf.queryExecution().executedPlan().toString()

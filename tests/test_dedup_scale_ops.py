@@ -527,19 +527,18 @@ def test_ann_pruned_operating_points_recall_floors(spark):
 
 
 def test_lsh_skew_guard_fires_on_mode_collapse_and_stays_exact(spark):
-    """Round-6 automation of the BASELINE.md manual rule: a mode-collapsed
-    embedder (many near-identical vectors) concentrates one band bucket;
-    the in-operator histogram must detect it, route the self-join through
-    plans/skew.py salting, and return EXACTLY the unsalted/exact result."""
+    """A mode-collapsed embedder (many near-identical vectors) concentrates
+    one band bucket. With broadcast off, AQE's skew join must split the hot
+    bucket of the LSH self-join, and the operator must return EXACTLY the
+    exact all-pairs result."""
     import numpy as np
 
     from azure_workflow_for_kml_satellite_spark.operators.similarity import (
         embedding_near_dup_lsh,
         embedding_near_dup_pairs,
-        lsh_band_shape,
-        lsh_bucket_skew,
     )
-    from pyspark.sql import functions as F
+
+    from tests.conftest import final_plan, spark_confs
 
     rng = np.random.default_rng(11)
     base = rng.normal(size=8)
@@ -550,34 +549,23 @@ def test_lsh_skew_guard_fires_on_mode_collapse_and_stays_exact(spark):
     emb = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
     )
-    # the probe sees the collapse
-    rows, bands = lsh_band_shape(0.9)
-    bucketed = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn(
-        "bucket", F.explode(_rh_band_buckets("emb", rows * bands, bands))
-    )
-    skew = lsh_bucket_skew(bucketed, min_hot_bucket=100)
-    assert skew["salted"] and skew["max"] >= 300
-    # a healthy table must NOT trip the guard
-    ok = spark.createDataFrame(
-        [(i, rng.normal(size=8).tolist()) for i in range(200)],
-        "vec_id long, embedding array<double>",
-    ).select("vec_id", F.col("embedding").alias("emb")).withColumn(
-        "bucket", F.explode(_rh_band_buckets("emb", rows * bands, bands))
-    )
-    assert not lsh_bucket_skew(ok, min_hot_bucket=100)["salted"]
-    # salted route returns the identical pair set + cosines
     exact = {
         (r["id_a"], r["id_b"], r["cosine"])
         for r in embedding_near_dup_pairs(emb, threshold=0.9).collect()
     }
-    got = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_dup_lsh(
-            emb, threshold=0.9, min_hot_bucket=100
-        ).collect()
+    # at 8 shuffle partitions each holds one of the 15 hot band buckets, so
+    # no partition stands out; 16 leave room for AQE to see the skew
+    confs = {
+        "spark.sql.shuffle.partitions": "16",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
     }
+    with spark_confs(spark, confs):
+        lsh = embedding_near_dup_lsh(emb, threshold=0.9)
+        got = {(r["id_a"], r["id_b"], r["cosine"]) for r in lsh.collect()}
+    assert "SortMergeJoin(skew=true)" in final_plan(lsh)
     assert len(exact) > 300  # the collapsed mode really is near-dup-dense
     assert got == exact
 
@@ -686,25 +674,39 @@ def test_vectorized_lsh_bits_match_jvm_expressions(spark):
     assert all(len(r.bkt_jvm) == bands for r in got)
 
 
-def test_lsh_operators_on_a_table_without_embeddings(spark):
+def test_lsh_operators_on_a_table_without_embeddings(spark, monkeypatch):
     """No row has an embedding (an empty table, or only nulls): both LSH
     operators, IVF and both exact baselines return no rows, the LSH ones
-    and IVF with their output columns and types. A null embedding beside
-    real ones is dropped: it scores no cosine, and the exact baselines and
-    IVF (every list probed) return the rows of their LSH counterparts."""
+    and IVF with their output columns and types, and IVF training runs no
+    Lloyd pass. A null or all-zero embedding beside real ones is dropped:
+    it scores no cosine, every operator returns the rows it gives without
+    it, and the exact baselines and IVF (every list probed) return the rows
+    of their LSH counterparts."""
+    from azure_workflow_for_kml_satellite_spark.operators import similarity
     from azure_workflow_for_kml_satellite_spark.operators.similarity import (
         brute_force_topk,
         embedding_near_dup_lsh,
         embedding_near_dup_pairs,
         ivf_topk,
         lsh_topk,
+        train_ivf_centroids,
     )
 
+    nearest_calls = []
+    nearest = similarity._nearest_centroids
+    monkeypatch.setattr(
+        similarity,
+        "_nearest_centroids",
+        lambda *a: nearest_calls.append(a) or nearest(*a),
+    )
     schema = "vec_id long, embedding array<double>"
     for emb in (
         spark.createDataFrame([], schema),
         spark.createDataFrame([(1, None), (2, None)], schema),
     ):
+        nearest_calls.clear()
+        assert train_ivf_centroids(emb, 2) == []
+        assert nearest_calls == []  # no assignment pass on no centroid
         pairs = embedding_near_dup_lsh(emb, threshold=0.9)
         assert pairs.dtypes == [("id_a", "bigint"), ("id_b", "bigint"), ("cosine", "double")]
         assert pairs.count() == 0
@@ -729,13 +731,18 @@ def test_lsh_operators_on_a_table_without_embeddings(spark):
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    mixed4 = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.01]), (4, [0.0, 1.0])], schema
-    )
+    mixed4_rows = [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.01]), (4, [0.0, 1.0])]
+    mixed4 = spark.createDataFrame(mixed4_rows, schema)
+    with_zero = spark.createDataFrame(mixed4_rows + [(5, [0.0, 0.0])], schema)
+    qids = [1, 2, 3, 4, 5]
     for tau in (0.0, 0.9):
         lsh_pairs = rows(embedding_near_dup_lsh(mixed4, threshold=tau))
         assert lsh_pairs and rows(embedding_near_dup_pairs(mixed4, threshold=tau)) == lsh_pairs
-    lsh = rows(lsh_topk(mixed4, [1, 2, 3, 4], k=2, coverage_band=True))
+        assert rows(embedding_near_dup_lsh(with_zero, threshold=tau)) == lsh_pairs
+        assert rows(embedding_near_dup_pairs(with_zero, threshold=tau)) == lsh_pairs
+    lsh = rows(lsh_topk(mixed4, qids, k=2, coverage_band=True))
     assert len(lsh) == 6
-    assert rows(brute_force_topk(mixed4, [1, 2, 3, 4], k=2)) == lsh
-    assert rows(ivf_topk(mixed4, [1, 2, 3, 4], k=2, n_centroids=2, n_probe=2)) == lsh
+    assert rows(lsh_topk(with_zero, qids, k=2, coverage_band=True)) == lsh
+    for emb in (mixed4, with_zero):
+        assert rows(brute_force_topk(emb, qids, k=2)) == lsh
+        assert rows(ivf_topk(emb, qids, k=2, n_centroids=2, n_probe=2)) == lsh

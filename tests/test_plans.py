@@ -1,7 +1,9 @@
-"""Checkpoint/lineage + skew-salting behavior."""
+"""Checkpoint/lineage + hot-key skew-join behavior."""
 
 import pytest
 from pyspark.sql import functions as F
+
+from tests.conftest import final_plan, spark_confs
 
 
 def test_checkpoint_stage_and_resume(spark, tmp_path):
@@ -92,37 +94,26 @@ def test_partitioned_stage_commit_grain_resume(spark, tmp_path):
 
 
 def test_salting_spreads_hot_cell(spark):
-    from azure_workflow_for_kml_satellite_spark.plans.skew import (
-        apply_salt_big,
-        apply_salt_small,
-        cell_histogram,
-        plan_salts,
-        salted_equi_join,
-    )
-
+    """A hot join key (2900 of 3000 rows in cell 7) with broadcast off: AQE's
+    skew join splits the hot shuffle partition, and the join loses and
+    duplicates no row."""
     big = spark.range(0, 3000).select(
         F.when(F.col("id") < 2900, F.lit(7)).otherwise(F.lit(8)).alias("cell"),
         F.col("id").alias("k"),
     )
     small = spark.createDataFrame([(7, "x"), (8, "y")], ["cell", "payload"])
-    hist = cell_histogram(big)
-    salts = plan_salts(hist, hot_threshold=500, max_salt=8)
-    smap = {r["cell"]: r["salt_k"] for r in salts.collect()}
-    assert smap == {7: 6}  # ceil(2900/500)=6; cell 8 is cold
-    b = apply_salt_big(big, salts, ["k"])
-    n_buckets = b.filter("cell = 7").select("salt").distinct().count()
-    assert n_buckets == 6
-    joined = salted_equi_join(big, small, ["k"], hot_threshold=500, max_salt=8)
-    assert joined.count() == 3000  # no rows lost or duplicated
-    assert joined.filter("cell = 8 and payload = 'y'").count() == 100
-
-
-def test_repartition_by_cell(spark):
-    from azure_workflow_for_kml_satellite_spark.plans.skew import repartition_by_cell
-
-    df = spark.range(100).withColumn("cell", F.pmod("id", F.lit(4)))
-    out = repartition_by_cell(df, "cell", partitions=4)
-    assert out.count() == 100
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+    }
+    with spark_confs(spark, confs):
+        joined = big.join(small, "cell")
+        rows = joined.collect()
+    assert len(rows) == 3000  # no rows lost or duplicated
+    assert sum(r["cell"] == 8 and r["payload"] == "y" for r in rows) == 100
+    assert "SortMergeJoin(skew=true)" in final_plan(joined)
 
 
 def test_mid_stage_kill_then_resume_completes(spark, tmp_path):
