@@ -64,7 +64,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         # Shuffle writer: with reduce-count ≤ bypassMergeThreshold (default
         # 200) Spark's bypass-merge writer opens one file PER REDUCE
         # PARTITION per map task; on this filesystem that file churn costs

@@ -13,7 +13,9 @@ enrichment/determination.py).
   equivalent on 2dp-rounded inputs).
 
 Every per-AOI Python step here (histograms, trend, Landsat NDVI, the loss
-and mean-delta flags) is a ``rows.map_rows`` row function.
+and mean-delta flags) is a ``rows.map_rows`` row function. The Landsat
+baseline picks its scenes with the engine's one scene picker
+(``spatial_join.scenes_in_windows`` + ``pick_best_scene``).
 """
 
 from __future__ import annotations
@@ -124,51 +126,32 @@ def landsat_baseline(aois: DataFrame, scenes: DataFrame) -> DataFrame:
     """Two fixed pre-Sentinel dry-season NDVI samples per AOI
     (reference: runner.py:174-206). One row per (aoi, window) that found a
     scene; candidates use the PLAIN aoi bbox (the reference passes flat_bbox,
-    not the buffered one) with cloud ≤ 30 (ndvi.py:283)."""
+    not the buffered one) with cloud ≤ 30 (ndvi.py:283), searched through a
+    two-row window table."""
     from azure_workflow_for_kml_satellite_spark.operators.ndvi import (
         NDVI_ROW_COLS,
         compute_ndvi_for_row,
     )
     from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
         _bbox_cell_join,
-        scene_bbox,
+        pick_best_scene,
+        scenes_in_windows,
     )
 
-    spark = aois.sparkSession
-    win = spark.createDataFrame(
-        [(i, s, e) for i, (s, e) in enumerate(LANDSAT_BASELINE_WINDOWS)],
-        ["window_id", "w_start", "w_end"],
+    win = aois.sparkSession.createDataFrame(
+        [(i, s, e, "landsat-c2-l2", 30.0) for i, (s, e) in enumerate(LANDSAT_BASELINE_WINDOWS)],
+        "window_id bigint, start string, end string, collection string, max_cloud double",
     )
-    cand_scenes = (
-        scenes.filter(
-            (F.col("collection") == "landsat-c2-l2") & (F.col("cloud_cover") <= 30.0)
-        )
-        .crossJoin(F.broadcast(win))
-        .filter(
-            (F.to_date("datetime") >= F.to_date("w_start"))
-            & (F.to_date("datetime") <= F.to_date("w_end"))
-        )
-    )
-    bbox = ("min_lon", "min_lat", "max_lon", "max_lat")
     pairs = _bbox_cell_join(
-        aois.select("url", "feature_index", *bbox),
-        bbox,
-        scene_bbox(cand_scenes, "window_id", "scene_id", "cloud_cover", "datetime", "resolution_m"),
+        aois.select("url", "feature_index", *_BBOX), tuple(_BBOX),
+        scenes_in_windows(scenes, win, "collection"),
     )
-    best = pairs.groupBy("url", "feature_index", "window_id").agg(
-        F.min_by(
-            F.struct(
-                "scene_id", "cloud_cover", "resolution_m",
-                "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat",
-            ),
-            F.struct("cloud_cover", "datetime", "scene_id"),
-        ).alias("best"),
-        F.first("min_lon").alias("min_lon"),
-        F.first("min_lat").alias("min_lat"),
-        F.first("max_lon").alias("max_lon"),
-        F.first("max_lat").alias("max_lat"),
-    ).select("url", "feature_index", "window_id", "min_lon", "min_lat", "max_lon", "max_lat", "best.*")
-
+    best = pick_best_scene(
+        pairs,
+        ["url", "feature_index", "window_id"],
+        ["scene_id", "cloud_cover", "resolution_m", *(f"s_{c}" for c in _BBOX)],
+        carry=_BBOX,
+    )
     return map_rows(
         best,
         best.columns,

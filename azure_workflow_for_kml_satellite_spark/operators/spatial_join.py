@@ -16,11 +16,12 @@ Spark-first design:
 - Duplicate (aoi, scene) pairs from multi-cell overlap are eliminated with the
   **reporter-cell trick** (emit only in the cell containing the intersection's
   min corner) instead of a ``distinct`` shuffle.
-- Top-1 scene per (geometry, frame) by cloud cover (reference: ndvi.py:63-67)
-  is ``min_by`` over a struct ordering key — partial-aggregating map-side,
-  cheaper than a window sort. Ties are broken by (datetime, scene_id): the
-  reference's STAC sort is unstable under ties, so the engine pins a
-  deterministic total order (SURVEY.md §7.4 risk 3).
+- One scene picker serves J1/J2, the display-mosaic ladder and the Landsat
+  baseline: ``scenes_in_windows`` (scenes × a broadcast window table, one
+  equi-join on the collection) then ``pick_best_scene``, a map-side
+  ``min_by`` over a struct key — least cloud first (reference:
+  ndvi.py:63-67), ties by (datetime, scene_id): the reference's STAC sort is
+  unstable under ties (SURVEY.md §7.4 risk 3).
 - The scene×frame dimension is built FIRST (small side), so the expensive
   join never multiplies by frames.
 
@@ -161,7 +162,62 @@ def _bbox_cell_join(
     return joined.filter(F.col("cell") == rep).drop(*keys)
 
 
-# ── scene × frame dimension ─────────────────────────────────────────────────
+# ── the scene picker: search scenes × time windows, then pick one ─────────
+
+
+def _frames_in(frames: DataFrame, date_start: str | None, date_end: str | None) -> DataFrame:
+    """Frames whose window overlaps the run's [date_start, date_end] (F1)."""
+    if date_start:
+        frames = frames.filter(F.col("end") >= F.lit(date_start))
+    if date_end:
+        frames = frames.filter(F.col("start") <= F.lit(date_end))
+    return frames
+
+
+def scenes_in_windows(scenes: DataFrame, windows: DataFrame, collection: str) -> DataFrame:
+    """The STAC search (reference: ndvi.py:44-91, runner.py:174-206,
+    228-294): every (scene, window) pair where the scene is in the window
+    column named by ``collection``, dated within its ``start``..``end`` days
+    inclusive and no cloudier than its ``max_cloud`` (null: no ceiling —
+    NAIP has no cloud cover). Scene columns come first, then the window's."""
+    # the scenes file is small but the downstream cell explode + broadcast
+    # build would otherwise run in its single scan task — parallelize it
+    scenes = scenes.repartition(scenes.sparkSession.sparkContext.defaultParallelism)
+    s = scene_bbox(
+        scenes, "scene_id", F.col("collection").alias("scene_collection"),
+        "datetime", "cloud_cover", "resolution_m",
+    )
+    return s.join(
+        F.broadcast(windows),
+        (F.col("scene_collection") == F.col(collection))
+        & (F.to_date("datetime") >= F.to_date("start"))
+        & (F.to_date("datetime") <= F.to_date("end"))
+        & (F.col("max_cloud").isNull() | (F.col("cloud_cover") <= F.col("max_cloud"))),
+        "inner",
+    )
+
+
+def pick_best_scene(
+    candidates: DataFrame,
+    keys: list[str],
+    fields: list[str],
+    carry: list[str] | tuple[str, ...] = (),
+    order: Column | None = None,
+) -> DataFrame:
+    """The top-1 scene per ``keys`` group: ``min_by`` over a struct of
+    ``fields``, ordered by ``order`` — by default (cloud_cover, datetime,
+    scene_id). ``carry`` columns ride along via ``first()``. Columns: keys,
+    carry, fields."""
+    if order is None:
+        order = F.struct("cloud_cover", "datetime", "scene_id")
+    return (
+        candidates.groupBy(*keys)
+        .agg(
+            F.min_by(F.struct(*fields), order).alias("best"),
+            *[F.first(c).alias(c) for c in carry],
+        )
+        .select(*keys, *carry, "best.*")
+    )
 
 
 def scene_frame_candidates(
@@ -170,45 +226,14 @@ def scene_frame_candidates(
     date_start: str | None = None,
     date_end: str | None = None,
 ) -> DataFrame:
-    """Scenes usable for NDVI per frame: collection match + datetime within
-    the frame window + cloud ceiling (reference: ndvi.py:44-91, 279-322;
-    F1/F3 filters). Small: a scene matches ≤1 frame per variant."""
-    f = frames
-    if date_start:
-        f = f.filter(F.col("end") >= F.lit(date_start))
-    if date_end:
-        f = f.filter(F.col("start") <= F.lit(date_end))
-    f = f.select(
-        "frame_id",
-        "naip_variant",
-        "year",
-        "season",
-        "start",
-        "end",
-        F.col("collection").alias("frame_collection"),
-        "is_naip",
-        "ndvi_collection",
-        "max_cloud",
+    """Scenes usable for NDVI per frame: ``scenes_in_windows`` on the
+    frame's ``ndvi_collection`` and ``max_cloud`` (reference: ndvi.py:44-91,
+    279-322; F1/F3 filters). Small: a scene matches ≤1 frame per variant."""
+    f = _frames_in(frames, date_start, date_end).select(
+        "frame_id", "naip_variant", "year", "season", "start", "end",
+        F.col("collection").alias("frame_collection"), "is_naip", "ndvi_collection", "max_cloud",
     )
-    # the scenes file is small but the downstream cell explode + broadcast
-    # build would otherwise run in its single scan task — parallelize it
-    scenes = scenes.repartition(scenes.sparkSession.sparkContext.defaultParallelism)
-    s = scene_bbox(
-        scenes,
-        "scene_id",
-        F.col("collection").alias("scene_collection"),
-        "datetime",
-        "cloud_cover",
-        "resolution_m",
-    )
-    return s.join(
-        F.broadcast(f),
-        (F.col("scene_collection") == F.col("ndvi_collection"))
-        & (F.to_date("datetime") >= F.to_date("start"))
-        & (F.to_date("datetime") <= F.to_date("end"))
-        & (F.col("cloud_cover") <= F.col("max_cloud")),
-        "inner",
-    )
+    return scenes_in_windows(scenes, f, "ndvi_collection")
 
 
 # ── the join ────────────────────────────────────────────────────────────────
@@ -279,42 +304,15 @@ def spatial_join_candidates(
 
 
 def best_scene_per_frame(candidates: DataFrame) -> DataFrame:
-    """Top-1 scene per (aoi, frame) by (cloud, datetime, scene_id) — J2/W3 as
-    a map-side-combining min_by aggregation."""
-    scene_struct = F.struct(
-        "scene_id",
-        "cloud_cover",
-        "datetime",
-        "resolution_m",
-        "s_min_lon",
-        "s_min_lat",
-        "s_max_lon",
-        "s_max_lat",
+    """Top-1 scene per (aoi, frame) by (cloud, datetime, scene_id) — J2/W3."""
+    return pick_best_scene(
+        candidates,
+        ["url", "feature_index", "frame_id", "naip_variant", "year", "season", "start", "end",
+         "frame_collection", "is_naip", "ndvi_collection"],
+        ["scene_id", "cloud_cover", "datetime", "resolution_m",
+         "s_min_lon", "s_min_lat", "s_max_lon", "s_max_lat"],
+        carry=[c for c in _AOI_CARRY if c not in ("url", "feature_index")],
     )
-    order_key = F.struct("cloud_cover", "datetime", "scene_id")
-    carry = [c for c in _AOI_CARRY if c not in ("url", "feature_index")]
-    agg = (
-        candidates.groupBy(
-            "url",
-            "feature_index",
-            "frame_id",
-            "naip_variant",
-            "year",
-            "season",
-            "start",
-            "end",
-            "frame_collection",
-            "is_naip",
-            "ndvi_collection",
-        )
-        .agg(
-            F.min_by(scene_struct, order_key).alias("best"),
-            *[F.first(c).alias(c) for c in carry],
-        )
-        .select("*", "best.*")
-        .drop("best")
-    )
-    return agg
 
 
 def spatial_join_best_scene(
@@ -370,21 +368,14 @@ def best_display_scene(
     Output: one row per suitable (aoi, frame) that found any scene:
     (url, feature_index, frame_id, naip_variant, display_collection,
     scene_id, fallback_used)."""
-    f = frames
-    if date_start:
-        f = f.filter(F.col("end") >= F.lit(date_start))
-    if date_end:
-        f = f.filter(F.col("start") <= F.lit(date_end))
-    f = f.select(
+    f = _frames_in(frames, date_start, date_end).select(
         "frame_id", "naip_variant", "year", "start", "end",
         F.col("collection").alias("frame_collection"), "is_naip",
     )
-    s = scene_bbox(
-        scenes, "scene_id", F.col("collection").alias("scene_collection"), "datetime", "cloud_cover"
-    )
     # ladder rungs: every frame in its own display collection, plus each
-    # NAIP frame again as its sentinel-2 fallback; one equi-join on the
-    # rung's collection finds both candidate sets
+    # NAIP frame again as its sentinel-2 fallback; one search on the rung's
+    # collection finds both candidate sets. NAIP has no cloud property, so
+    # its rungs have no ceiling.
     rungs = f.withColumns(
         {"display_collection": F.col("frame_collection"), "fallback_used": F.lit(False)}
     ).unionByName(
@@ -392,21 +383,16 @@ def best_display_scene(
             {"display_collection": F.lit("sentinel-2-l2a"), "fallback_used": F.lit(True)}
         )
     )
-    cand = s.join(
-        F.broadcast(rungs),
-        (F.col("scene_collection") == F.col("display_collection"))
-        & (F.to_date("datetime") >= F.to_date("start"))
-        & (F.to_date("datetime") <= F.to_date("end"))
-        & (
-            (F.col("display_collection") == "naip")  # NAIP: no cloud property
-            | (F.col("cloud_cover") <= DEFAULT_MAX_CLOUD_COVER_PCT)
-        ),
-        "inner",
+    rungs = rungs.withColumn(
+        "max_cloud",
+        F.when(F.col("display_collection") != "naip", F.lit(DEFAULT_MAX_CLOUD_COVER_PCT)),
     )
-
     joined = _bbox_cell_join(
         aois.select("url", "feature_index", "has_naip", "max_span_m", *_BUF_BBOX),
-        _BUF_BBOX, cand, res, also=F.col("naip_variant") == F.col("has_naip"),
+        _BUF_BBOX,
+        scenes_in_windows(scenes, rungs, "display_collection"),
+        res,
+        also=F.col("naip_variant") == F.col("has_naip"),
     )
     # F15 suitability gate (display only registered when suitable)
     gsd = display_gsd_m(F.col("frame_collection"), F.col("year"))
@@ -414,25 +400,18 @@ def best_display_scene(
 
     # ladder order: primary before fallback; NAIP newest-first, others
     # least-cloudy-first; deterministic tiebreaks
-    order_key = F.struct(
+    order = F.struct(
         F.col("fallback_used").cast("int").alias("prio"),
-        F.when(F.col("scene_collection") == "naip", -F.unix_timestamp("datetime"))
+        F.when(F.col("display_collection") == "naip", -F.unix_timestamp("datetime"))
         .otherwise(F.col("cloud_cover")).alias("rank"),
         F.col("datetime").alias("dt"),
         F.col("scene_id").alias("sid"),
     )
-    pick = F.struct("scene_id", "scene_collection", "fallback_used")
-    best = joined.groupBy("url", "feature_index", "frame_id", "naip_variant").agg(
-        F.min_by(pick, order_key).alias("best")
-    )
-    return best.select(
-        "url",
-        "feature_index",
-        "frame_id",
-        "naip_variant",
-        F.col("best.scene_collection").alias("display_collection"),
-        F.col("best.scene_id").alias("scene_id"),
-        F.col("best.fallback_used").alias("fallback_used"),
+    return pick_best_scene(
+        joined,
+        ["url", "feature_index", "frame_id", "naip_variant"],
+        ["display_collection", "scene_id", "fallback_used"],
+        order=order,
     )
 
 

@@ -176,25 +176,13 @@ def run_eudr(
         landsat_baseline,
         landsat_baseline_summary,
     )
-    from azure_workflow_for_kml_satellite_spark.operators.ndvi import ndvi_stats
     from azure_workflow_for_kml_satellite_spark.sources.frames import (
         EUDR_FRAME_DATE_START,
     )
 
     t = load_tables(spark, ed)
     aois = build_aois(spark, ed)
-    best = contracts.expect(
-        spatial_join_best_scene(
-            aois, t["scenes"], t["frames"], EUDR_FRAME_DATE_START, date_end
-        ),
-        "join→ndvi",
-        contracts.BEST_SCENES,
-    )
-    nd = contracts.expect(
-        ndvi_stats(_ndvi_repartition(spark, best)),
-        "ndvi→change",
-        contracts.NDVI,
-    )
+    nd = build_ndvi(spark, ed, EUDR_FRAME_DATE_START, date_end)
     ch = contracts.expect(
         season_changes(nd), "change→summary/determination", contracts.SEASON_CHANGES
     )
@@ -239,9 +227,8 @@ def build_ndvi(
     ed: str,
     date_start: str = RUN_DATE_START,
     date_end: str = RUN_DATE_END,
-    include_raster: bool = False,
 ) -> DataFrame:
-    key = _memo_key(spark, "ndvi", ed, date_start, date_end, include_raster)
+    key = _memo_key(spark, "ndvi", ed, date_start, date_end)
     if key in _MEMO:
         return _MEMO[key]
     t = load_tables(spark, ed)
@@ -255,7 +242,7 @@ def build_ndvi(
     )
     best = _ndvi_repartition(spark, best)
     nd = contracts.expect(
-        ndvi_stats(best, include_raster=include_raster), "ndvi→change/metrics", contracts.NDVI
+        ndvi_stats(best), "ndvi→change/metrics", contracts.NDVI
     ).cache()
     _MEMO[key] = nd
     return nd

@@ -58,7 +58,6 @@ NESTED_LOOP_OK = {
     "q_weather_summary": "AOI → region bbox against the small regions table",
     "q_ann_topk": "`!=` against the broadcast query set",
     "q_monthly_frames": "a date range against the broadcast month frames",
-    "q_landsat_baseline": "a date range against the 2-row broadcast window table",
     "q_knn_gauges": "no key: every AOI centroid is scored against the 100-row "
     "broadcast gauge table",
 }

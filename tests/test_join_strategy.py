@@ -169,11 +169,111 @@ def test_bbox_cell_join_matches_cross_join(spark):
 
 
 def test_display_scene_join_has_an_equi_key(spark):
-    """The display ladder joins scenes to its rungs on the collection: the
-    plan does not fall back to a nested-loop or cartesian join."""
+    """The display ladder and the Landsat baseline join scenes to their
+    windows on the collection: neither plan falls back to a nested-loop or
+    cartesian join."""
     import __spark_entry__ as E
 
-    df = E.queries()["q_display_scene"](spark, SF_SMALL)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan
+    for name in ("q_display_scene", "q_landsat_baseline"):
+        df = E.queries()[name](spark, SF_SMALL)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, name
+        assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan, name
+
+
+_SCENE_SCHEMA = (
+    "scene_id string, collection string, datetime timestamp, cloud_cover double, "
+    "resolution_m double, min_lon double, min_lat double, max_lon double, max_lat double"
+)
+
+
+def _scenes(spark, rows):
+    """Hand-built scenes, all on one bbox: (scene_id, collection, UTC
+    datetime string, cloud_cover)."""
+    from datetime import datetime
+
+    return spark.createDataFrame(
+        [
+            (sid, coll, datetime.fromisoformat(dt + "+00:00"), cloud, 10.0, 0.0, 0.0, 1.0, 1.0)
+            for sid, coll, dt, cloud in rows
+        ],
+        _SCENE_SCHEMA,
+    )
+
+
+def _windows(spark, rows):
+    """Hand-built windows: (window_id, start, end, wanted, max_cloud)."""
+    return spark.createDataFrame(
+        rows, "window_id int, start string, end string, wanted string, max_cloud double"
+    )
+
+
+def _found(spark, scenes, windows):
+    from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
+        scenes_in_windows,
+    )
+
+    return sorted(
+        tuple(r)
+        for r in scenes_in_windows(_scenes(spark, scenes), _windows(spark, windows), "wanted")
+        .select("window_id", "scene_id")
+        .collect()
+    )
+
+
+def test_scene_search_cloud_ceiling_is_inclusive_and_null_is_none(spark):
+    """A ceiling of 20.0 admits a 20.0 scene and rejects 20.001; a null
+    ceiling admits a NAIP scene whose cloud cover is null; a null cloud
+    cover never passes a set ceiling; the collection must match."""
+    scenes = [
+        ("at", "sentinel-2-l2a", "2022-06-10 12:00:00", 20.0),
+        ("over", "sentinel-2-l2a", "2022-06-10 12:00:00", 20.001),
+        ("naip", "naip", "2022-06-10 12:00:00", None),
+        ("naip_s2", "sentinel-2-l2a", "2022-06-10 12:00:00", None),
+    ]
+    windows = [
+        (0, "2022-06-01", "2022-06-30", "sentinel-2-l2a", 20.0),
+        (1, "2022-06-01", "2022-06-30", "naip", None),
+    ]
+    assert _found(spark, scenes, windows) == [(0, "at"), (1, "naip")]
+
+
+def test_scene_search_window_days_are_inclusive(spark):
+    """A scene at 23:59 on a window's last day (or 00:00 on its first) is
+    in; one on the next day, or the day before, is out."""
+    scenes = [
+        ("first", "landsat-c2-l2", "2014-06-01 00:00:00", 5.0),
+        ("eve", "landsat-c2-l2", "2014-05-31 23:59:59", 5.0),
+        ("last", "landsat-c2-l2", "2014-09-30 23:59:00", 5.0),
+        ("after", "landsat-c2-l2", "2014-10-01 00:00:00", 5.0),
+    ]
+    windows = [(0, "2014-06-01", "2014-09-30", "landsat-c2-l2", 30.0)]
+    assert _found(spark, scenes, windows) == [(0, "first"), (0, "last")]
+
+
+def test_pick_breaks_cloud_ties_by_datetime_then_scene_id(spark):
+    """Equal cloud cover: the earlier scene wins; equal cloud and datetime:
+    the smaller scene_id wins. ``carry`` columns ride along."""
+    from azure_workflow_for_kml_satellite_spark.operators.spatial_join import (
+        pick_best_scene,
+    )
+
+    scenes = _scenes(
+        spark,
+        [
+            # group a: cloud tie, datetime decides against scene_id order
+            ("a_1_late", "s", "2022-06-20 10:00:00", 3.0),
+            ("a_2_early", "s", "2022-06-10 10:00:00", 3.0),
+            ("a_0_cloudy", "s", "2022-06-01 10:00:00", 9.0),
+            # group b: cloud and datetime tie, scene_id decides
+            ("b_1", "s", "2022-06-10 10:00:00", 3.0),
+            ("b_3", "s", "2022-06-10 10:00:00", 3.0),
+            ("b_2", "s", "2022-06-10 10:00:00", 3.0),
+        ],
+    ).withColumn("g", F.substring("scene_id", 1, 1))
+    got = sorted(
+        tuple(r)
+        for r in pick_best_scene(scenes, ["g"], ["scene_id", "cloud_cover"], carry=["collection"])
+        .collect()
+    )
+    assert got == [("a", "s", "a_2_early", 3.0), ("b", "s", "b_1", 3.0)]
